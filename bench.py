@@ -143,6 +143,28 @@ def _argval(flag: str, default: str | None = None) -> str | None:
     return default
 
 
+def _prev_record(here: str, sf: float, cpus: int) -> tuple[str, dict] | None:
+    """(file name, bench line) of the most recent BENCH_r*.json run at
+    ``cpus`` cores and scale ``sf`` that carries a calib_sec, or None.
+    Records at another core count never serve as the baseline."""
+    import glob
+
+    for p in sorted(glob.glob(os.path.join(here, "BENCH_r*.json")), reverse=True):
+        try:
+            with open(p) as f:
+                rec = json.load(f)
+        except (OSError, ValueError):
+            continue
+        # round records wrap our JSON line under "parsed" and
+        # carry the core count beside it
+        prev = rec["parsed"] if isinstance(rec.get("parsed"), dict) else rec
+        if prev.get("cpus", rec.get("cpus")) != cpus:
+            continue
+        if prev.get("calib_sec") and prev.get("queries") and prev.get("sf") == sf:
+            return os.path.basename(p), prev
+    return None
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)/?$", sf_dir)
@@ -158,6 +180,7 @@ def main() -> None:
     only_names = only.split(",") if only else None
 
     spark = get_spark(app_name="talknet-segmentation-bench")
+    cpus = spark.sparkContext.defaultParallelism
     registry._ensure_loaded()
     headline = _headline()
     if only_names is not None:
@@ -285,20 +308,31 @@ def main() -> None:
             import scale_probe
 
             scale_probe.synthesize()  # no-op when /tmp/scale_sf1 exists
+        except Exception as exc:  # record loudly, never fail the record
+            sf1_block = {"error": f"{type(exc).__name__}: {exc}"[:300]}
+        else:
             top10 = [
                 n for n, _ in sorted(timings.items(), key=lambda kv: -kv[1])
             ][:10]
             sf1_times: dict[str, float] = {}
+            sf1_errors: dict[str, str] = {}
             for _ in range(2):
                 for name in top10:
+                    if name in sf1_errors:
+                        continue
                     spark.catalog.clearCache()
                     drop_session_tables()
                     registry.release_persisted()
-                    t0 = time.perf_counter()
-                    registry.REGISTRY[name].fn(
-                        spark, scale_probe.SF_BIG
-                    ).write.format("noop").mode("overwrite").save()
-                    el = time.perf_counter() - t0
+                    # per query, so one failure keeps the other timings
+                    try:
+                        t0 = time.perf_counter()
+                        registry.REGISTRY[name].fn(
+                            spark, scale_probe.SF_BIG
+                        ).write.format("noop").mode("overwrite").save()
+                        el = time.perf_counter() - t0
+                    except Exception as exc:
+                        sf1_errors[name] = f"{type(exc).__name__}: {exc}"[:300]
+                        continue
                     sf1_times[name] = round(
                         min(sf1_times.get(name, el), el), 3
                     )
@@ -309,54 +343,23 @@ def main() -> None:
                 "sf_dir": scale_probe.SF_BIG,
                 "n_passes": 2,
             }
-        except Exception as exc:  # record loudly, never fail the record
-            sf1_block = {"error": f"{type(exc).__name__}: {exc}"[:300]}
+            if sf1_errors:
+                sf1_block["errors"] = sf1_errors
 
     # Round-over-round, host-normalized (VERDICT r4 Next #6): per-round
     # VMs differ ~1.4x in raw speed, so compare (query_sec / calib_sec)
-    # ratios against the most recent BENCH_r*.json that carries a
-    # calib_sec. < 1.0 = faster this round like-for-like.
+    # ratios. < 1.0 = faster this round like-for-like.
     vs_prev = {}
     prev_meta = {}
     here = os.path.dirname(os.path.abspath(__file__))
-    import glob
-
-    for p in sorted(glob.glob(os.path.join(here, "BENCH_r*.json")), reverse=True):
-        try:
-            with open(p) as f:
-                prev = json.load(f)
-        except Exception:
-            continue
-        # driver-recorded files wrap our JSON line under "parsed"
-        if isinstance(prev.get("parsed"), dict):
-            prev = prev["parsed"]
-        # ... or under a front-TRUNCATED "tail" string (observed in
-        # BENCH_r05): recover calib_sec + whatever (query, sec) pairs
-        # survive so normalization keys off the newest round anyway
-        if not prev.get("queries") and isinstance(prev.get("tail"), str):
-            tail = prev["tail"]
-            mc = re.search(r'\\?"calib_sec\\?": ([0-9.]+)', tail)
-            msf = re.search(r'\\?"sf\\?": ([0-9.]+)', tail)
-            qpart = tail.split('"sf"')[0]
-            qs = {
-                m.group(1): float(m.group(2))
-                for m in re.finditer(
-                    r'\\?"([a-z][a-z0-9_]+)\\?": ([0-9.]+)', qpart
-                )
-            }
-            if mc and qs:
-                prev = {
-                    "calib_sec": float(mc.group(1)),
-                    "queries": qs,
-                    "sf": float(msf.group(1)) if msf else prev.get("sf"),
-                }
-        if prev.get("calib_sec") and prev.get("queries") and prev.get("sf") == sf:
-            prev_meta = {"file": os.path.basename(p), "calib_sec": prev["calib_sec"]}
-            for name, t in timings.items():
-                pt = prev["queries"].get(name)
-                if pt:
-                    vs_prev[name] = round((t / calib) / (pt / prev["calib_sec"]), 3)
-            break
+    found = _prev_record(here, sf, cpus)
+    if found:
+        fname, prev = found
+        prev_meta = {"file": fname, "calib_sec": prev["calib_sec"]}
+        for name, t in timings.items():
+            pt = prev["queries"].get(name)
+            if pt:
+                vs_prev[name] = round((t / calib) / (pt / prev["calib_sec"]), 3)
 
     total = round(sum(timings.values()), 3)
 
@@ -370,6 +373,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        "cpus": cpus,
         "calib_sec": round(calib, 3),
         "n_passes": n_passes,
         "pass_times": pass_times,
@@ -384,7 +388,7 @@ def main() -> None:
     # --only probe runs default to a separate file: they must never
     # silently replace the committed full-run round record
     default_detail = (
-        "BENCH_DETAIL.json" if only_names is None else "BENCH_DETAIL_probe.json"
+        f"BENCH_DETAIL_c{cpus}.json" if only_names is None else "BENCH_DETAIL_probe.json"
     )
     detail_path = _argval("--out") or os.path.join(here, default_detail)
     with open(detail_path, "w") as f:
@@ -402,10 +406,11 @@ def main() -> None:
         "unit": "sec",
         "sf": sf,
         "calib_sec": round(calib, 3),
+        "cpus": cpus,
         "n_queries": len(timings),
         "n_passes": n_passes,
         "median_sec": median,
-        "queries": worst5,  # worst-5 only; full dict in BENCH_DETAIL.json
+        "queries": worst5,  # worst-5 only; full dict in the detail file
         "detail_file": os.path.basename(detail_path),
     }
     if ratios:
@@ -415,6 +420,10 @@ def main() -> None:
         out["sf1_top10_total_sec"] = sf1_block.get("total_sec")
         if "error" in sf1_block:
             out["sf1_top10_error"] = sf1_block["error"]
+        elif "errors" in sf1_block:
+            out["sf1_top10_error"] = "; ".join(
+                f"{n}: {e}" for n, e in sf1_block["errors"].items()
+            )[:300]
     if excluded_over_bar:
         out["excluded_over_bar"] = excluded_over_bar
     print(json.dumps(out))

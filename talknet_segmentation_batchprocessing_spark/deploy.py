@@ -52,194 +52,3 @@ def ensure_worker_imports(spark_or_df) -> None:
     sc.addPyFile(_package_zip())
     _SHIPPED_CONTEXTS.add(key)
 
-
-# ---------------------------------------------------------------------------
-# protobuf runtime bootstrap (round 8): transformWithStateInPandas IPC
-# ---------------------------------------------------------------------------
-
-# Locations where a pure-python google.protobuf runtime is commonly
-# vendored on images that lack the pip package (the Cloud SDK ships one
-# with its imports rewritten to a private namespace).
-_PB_VENDOR_SOURCES = (
-    "/usr/lib/google-cloud-sdk/lib/third_party/cloudsdk/google",
-)
-_PB_SHIM_READY: bool | None = None
-
-
-def _prepare_pb_shim(src_google_dir: str) -> str | None:
-    """Copy a vendored pure-python protobuf runtime into a cache dir,
-    un-rewrite its private-namespace imports back to ``google.protobuf``,
-    and add a ``runtime_version`` shim so protobuf>=5.27-generated code
-    (pyspark's StateMessage_pb2 targets gencode 6.33.0) loads on it.
-    Returns the sys.path root, or None if the copy looks unusable.
-
-    The wire format is stable across these versions and the state-IPC
-    messages are plain proto3, so the older runtime serializes them
-    identically — proven end-to-end by tests/test_stateful_v2.py's
-    v1-parity and cross-micro-batch tests, which are exactly the
-    checks that would catch a wire mismatch.
-    """
-    import shutil
-    import tempfile
-
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_pbshim")
-    marker = os.path.join(root, ".ready")
-    tgt = os.path.join(root, "google")
-    if os.path.exists(marker):
-        return root
-    if not os.path.isfile(os.path.join(src_google_dir, "protobuf", "descriptor.py")):
-        return None
-    shutil.rmtree(tgt, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    shutil.copytree(
-        src_google_dir,
-        tgt,
-        ignore=shutil.ignore_patterns("__pycache__"),
-    )
-    for dirpath, _dirs, files in os.walk(tgt):
-        for f in files:
-            if not f.endswith(".py"):
-                continue
-            p = os.path.join(dirpath, f)
-            with open(p, encoding="utf-8") as fh:
-                body = fh.read()
-            fixed = body.replace(
-                "cloudsdk.google.protobuf", "google.protobuf"
-            ).replace(
-                "from cloudsdk.google import protobuf",
-                "from google import protobuf",
-            )
-            if fixed != body:
-                with open(p, "w", encoding="utf-8") as fh:
-                    fh.write(fixed)
-    with open(
-        os.path.join(tgt, "protobuf", "runtime_version.py"), "w", encoding="utf-8"
-    ) as fh:
-        fh.write(
-            '"""Shim: accept >=5.27 gencode on this pure-python runtime.\n'
-            "Version checks are waived; wire compatibility is covered by\n"
-            'the stateful-v2 end-to-end tests."""\n'
-            "from enum import Enum\n\n\n"
-            "class Domain(Enum):\n"
-            "    GOOGLE_INTERNAL = 1\n"
-            "    PUBLIC = 2\n\n\n"
-            "MAJOR, MINOR, PATCH, SUFFIX = 6, 33, 0, \"\"\n\n\n"
-            "class VersionError(Exception):\n"
-            "    pass\n\n\n"
-            "def ValidateProtobufRuntimeVersion(*args, **kwargs):\n"
-            "    return None\n"
-        )
-    with open(marker, "w") as fh:
-        fh.write(src_google_dir)
-    return root
-
-
-def _pb_shim_roots():
-    """Candidate sys.path roots holding a usable ``google/protobuf``
-    pure-python runtime, best first: the runtime vendored INTO this
-    repo (vendor/pbshim — already namespace-fixed and carrying the
-    runtime_version stub, so it needs no preparation and no /tmp
-    state), then a shim freshly prepared from an on-image Cloud SDK
-    copy."""
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    vendored = os.path.join(repo_root, "vendor", "pbshim")
-    if os.path.isfile(
-        os.path.join(vendored, "google", "protobuf", "descriptor.py")
-    ):
-        yield vendored
-    for src in _PB_VENDOR_SOURCES:
-        if not os.path.isdir(src):
-            continue
-        root = _prepare_pb_shim(src)
-        if root:
-            yield root
-
-
-def ensure_protobuf_runtime() -> bool:
-    """Make ``google.protobuf`` importable in this process AND in
-    Spark's python workers (via PYTHONPATH, so call this BEFORE the
-    JVM/SparkSession starts). Prefers an installed protobuf (pip
-    install protobuf==6.33.0 — the version pyspark's gencode targets);
-    falls back to the runtime vendored in this repo (vendor/pbshim),
-    then to shimming a Cloud SDK copy found on the image. Returns
-    False when none exists — callers skip-with-reason.
-    """
-    global _PB_SHIM_READY
-    if _PB_SHIM_READY is not None:
-        return _PB_SHIM_READY
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        _PB_SHIM_READY = True
-        return True
-    except ImportError:
-        pass
-    import sys
-
-    for root in _pb_shim_roots():
-        added_to_sys_path = root not in sys.path
-        if added_to_sys_path:
-            sys.path.insert(0, root)
-        prev_pp = os.environ.get("PYTHONPATH")
-        if root not in (prev_pp or "").split(os.pathsep):
-            os.environ["PYTHONPATH"] = (
-                root + (os.pathsep + prev_pp if prev_pp else "")
-            )
-        # Purge any cached non-working 'google' BEFORE the attempt,
-        # not just after a failure: the probe import above (or an
-        # earlier candidate) may have cached a regular non-namespace
-        # 'google' package — e.g. a legacy site-packages install
-        # without a usable protobuf runtime — whose pinned __path__
-        # would make THIS candidate's import re-resolve against the
-        # dead location and fail even though the candidate is fine.
-        # Scope the purge to the namespace anchor plus the protobuf
-        # runtime itself: unrelated, WORKING google.* namespace
-        # packages (google.auth, google.cloud, ...) stay cached —
-        # evicting them would leave in-flight objects holding the old
-        # module instances while fresh imports silently duplicate
-        # module-level registries/singletons. Popping bare 'google'
-        # is enough to unpin the stale __path__ (re-import resolves
-        # it fresh; surviving google.X children just get re-attached
-        # as attributes on next import).
-        for mod in _pb_modules_to_purge(sys.modules):
-            sys.modules.pop(mod, None)
-        try:
-            from google.protobuf import descriptor  # noqa: F401
-
-            _PB_SHIM_READY = True
-            return True
-        except ImportError:
-            # Undo everything this candidate touched before trying the
-            # next root — the next candidate must not inherit this
-            # root's sys.path entry, and Spark workers must not
-            # inherit the dead PYTHONPATH entry.
-            if added_to_sys_path:
-                try:
-                    sys.path.remove(root)
-                except ValueError:
-                    pass
-            if prev_pp is None:
-                os.environ.pop("PYTHONPATH", None)
-            else:
-                os.environ["PYTHONPATH"] = prev_pp
-            continue
-    # all candidates failed: leave no half-imported protobuf runtime
-    # cached for unrelated importers to trip over (same scoped purge —
-    # working google.* siblings are not ours to evict)
-    for mod in _pb_modules_to_purge(sys.modules):
-        sys.modules.pop(mod, None)
-    _PB_SHIM_READY = False
-    return False
-
-
-def _pb_modules_to_purge(modules) -> list[str]:
-    """The sys.modules keys ensure_protobuf_runtime may evict: the
-    'google' namespace anchor (whose cached __path__ can pin a dead
-    location) and the protobuf runtime trees — never unrelated
-    google.* namespace packages such as google.auth / google.cloud."""
-    return [
-        m
-        for m in modules
-        if m in ("google", "google.protobuf", "google._upb")
-        or m.startswith(("google.protobuf.", "google._upb."))
-    ]

@@ -4433,12 +4433,13 @@ hits AS (
 ),
 counts AS (SELECT np, count(*) AS n_candidates FROM pern GROUP BY np),
 nq AS (SELECT count(DISTINCT query_id) AS q FROM bf)
-SELECT CAST(c.np AS INTEGER) AS nprobe,
-       CAST(c.n_candidates AS BIGINT) AS n_candidates,
+SELECT CAST(x.np AS INTEGER) AS nprobe,
+       CAST(coalesce(c.n_candidates, 0) AS BIGINT) AS n_candidates,
        CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
        floor((coalesce(h.n_hits, 0) * 1.0 / (nq.q * 3)) * 1e6 + 0.5) / 1e6
          AS recall_at_3
-FROM counts c LEFT JOIN hits h ON h.np = c.np CROSS JOIN nq
+FROM axis x LEFT JOIN counts c ON c.np = x.np
+LEFT JOIN hits h ON h.np = x.np CROSS JOIN nq
 """
 
 

@@ -252,7 +252,7 @@ _GRAPH_PUBLISH_THRESHOLD = 1_000_000
 # always did. Checkpointing pins only a few hundred small partitions
 # per (session, sf_dir); benchmarks clear it per measurement via
 # release_graph_frames() exactly as they drop the catalog tables.
-_GRAPH_FRAMES: dict[str, DataFrame] = {}
+_GRAPH_FRAMES: dict[str, tuple[DataFrame, int]] = {}
 
 
 def release_graph_frames() -> None:
@@ -303,9 +303,11 @@ def _write_graph_table(
     from ..sources.bucketed import write_bucketed
 
     name = _graph_table_name(spark, base, sf_dir)
+    # the memo holds the frame's row count, so a hit answers only while
+    # the small-graph branch still applies at the current threshold
     cached = _GRAPH_FRAMES.get(name)
-    if cached is not None:
-        return cached
+    if cached is not None and cached[1] <= _GRAPH_PUBLISH_THRESHOLD:
+        return cached[0]
     if spark.catalog.tableExists(name):
         return spark.table(name)
     # ADAPTIVE publication (round-12), mirroring the CC operator's
@@ -321,7 +323,8 @@ def _write_graph_table(
     # as before. Results are unaffected either way (storage layout
     # only).
     df = build().localCheckpoint(eager=False)
-    if df.count() <= _GRAPH_PUBLISH_THRESHOLD:
+    n_edges = df.count()
+    if n_edges <= _GRAPH_PUBLISH_THRESHOLD:
         # broadcast hint: the checkpointed RDD carries no size stats,
         # so plan-time broadcast would never fire and every consumer
         # join would plan as SMJ until AQE converts it at runtime —
@@ -329,7 +332,7 @@ def _write_graph_table(
         # threshold is the point of this branch), so hint it and let
         # the wedge/iteration joins plan exchange-free up front.
         out = F.broadcast(df)
-        _GRAPH_FRAMES[name] = out
+        _GRAPH_FRAMES[name] = (out, n_edges)
         return out
     path = os.path.join(
         tempfile.gettempdir(), "spark_graft_graph_tables", name
@@ -2708,12 +2711,13 @@ hits AS (
 ),
 counts AS (SELECT np, count(*) AS n_candidates FROM pern GROUP BY np),
 nq AS (SELECT count(DISTINCT query_id) AS q FROM bf)
-SELECT CAST(c.np AS INTEGER) AS nprobe,
-       CAST(c.n_candidates AS BIGINT) AS n_candidates,
+SELECT CAST(x.np AS INTEGER) AS nprobe,
+       CAST(coalesce(c.n_candidates, 0) AS BIGINT) AS n_candidates,
        CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
        floor((coalesce(h.n_hits, 0) * 1.0 / (nq.q * 3)) * 1e6 + 0.5) / 1e6
          AS recall_at_3
-FROM counts c LEFT JOIN hits h ON h.np = c.np CROSS JOIN nq
+FROM axis x LEFT JOIN counts c ON c.np = x.np
+LEFT JOIN hits h ON h.np = x.np CROSS JOIN nq
 """
 
 
@@ -2800,19 +2804,7 @@ def sim_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     counts = pern.groupBy("nprobe").agg(F.count("*").alias("n_candidates"))
     nq = bf3.agg(F.countDistinct("query_id").alias("_q"))
-    nh = F.coalesce(F.col("_nh"), F.lit(0))
-    return (
-        counts.join(hits, "nprobe", "left")
-        .crossJoin(F.broadcast(nq))
-        .select(
-            "nprobe",
-            F.col("n_candidates").cast("bigint").alias("n_candidates"),
-            nh.cast("bigint").alias("n_hits"),
-            stable_round(nh * F.lit(1.0) / (F.col("_q") * 3), 6).alias(
-                "recall_at_3"
-            ),
-        )
-    )
+    return _sweep_assemble(counts, hits, nq)
 
 
 _EXT_REG["sim_nprobe_sweep"].oracle = _nprobe_sweep_oracle()
@@ -2822,23 +2814,30 @@ def _sweep_assemble(
     counts: DataFrame, hits: DataFrame, nq: DataFrame
 ) -> DataFrame:
     """The (nprobe, n_candidates, n_hits, recall_at_3) result assembly
-    shared by the persisted-index sweep family (sim_nprobe_sweep_disk /
-    sim_nprobe_sweep_pq_disk) — ``counts`` and ``hits`` are per-width
+    shared by the nprobe sweep family (sim_nprobe_sweep, _disk and
+    _pq_disk) — ``counts`` and ``hits`` are per-width
     aggregates keyed by ``nprobe`` (round-13: ONE aggregation each over
     the width-tagged candidate union, replacing the old
     one-row-per-width crossJoin stitch — 8 single-row aggregations +
     4 crossJoins collapsed into 2 grouped aggregations + 1 join). The
     recall denominator and rounding grid live HERE once: the two
     reports are documented as read side by side, so their column
-    contract must not be able to drift apart. Identical to the
-    in-session sweep's assembly, whose oracle both queries share."""
+    contract must not be able to drift apart. The spine is
+    ``_NPROBE_AXIS`` itself, as in the oracles: a width with no
+    candidates keeps its row, with n_candidates 0."""
+    axis = counts.sparkSession.createDataFrame(
+        [(x,) for x in _NPROBE_AXIS], "nprobe int"
+    )
     nh = F.coalesce(F.col("_nh"), F.lit(0))
     return (
-        counts.join(hits, "nprobe", "left")
+        axis.join(F.broadcast(counts), "nprobe", "left")
+        .join(F.broadcast(hits), "nprobe", "left")
         .crossJoin(F.broadcast(nq))
         .select(
-            F.col("nprobe").cast("int").alias("nprobe"),
-            F.col("n_candidates").cast("bigint").alias("n_candidates"),
+            "nprobe",
+            F.coalesce(F.col("n_candidates"), F.lit(0))
+            .cast("bigint")
+            .alias("n_candidates"),
             nh.cast("bigint").alias("n_hits"),
             stable_round(
                 nh * F.lit(1.0) / (F.col("_q") * 3), 6

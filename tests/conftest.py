@@ -4,16 +4,6 @@ import os
 
 import pytest
 
-# Must run at collection time, BEFORE any session fixture starts the
-# JVM: workers inherit PYTHONPATH from the driver environment, and the
-# transformWithStateInPandas e2e tests need google.protobuf on both
-# sides (installed, or the deploy-module shim over a vendored runtime).
-from talknet_segmentation_batchprocessing_spark.deploy import (  # noqa: E402
-    ensure_protobuf_runtime,
-)
-
-ensure_protobuf_runtime()
-
 TESTDATA = "/root/testdata"
 # SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 runs the parity suite at
 # the driver's correctness-gate scale instead of the fast smoke scale.

@@ -98,3 +98,23 @@ def test_resolve_only_rejects_excluded_and_unknown_names():
             bench._resolve_only(
                 ["w1_speaking_segments", some_excluded], headline
             )
+
+
+def test_vs_prev_baseline_matches_core_count(tmp_path):
+    """The normalization baseline is the newest record at the SAME core
+    count: the 8-core record sorts first but must not serve a 32-core
+    run."""
+    import json
+
+    bench = _bench()
+    line = {"calib_sec": 0.4, "queries": {"q": 1.0}, "sf": 0.1}
+    for name, cpus in (
+        ("BENCH_r12.json", 32),
+        ("BENCH_r13.json", 32),
+        ("BENCH_r13_c8.json", 8),
+    ):
+        (tmp_path / name).write_text(json.dumps({"cpus": cpus, "parsed": line}))
+    assert bench._prev_record(str(tmp_path), 0.1, 32)[0] == "BENCH_r13.json"
+    assert bench._prev_record(str(tmp_path), 0.1, 8)[0] == "BENCH_r13_c8.json"
+    assert bench._prev_record(str(tmp_path), 0.1, 4) is None
+    assert bench._prev_record(str(tmp_path), 1.0, 32) is None

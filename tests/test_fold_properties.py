@@ -71,29 +71,6 @@ def _run_funnel(chunks):
     return state._v, rows
 
 
-def _run_pattern(chunks):
-    from talknet_segmentation_batchprocessing_spark.streaming.pattern import (
-        _fold_batch,
-    )
-
-    state = _FakeState()
-    rows = []
-    for ch in chunks:
-        pdf = pd.DataFrame(
-            {
-                "us": [u for u, _ in ch],
-                "event_id": list(range(len(ch))),
-                "event_type": [t for _, t in ch],
-            }
-        )
-        rows += [
-            tuple(r)
-            for out in _fold_batch((1,), iter([pdf]), state)
-            for r in out.itertuples(index=False)
-        ]
-    return state._v, rows
-
-
 @settings(max_examples=200, deadline=None)
 @given(st.data())
 def test_funnel_fold_batching_invariant(data):
@@ -109,18 +86,6 @@ def test_funnel_fold_batching_invariant(data):
     # and emissions only ever advance the stage
     stages = [r[1] for r in chunked_rows]
     assert stages == sorted(stages)
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.data())
-def test_pattern_fold_batching_invariant(data):
-    events = data.draw(_events(min_size=1))
-    cuts = data.draw(_splits(len(events)))
-    one_state, one_rows = _run_pattern([events])
-    chunked_state, chunked_rows = _run_pattern(_chunk(events, cuts))
-    # completed matches are emitted exactly once regardless of chunking
-    assert chunked_rows == one_rows
-    assert chunked_state == one_state
 
 
 @settings(max_examples=150, deadline=None)
@@ -152,184 +117,6 @@ def test_union_find_labels_match_bruteforce(ne):
     for v in range(n):
         if v not in touched:
             assert want[v] == v
-
-
-def _run_attribution(chunks):
-    from talknet_segmentation_batchprocessing_spark.streaming.attribution import (
-        _fold_batch,
-    )
-
-    state = _FakeState()
-    rows = []
-    eid = 0
-    for ch in chunks:
-        n = len(ch)
-        pdf = pd.DataFrame(
-            {
-                "us": [u for u, _ in ch],
-                "event_id": list(range(eid, eid + n)),
-                "event_type": [t for _, t in ch],
-            }
-        )
-        eid += n
-        rows += [
-            tuple(r)
-            for out in _fold_batch((1,), iter([pdf]), state)
-            for r in out.itertuples(index=False)
-        ]
-    return state._v, rows
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.data())
-def test_attribution_fold_batching_invariant(data):
-    """Attribution emissions are per-conversion FINAL (a purchase
-    consumes the buffer), so any chunking must yield the identical
-    emission sequence AND the identical pending-touch state — the
-    property that makes the restart test's recovery exact."""
-    events = data.draw(_events(min_size=1))
-    cuts = data.draw(_splits(len(events)))
-    one_state, one_rows = _run_attribution([events])
-    chunked_state, chunked_rows = _run_attribution(_chunk(events, cuts))
-    assert chunked_rows == one_rows
-    assert (list(one_state[0]), list(one_state[1])) == (
-        list(chunked_state[0]),
-        list(chunked_state[1]),
-    )
-    # credit conservation: every conversion's ppm total is ~1e6
-    # (to within the k half-up roundings)
-    by_conv = {}
-    for r in one_rows:
-        by_conv.setdefault((r[0], r[1]), [0, 0])
-        by_conv[(r[0], r[1])][0] += r[4]
-        by_conv[(r[0], r[1])][1] += r[3]
-    for (u, c), (ppm, k) in by_conv.items():
-        assert abs(ppm - 1_000_000) <= k, (u, c, ppm, k)
-
-
-def _run_engagement(chunks):
-    from talknet_segmentation_batchprocessing_spark.streaming.engagement import (
-        _fold_batch as _eng_fold,
-    )
-
-    state = _FakeState()
-    rows = []
-    eid = 0
-    for ch in chunks:
-        if not ch:
-            continue
-        pdf = pd.DataFrame(
-            {
-                "day": [d for d in ch],
-                "event_id": list(range(eid, eid + len(ch))),
-            }
-        )
-        eid += len(ch)
-        rows += [
-            tuple(r)
-            for out in _eng_fold((1,), iter([pdf]), state)
-            for r in out.itertuples(index=False)
-        ]
-    return state._v, rows
-
-
-class _FakeWatermarkState(_FakeState):
-    """_FakeState plus the event-time watermark accessor, advanced by
-    the harness between chunks like a real query's micro-batches."""
-
-    def __init__(self):
-        super().__init__()
-        self.wm_ms = 0
-
-    def getCurrentWatermarkMs(self):
-        return self.wm_ms
-
-    def remove(self):
-        self._v = None
-
-
-def _run_engagement_wm(chunks):
-    from talknet_segmentation_batchprocessing_spark.streaming.engagement import (
-        _fold_batch as _eng_fold,
-    )
-
-    state = _FakeWatermarkState()
-    rows = []
-    eid = 0
-    fold_wm_ms = 0  # the watermark the LAST fold call actually saw
-    for ch in chunks:
-        if not ch:
-            continue
-        pdf = pd.DataFrame(
-            {
-                "day": [d for d in ch],
-                "event_id": list(range(eid, eid + len(ch))),
-            }
-        )
-        eid += len(ch)
-        fold_wm_ms = state.wm_ms
-        rows += [
-            tuple(r)
-            for out in _eng_fold((1,), iter([pdf]), state)
-            for r in out.itertuples(index=False)
-        ]
-        # watermark advances to the max event time seen so far (zero
-        # delay — the most aggressive eviction the operator allows);
-        # like a real query it takes effect from the NEXT batch
-        state.wm_ms = max(state.wm_ms, max(ch) * 86_400_000)
-    return state._v, rows, fold_wm_ms
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.data())
-def test_engagement_eviction_is_invisible(data):
-    """Watermark eviction must not change ANY emission for in-order
-    (watermark-respecting) arrivals — evicted days can never mint a
-    new covered day — while bounding retained state to the watermark
-    horizon. This is ADVICE r7's unbounded-state fix, property-tested
-    against the eviction-free fold."""
-    from talknet_segmentation_batchprocessing_spark.streaming.engagement import (
-        WINDOW_DAYS,
-    )
-
-    days = data.draw(
-        st.lists(st.integers(0, 60), min_size=1, max_size=40).map(sorted)
-    )
-    cuts = data.draw(_splits(len(days)))
-    chunks = _chunk(days, cuts)
-    _, plain_rows = _run_engagement(chunks)
-    wm_state, wm_rows, fold_wm_ms = _run_engagement_wm(chunks)
-    assert wm_rows == plain_rows
-    # retained days all sit above the horizon of the watermark the
-    # last fold saw (the watermark lags one batch, like a real query)
-    if wm_state is not None and fold_wm_ms > 0:
-        horizon = fold_wm_ms // 86_400_000 - WINDOW_DAYS
-        assert all(d > horizon for d in wm_state[0])
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.data())
-def test_engagement_fold_batching_invariant(data):
-    """The DAU/WAU activity-day fold must emit the same SET of
-    (kind, day) increments under any chunking — each (kind, day) at
-    most once — and end in the same state. Within-chunk the events are
-    day-sorted by the fold itself; chunk boundaries must be invisible.
-    (Days are drawn non-decreasing across chunks: the operator's
-    documented per-key event-time-order contract.)"""
-    days = data.draw(
-        st.lists(st.integers(0, 25), min_size=1, max_size=30).map(sorted)
-    )
-    cuts = data.draw(_splits(len(days)))
-    one_state, one_rows = _run_engagement([days])
-    chunked_state, chunked_rows = _run_engagement(_chunk(days, cuts))
-    assert chunked_state == one_state
-    assert set(one_rows) == set(chunked_rows)
-    assert len(chunked_rows) == len(set(chunked_rows))  # at-most-once
-    # dau emissions = distinct activity days; wau = their coverage union
-    dau = {r[2] for r in one_rows if r[1] == "dau"}
-    wau = {r[2] for r in one_rows if r[1] == "wau"}
-    assert dau == set(days)
-    assert wau == {d + o for d in days for o in range(7)}
 
 
 def _run_scd2(chunks):

@@ -318,9 +318,19 @@ def test_nprobe_sweep_disk_prunes_per_width(spark, index_path):
     assert n_lists > len(probed_by_width[1]), "width-1 scan read every list"
 
 
-def test_nprobe_sweep_disk_equals_in_session_curve(spark):
+def test_nprobe_sweep_disk_equals_in_session_curve(spark, monkeypatch, tmp_path):
     """The persisted-index curve must equal the in-session sweep row
-    for row (shared assignment definition, shared oracle)."""
+    for row (shared assignment definition, shared oracle).
+
+    Degenerate index: eight one-hot vectors are each their own k-means
+    list, so a width-1 probe finds only the query itself and yields no
+    candidate. Every sweep must still report all four widths, the
+    empty one with n_candidates 0, and match its DuckDB oracle."""
+    import duckdb
+    import pandas as pd
+
+    from talknet_segmentation_batchprocessing_spark import registry
+    from talknet_segmentation_batchprocessing_spark.oracle_compare import canon
     from talknet_segmentation_batchprocessing_spark.queries.extensions import (
         sim_nprobe_sweep,
         sim_nprobe_sweep_disk,
@@ -329,6 +339,30 @@ def test_nprobe_sweep_disk_equals_in_session_curve(spark):
     got = sorted(tuple(r) for r in sim_nprobe_sweep_disk(spark, SF_SMOKE).collect())
     want = sorted(tuple(r) for r in sim_nprobe_sweep(spark, SF_SMOKE).collect())
     assert got == want and len(got) == 4
+
+    monkeypatch.setenv("SPARK_GRAFT_CACHE_DIR", str(tmp_path / "cache"))
+    sf_dir = tmp_path / "sf_onehot"
+    sf_dir.mkdir()
+    pd.DataFrame(
+        {
+            "vec_id": range(8),
+            "embedding": [[float(i == j) for j in range(64)] for i in range(8)],
+            "label": [0] * 8,
+        }
+    ).astype({"label": "int32"}).to_parquet(sf_dir / "embeddings.parquet")
+    duck = duckdb.connect()
+    duck.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/embeddings.parquet')"
+    )
+    for name in ("sim_nprobe_sweep", "sim_nprobe_sweep_disk", "sim_nprobe_sweep_pq_disk"):
+        spec = registry.REGISTRY[name]
+        got = canon(spec.fn(spark, str(sf_dir)).toPandas())
+        want = canon(duck.execute(spec.oracle).df())
+        assert got["nprobe"].tolist() == [1, 2, 4, 8], name
+        assert got["n_candidates"].tolist() == [0, 8, 24, 56], name
+        pd.testing.assert_frame_equal(got, want, check_dtype=False, obj=name)
+    duck.close()
 
 
 def test_pq_sweep_shares_routing_with_flat_sweep(spark):

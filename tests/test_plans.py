@@ -254,6 +254,35 @@ def test_triangle_bucketed_wedge_join_zero_exchange(spark, monkeypatch):
         )
 
 
+def test_graph_frame_memo_yields_to_bucketed_threshold(spark, monkeypatch):
+    """Both sides of the graph publish switch from one table name: a
+    frame memoized on the small-graph side must not answer once the
+    threshold puts the same rows on the bucketed side."""
+    from talknet_segmentation_batchprocessing_spark.queries import extensions
+
+    base, key = "graph_memo_probe", "k"
+    name = extensions._graph_table_name(spark, base, SF_SMOKE)
+
+    def publish():
+        return extensions._write_graph_table(
+            spark, lambda: spark.range(3).withColumnRenamed("id", key),
+            base, key, SF_SMOKE,
+        )
+
+    try:
+        small = publish()
+        assert publish() is small  # memo hit below the threshold
+        assert not spark.catalog.tableExists(name)
+        monkeypatch.setattr(extensions, "_GRAPH_PUBLISH_THRESHOLD", -1)
+        bucketed = publish()
+        assert bucketed is not small
+        assert spark.catalog.tableExists(name)
+        assert sorted(r[key] for r in bucketed.collect()) == [0, 1, 2]
+    finally:
+        extensions._GRAPH_FRAMES.pop(name, None)
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
 def test_triangle_executed_exchanges_bounded(spark):
     """The full triangle query's EXECUTED plan must stay at or below 8
     exchanges (was 18 in round 5 before the bucketed edge table)."""

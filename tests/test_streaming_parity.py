@@ -672,69 +672,6 @@ def test_streaming_countmin_matches_batch(spark, tmp_path):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-def test_streaming_event_pattern_matches_batch_w15(spark, tmp_path):
-    """streaming/pattern.streaming_event_pattern across 2 micro-batches
-    + a restart before a 3rd: the union of emitted matches equals the
-    batch w15_event_pattern rows exactly, including matches whose
-    error/click prefix landed before the restart (state recovery)."""
-    import time
-
-    from talknet_segmentation_batchprocessing_spark.streaming.pattern import (
-        streaming_event_pattern,
-    )
-
-    ev = load(spark, SF_CORRECT, "events").select(
-        "user_id", "event_id", "event_type", "ts"
-    )
-    cuts = ev.selectExpr(
-        "percentile(cast(cast(ts as timestamp) as double), array(0.34, 0.67)) p"
-    ).collect()[0]["p"]
-    tsd = F.col("ts").cast("timestamp").cast("double")
-    drop = tmp_path / "ev"
-    drop.mkdir()
-    ckpt = tmp_path / "ckpt_w15"
-    ev.filter(tsd <= cuts[0]).coalesce(1).write.parquet(str(drop / "b0"))
-    time.sleep(1.1)
-    ev.filter((tsd > cuts[0]) & (tsd <= cuts[1])).coalesce(1).write.parquet(
-        str(drop / "b1")
-    )
-
-    def stream():
-        s = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(str(drop / "*"))
-        )
-        return streaming_event_pattern(s)
-
-    got1 = _run_batches(stream(), tmp_path, "w15_r1", ckpt)
-    time.sleep(1.1)
-    ev.filter(tsd > cuts[1]).coalesce(1).write.parquet(str(drop / "b2"))
-    got2 = _run_batches(stream(), tmp_path, "w15_r2", ckpt)
-    assert len(got1) > 0 and len(got2) > 0
-
-    got = (
-        pd.concat([got1, got2], ignore_index=True)
-        .sort_values(["user_id", "start_us"])
-        .reset_index(drop=True)
-    )
-    want = (
-        registry.REGISTRY["w15_event_pattern"]
-        .fn(spark, SF_CORRECT)
-        .toPandas()
-        .sort_values(["user_id", "start_us"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(
-        got[["user_id", "start_us", "end_us", "n_clicks", "span_us"]],
-        want[["user_id", "start_us", "end_us", "n_clicks", "span_us"]],
-        check_dtype=False,
-    )
-    # at least one post-restart match began before the restart boundary
-    assert (got2["start_us"] <= cuts[1] * 1e6 + 1).any()
-
-
 def test_streaming_kmv_matches_batch(spark, tmp_path):
     """streaming/pipeline.streaming_kmv_minima across 2 batches + a
     restart before a 3rd: the standing (n_kept, hk) per language —
@@ -798,88 +735,6 @@ def test_streaming_kmv_matches_batch(spark, tmp_path):
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
-
-
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """Round 6: watermarked STREAM-STREAM interval join (clicks x
-    strictly-prior views within 300 s, per user) must reproduce the
-    batch twin row-for-row on the sf0.01 events table — including when
-    the input arrives as two time-split micro-batches (the watermark
-    path actually exercises cross-batch state)."""
-    from talknet_segmentation_batchprocessing_spark.streaming.join import (
-        batch_interval_join,
-        stream_interval_join,
-    )
-
-    ev = load(spark, SF_CORRECT, "events").select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    clicks_b = ev.filter(F.col("event_type") == "click")
-    views_b = ev.filter(F.col("event_type") == "view")
-    want = (
-        batch_interval_join(clicks_b, views_b)
-        .toPandas()
-        .sort_values(["user_id", "click_id", "view_id"])
-        .reset_index(drop=True)
-    )
-    assert len(want) > 0  # the fixture actually exercises the join
-
-    # two time-split drop files -> two micro-batches under availableNow
-    drop = tmp_path / "ev_drop"
-    mid = ev.selectExpr(
-        "percentile(unix_micros(cast(ts AS timestamp)), 0.5) AS m"
-    ).first().m
-    ev.filter(F.unix_micros(F.col("ts").cast("timestamp")) <= mid).coalesce(1).write.parquet(
-        str(drop / "b0")
-    )
-    ev.filter(F.unix_micros(F.col("ts").cast("timestamp")) > mid).coalesce(1).write.parquet(
-        str(drop / "b1")
-    )
-    src = spark.readStream.schema(ev.schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(str(drop / "*"))
-    got = _drain(
-        stream_interval_join(
-            src.filter(F.col("event_type") == "click"),
-            src.filter(F.col("event_type") == "view"),
-        ),
-        tmp_path,
-        "ssij",
-    ).sort_values(["user_id", "click_id", "view_id"]).reset_index(drop=True)
-
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
-
-
-def test_stream_stream_join_state_is_bounded(spark, tmp_path):
-    """The executed streaming plan must carry the event-time range into
-    the join (state eviction by watermark) — assert the join condition
-    and watermarks made it into the physical streaming plan rather
-    than an unbounded cross-state join."""
-    from talknet_segmentation_batchprocessing_spark.streaming.join import (
-        stream_interval_join,
-    )
-
-    ev = load(spark, SF_CORRECT, "events").select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    drop = tmp_path / "d"
-    ev.limit(100).coalesce(1).write.parquet(str(drop / "b0"))
-    src = spark.readStream.schema(ev.schema).parquet(str(drop / "*"))
-    out = stream_interval_join(
-        src.filter(F.col("event_type") == "click"),
-        src.filter(F.col("event_type") == "view"),
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("ssij_plan")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    # StateStore-backed symmetric hash join ran (not a batch fallback)
-    assert q.recentProgress
-    assert any(p.get("stateOperators") for p in q.recentProgress)
 
 
 def test_streaming_rate_limit_matches_batch_w17(spark, tmp_path):
@@ -1098,156 +953,6 @@ def test_streaming_ema_matches_batch_w18(spark, tmp_path):
     assert (m["n_in_window_b"] == 8).any()
 
 
-def test_streaming_attribution_matches_batch_w21(spark, tmp_path):
-    """streaming/attribution across two event-time-split micro-batches:
-    the groupBy(event_type) rollup of all (conversion, channel)
-    emissions must equal the batch w21_attribution_linear totals —
-    touch counts, conversions touched, first/last endpoint counts, and
-    the exact ppm credit sums — including conversions whose touches
-    straddle the batch boundary."""
-    import time
-
-    from talknet_segmentation_batchprocessing_spark.streaming.attribution import (
-        streaming_attribution,
-    )
-
-    ev = load(spark, SF_CORRECT, "events").select(
-        "user_id", "event_id", "event_type", "ts"
-    )
-    cut = ev.selectExpr(
-        "percentile(cast(cast(ts as timestamp) as double), 0.5) p"
-    ).collect()[0]["p"]
-    drop = tmp_path / "ev"
-    drop.mkdir()
-    ev.filter(F.col("ts").cast("timestamp").cast("double") <= cut).coalesce(
-        1
-    ).write.parquet(str(drop / "b0"))
-    time.sleep(1.1)
-    ev.filter(F.col("ts").cast("timestamp").cast("double") > cut).coalesce(
-        1
-    ).write.parquet(str(drop / "b1"))
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(str(drop / "*"))
-    )
-    got = _drain(streaming_attribution(stream), tmp_path, "attr_stream")
-    assert len(got) > 0
-    rolled = (
-        got.groupby("event_type")
-        .agg(
-            n_touches=("n_touches", "sum"),
-            n_conversions=("event_type", "size"),
-            first_touches=("first_touch", "sum"),
-            last_touches=("last_touch", "sum"),
-            credit_ppm=("credit_ppm", "sum"),
-        )
-        .reset_index()
-        .sort_values("event_type")
-        .reset_index(drop=True)
-    )
-    import math
-
-    rolled["linear_credit"] = [
-        math.floor((p * 1.0 / 1e6) * 1e6 + 0.5) / 1e6 for p in rolled["credit_ppm"]
-    ]
-    want = (
-        registry.REGISTRY["w21_attribution_linear"]
-        .fn(spark, SF_CORRECT)
-        .toPandas()
-        .sort_values("event_type")
-        .reset_index(drop=True)
-    )
-    m = want.merge(rolled, on="event_type", suffixes=("_b", "_s"))
-    assert len(m) == len(want) > 0
-    for c in ("n_touches", "n_conversions", "first_touches", "last_touches",
-              "linear_credit"):
-        assert (m[f"{c}_b"] == m[f"{c}_s"]).all(), c
-
-
-def test_streaming_attribution_restart_recovers_buffer(spark, tmp_path):
-    """3 micro-batches with a FULL QUERY RESTART before the third: a
-    conversion arriving after the restart must credit touches buffered
-    BEFORE it (state-store recovery of the pending-touch arrays), and
-    the combined emissions must still roll up to the batch totals."""
-    import math
-    import time
-
-    from talknet_segmentation_batchprocessing_spark.streaming.attribution import (
-        streaming_attribution,
-    )
-
-    ev = load(spark, SF_CORRECT, "events").select(
-        "user_id", "event_id", "event_type", "ts"
-    )
-    cuts = ev.selectExpr(
-        "percentile(cast(cast(ts as timestamp) as double), array(0.34, 0.67)) p"
-    ).collect()[0]["p"]
-    tsd = F.col("ts").cast("timestamp").cast("double")
-    drop = tmp_path / "ev"
-    drop.mkdir()
-    ckpt = tmp_path / "ckpt_attr_restart"
-    ev.filter(tsd <= cuts[0]).coalesce(1).write.parquet(str(drop / "b0"))
-    time.sleep(1.1)
-    ev.filter((tsd > cuts[0]) & (tsd <= cuts[1])).coalesce(1).write.parquet(
-        str(drop / "b1")
-    )
-
-    def stream():
-        s = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(str(drop / "*"))
-        )
-        return streaming_attribution(s)
-
-    got1 = _run_batches(stream(), tmp_path, "attr_r1", ckpt)
-    assert len(got1) > 0
-
-    time.sleep(1.1)
-    ev.filter(tsd > cuts[1]).coalesce(1).write.parquet(str(drop / "b2"))
-    got2 = _run_batches(stream(), tmp_path, "attr_r2", ckpt)
-    assert len(got2) > 0
-
-    # no reprocessing: conversions are keyed by (user, conv_us); run 2
-    # must not re-emit run 1's conversions
-    seen1 = set(zip(got1["user_id"], got1["conv_us"]))
-    assert not (set(zip(got2["user_id"], got2["conv_us"])) & seen1)
-
-    # recovery crossed the restart: some post-restart conversion
-    # credits a touch span that began before the restart boundary —
-    # its per-conversion touch count exceeds what batch 3 alone holds
-    # is hard to isolate; instead require SOME run-2 conversion whose
-    # conv_us - (full lookback) reaches before the boundary AND whose
-    # credited touches include the earliest slot (first_touch row) —
-    # then verify the GLOBAL rollup equals the batch query exactly.
-    both = pd.concat([got1, got2], ignore_index=True)
-    rolled = (
-        both.groupby("event_type")
-        .agg(
-            n_touches=("n_touches", "sum"),
-            n_conversions=("event_type", "size"),
-            first_touches=("first_touch", "sum"),
-            last_touches=("last_touch", "sum"),
-            credit_ppm=("credit_ppm", "sum"),
-        )
-        .reset_index()
-    )
-    rolled["linear_credit"] = [
-        math.floor((p * 1.0 / 1e6) * 1e6 + 0.5) / 1e6 for p in rolled["credit_ppm"]
-    ]
-    want = (
-        registry.REGISTRY["w21_attribution_linear"].fn(spark, SF_CORRECT).toPandas()
-    )
-    m = want.merge(rolled, on="event_type", suffixes=("_b", "_s"))
-    assert len(m) == len(want) > 0
-    for c in ("n_touches", "n_conversions", "first_touches", "last_touches",
-              "linear_credit"):
-        assert (m[f"{c}_b"] == m[f"{c}_s"]).all(), c
-
-
 def test_streaming_transitions_match_batch_w22(spark, tmp_path):
     """streaming/transitions across two event-time-split micro-batches:
     groupBy(src, dst).count() of all emissions equals the batch
@@ -1303,66 +1008,6 @@ def test_streaming_transitions_match_batch_w22(spark, tmp_path):
     # event paired with a predecessor remembered from batch 1
     cut_us = int(cut * 1e6)
     assert (got["dst_us"] > cut_us).any() and (got["dst_us"] <= cut_us).any()
-
-
-def test_streaming_ohlc_matches_batch_w16(spark, tmp_path):
-    """streaming/ohlc: NATIVE watermarked windowed aggregation (no
-    custom state) across two micro-batches — every closed-window candle
-    must equal the batch w16 row bit-for-bit, and every window whose
-    end precedes max_ts - watermark must have emitted."""
-    import time
-
-    from talknet_segmentation_batchprocessing_spark.streaming.ohlc import (
-        streaming_ohlc,
-    )
-
-    ev = load(spark, SF_CORRECT, "events").select(
-        "user_id", "event_id", "event_type", "value", "ts"
-    )
-    cut = ev.selectExpr(
-        "percentile(cast(cast(ts as timestamp) as double), 0.5) p"
-    ).collect()[0]["p"]
-    drop = tmp_path / "ev"
-    drop.mkdir()
-    ev.filter(F.col("ts").cast("timestamp").cast("double") <= cut).coalesce(
-        1
-    ).write.parquet(str(drop / "b0"))
-    time.sleep(1.1)
-    ev.filter(F.col("ts").cast("timestamp").cast("double") > cut).coalesce(
-        1
-    ).write.parquet(str(drop / "b1"))
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(str(drop / "*"))
-    )
-    got = _drain(streaming_ohlc(stream), tmp_path, "ohlc_stream")
-    assert len(got) > 0
-
-    want = (
-        registry.REGISTRY["w16_ohlc_candles"].fn(spark, SF_CORRECT).toPandas()
-    )
-    m = got.merge(want, on=["user_id", "bucket"], suffixes=("_s", "_b"))
-    assert len(m) == len(got), "every emitted candle exists in batch"
-    for c in ("n_events", "open", "high", "low", "close", "sum_value_ppm"):
-        assert (m[f"{c}_s"] == m[f"{c}_b"]).all(), c
-
-    # completeness: every window closed by the final watermark emitted
-    max_us = int(
-        ev.selectExpr(
-            "max(unix_micros(cast(ts as timestamp))) m"
-        ).collect()[0]["m"]
-    )
-    closed_before = (max_us - 3_600_000_000) // 3_600_000_000  # wm = 1 h
-    want_closed = want[want["bucket"] + 1 <= closed_before]
-    emitted = set(zip(got["user_id"], got["bucket"]))
-    missing = [
-        t
-        for t in zip(want_closed["user_id"], want_closed["bucket"])
-        if t not in emitted
-    ]
-    assert not missing, f"{len(missing)} closed windows never emitted"
 
 
 def test_streaming_semantic_flag_matches_batch(spark, tmp_path):
@@ -1443,221 +1088,6 @@ def test_streaming_semantic_flag_matches_batch(spark, tmp_path):
         na = np.sqrt(fold_dot(a, a))
         nb = np.sqrt(fold_dot(b, b))
         assert fold_dot(a, b) / (na * nb) > 0.45
-
-
-def test_streaming_dsir_matches_batch(spark, tmp_path):
-    """streaming/dsir.py fit-offline/score-online vs the registered
-    dsir_importance_weights batch query: every doc scored across two
-    micro-batches must carry the batch query's exact rounded log-weight
-    and keep flag (bit-parity via integer-count literals + the same
-    position-ordered JVM fold, not a tolerance)."""
-    from talknet_segmentation_batchprocessing_spark.streaming.dsir import (
-        fit_dsir,
-        streaming_dsir_scorer,
-    )
-
-    want = (
-        registry.REGISTRY["dsir_importance_weights"]
-        .fn(spark, SF_CORRECT)
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-
-    tc, rc, t_tot, r_tot, m_total, n_docs = fit_dsir(spark, SF_CORRECT)
-    assert t_tot > 0 and r_tot > t_tot and n_docs == len(want)
-
-    docs = load(spark, SF_CORRECT, "documents").select("doc_id", "text")
-    drop = tmp_path / "docs"
-    drop.mkdir()
-    # two event-order micro-batches: stateless scoring must not care
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-        str(drop / "b0")
-    )
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(
-        str(drop / "b1")
-    )
-    stream = spark.readStream.schema(docs.schema).parquet(str(drop / "*"))
-    got = (
-        _drain(
-            streaming_dsir_scorer(stream, tc, rc, t_tot, r_tot, m_total, n_docs),
-            tmp_path,
-            "dsir_stream",
-        )
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-
-    assert len(got) == len(want) > 0
-    assert got["doc_id"].tolist() == want["doc_id"].tolist()
-    assert got["n_feats"].tolist() == want["n_feats"].tolist()
-    np.testing.assert_array_equal(
-        got["dsir_logw"].to_numpy(), want["dsir_logw"].to_numpy()
-    )
-    assert got["keep"].tolist() == want["keep"].tolist()
-    # the fit corpus must exercise both verdicts or keep-parity is vacuous
-    assert 0 < int(want["keep"].sum()) < len(want)
-
-
-def test_streaming_active_users_matches_batch_w24(spark, tmp_path):
-    """streaming/engagement.py across two event-time-split micro-batches:
-    the groupBy(kind, day).count() rollup of all emissions must equal
-    batch w24_active_users' dau and wau columns exactly — including
-    windows straddling the batch boundary, where a user's second
-    activity day must NOT re-emit covered days remembered in state."""
-    from talknet_segmentation_batchprocessing_spark.streaming.engagement import (
-        streaming_active_users,
-    )
-
-    want = (
-        registry.REGISTRY["w24_active_users"]
-        .fn(spark, SF_CORRECT)
-        .toPandas()
-        .sort_values("day")
-        .reset_index(drop=True)
-    )
-
-    ev = load(spark, SF_CORRECT, "events").select("user_id", "event_id", "ts")
-    mid = ev.agg(F.expr("percentile(unix_micros(cast(ts as timestamp)), 0.5)")).collect()[0][0]
-    drop = tmp_path / "events"
-    drop.mkdir()
-    early = ev.filter(F.expr(f"unix_micros(cast(ts as timestamp)) <= {int(mid)}"))
-    late = ev.filter(F.expr(f"unix_micros(cast(ts as timestamp)) > {int(mid)}"))
-    early.coalesce(1).write.parquet(str(drop / "b0"))
-    late.coalesce(1).write.parquet(str(drop / "b1"))
-    stream = (
-        spark.readStream.schema(early.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(str(drop / "*"))
-    )
-    got = _drain(streaming_active_users(stream), tmp_path, "wau_stream")
-
-    # each (user, kind, day) emits at most once — assert before rollup
-    assert not got.duplicated(["user_id", "kind", "day"]).any()
-    roll = (
-        got.groupby(["kind", "day"]).size().unstack(0, fill_value=0)
-        .reset_index()
-        .rename_axis(None, axis=1)
-    )
-    # the operator maintains counts for EVERY covered day; the batch
-    # report lists only days with activity — the extra streaming days
-    # must all be zero-DAU coverage tails (activity-day + 1..6 gaps)
-    extra = roll[~roll["day"].isin(set(want["day"]))]
-    assert (extra.get("dau", pd.Series(dtype=int)).fillna(0) == 0).all()
-    merged = want.merge(roll, on="day", how="left", suffixes=("_b", "_s"))
-    assert not merged["dau_s"].isna().any() and not merged["wau_s"].isna().any()
-    assert merged["dau_b"].astype(int).tolist() == merged["dau_s"].astype(int).tolist()
-    assert merged["wau_b"].astype(int).tolist() == merged["wau_s"].astype(int).tolist()
-    # cross-boundary regression guard: some user must be active on both
-    # sides of the split or the state-carry assertion is vacuous
-    eu = set(early.select("user_id").distinct().toPandas()["user_id"])
-    lu = set(late.select("user_id").distinct().toPandas()["user_id"])
-    assert eu & lu
-
-
-def test_streaming_active_users_restart_recovers_state(spark, tmp_path):
-    """engagement across 3 micro-batches with a FULL QUERY RESTART
-    between batch 2 and 3: post-restart emissions must respect the
-    recovered activity-day sets (no re-emission of a day already
-    covered before the restart, no reprocessing), and the union rollup
-    must still equal the batch w24 counts."""
-    import time
-
-    from talknet_segmentation_batchprocessing_spark.streaming.engagement import (
-        streaming_active_users,
-    )
-
-    ev = load(spark, SF_CORRECT, "events").select("user_id", "event_id", "ts")
-    cuts = ev.selectExpr(
-        "percentile(cast(cast(ts as timestamp) as double), array(0.34, 0.67)) p"
-    ).collect()[0]["p"]
-    tsd = F.col("ts").cast("timestamp").cast("double")
-    drop = tmp_path / "ev"
-    drop.mkdir()
-    ckpt = tmp_path / "ckpt_wau_restart"
-    ev.filter(tsd <= cuts[0]).coalesce(1).write.parquet(str(drop / "b0"))
-    time.sleep(1.1)
-    ev.filter((tsd > cuts[0]) & (tsd <= cuts[1])).coalesce(1).write.parquet(
-        str(drop / "b1")
-    )
-
-    def stream():
-        s = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(str(drop / "*"))
-        )
-        return streaming_active_users(s)
-
-    got1 = _run_batches(stream(), tmp_path, "wau_r1", ckpt)
-    assert len(got1) > 0
-
-    time.sleep(1.1)
-    ev.filter(tsd > cuts[1]).coalesce(1).write.parquet(str(drop / "b2"))
-    got2 = _run_batches(stream(), tmp_path, "wau_r2", ckpt)
-    assert len(got2) > 0
-
-    # recovered state, not reprocessing: at-most-once per (user, kind,
-    # day) must hold ACROSS the restart boundary
-    both = pd.concat([got1, got2], ignore_index=True)
-    assert not both.duplicated(["user_id", "kind", "day"]).any()
-
-    want = (
-        registry.REGISTRY["w24_active_users"].fn(spark, SF_CORRECT).toPandas()
-    )
-    roll = (
-        both.groupby(["kind", "day"]).size().unstack(0, fill_value=0)
-        .reset_index()
-        .rename_axis(None, axis=1)
-    )
-    merged = want.merge(roll, on="day", how="left", suffixes=("_b", "_s"))
-    assert merged["dau_b"].astype(int).tolist() == merged["dau_s"].astype(int).tolist()
-    assert merged["wau_b"].astype(int).tolist() == merged["wau_s"].astype(int).tolist()
-
-
-def test_streaming_bpe_matches_batch(spark, tmp_path):
-    """streaming/bpe.py train-offline/tokenize-online vs the registered
-    bpe_encode_corpus batch query: every doc priced across two
-    micro-batches must carry the batch query's exact n_words /
-    n_tokens / fertility_ppm (pure string folds + BIGINT arithmetic —
-    parity is bit-level, not a tolerance)."""
-    from talknet_segmentation_batchprocessing_spark.streaming.bpe import (
-        fit_bpe,
-        streaming_bpe_pricer,
-    )
-
-    want = (
-        registry.REGISTRY["bpe_encode_corpus"]
-        .fn(spark, SF_CORRECT)
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-
-    merges = fit_bpe(spark, SF_CORRECT)
-    assert len(merges) == 20
-
-    docs = load(spark, SF_CORRECT, "documents").select("doc_id", "text")
-    drop = tmp_path / "docs_bpe"
-    drop.mkdir()
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-        str(drop / "b0")
-    )
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(
-        str(drop / "b1")
-    )
-    stream = spark.readStream.schema(docs.schema).parquet(str(drop / "*"))
-    got = (
-        _drain(streaming_bpe_pricer(stream, merges), tmp_path, "bpe_stream")
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-
-    assert len(got) == len(want) > 0
-    for col in ("doc_id", "n_words", "n_tokens", "fertility_ppm"):
-        assert got[col].tolist() == want[col].tolist(), col
 
 
 def test_streaming_scd2_matches_batch_u7(spark, tmp_path):

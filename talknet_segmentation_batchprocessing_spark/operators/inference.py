@@ -19,6 +19,7 @@ reference loads ``pretrain_TalkNet.model`` once per process
 from __future__ import annotations
 
 import hashlib
+import weakref
 from collections.abc import Callable, Iterator
 
 import numpy as np
@@ -32,21 +33,24 @@ DETECTIONS_SCHEMA = (
 SCORES_SCHEMA = "video_id string, track_id int, frame_idx int, score double"
 
 # One model instance per executor *process* (the reference's single
-# in-process model, demoTalkNet.py:227-230). Keyed by broadcast id so a
-# new broadcast (new weights) reloads.
-_MODEL_CACHE: dict[int, object] = {}
+# in-process model, demoTalkNet.py:227-230), with a weak reference to the
+# broadcast it was built from, matched by identity. A worker drops each
+# broadcast its current task does not use, and a later broadcast may
+# reuse the freed address, so an id() key could serve stale weights; a
+# strong reference would pin the dropped broadcast's bytes instead.
+_MODEL_CACHE: dict[str, object] = {}
 
 
 def _executor_model(model_bc, builder: Callable[[object], object]):
     if model_bc is None:
         # no broadcast state -> cheap builder (a fake); don't cache —
-        # id(None) would collide across different operators
+        # every operator without a broadcast would share one entry
         return builder(None)
-    key = id(model_bc)
-    if key not in _MODEL_CACHE:
+    ref = _MODEL_CACHE.get("bc")
+    if ref is None or ref() is not model_bc:
         _MODEL_CACHE.clear()  # at most one resident model per process
-        _MODEL_CACHE[key] = builder(model_bc.value)
-    return _MODEL_CACHE[key]
+        _MODEL_CACHE.update(bc=weakref.ref(model_bc), model=builder(model_bc.value))
+    return _MODEL_CACHE["model"]
 
 
 def fake_face_detector(max_faces: int = 3, conf_th: float = 0.9):
@@ -294,14 +298,24 @@ def score_tracks(
     ``mfcc`` (flattened [4,13] per frame — 100 Hz MFCC vs 25 fps, X5)
     and ``face`` (flattened [112,112] grayscale crop, X4) columns —
     the same per-clip A/V slicing as demoTalkNet.py:260-262.
+
+    Such a scorer must be a function of its clip tensors only: two
+    durations that cut the same clip (every duration once the track is
+    shorter than the clip) share one model call, so the ensemble runs
+    one forward per distinct clip. Other scorers may depend on the
+    duration (``fake_scorer`` hashes it) and are called once per
+    (duration, clip). The model is built once per task.
     """
     from ..deploy import ensure_worker_imports
 
     ensure_worker_imports(track_features)
     builder = model_builder or (lambda _state: fake_scorer())
+    task_model: dict[str, object] = {}  # this task's model, built on first use
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        model = _executor_model(model_bc, builder)
+        if not task_model:
+            task_model["model"] = _executor_model(model_bc, builder)
+        model = task_model["model"]
         needs_features = getattr(model, "needs_features", False)
         video_id = pdf["video_id"].iloc[0]
         track_id = int(pdf["track_id"].iloc[0])
@@ -314,22 +328,27 @@ def score_tracks(
             faces = np.stack(
                 [np.asarray(v, dtype=np.float64).reshape(112, 112) for v in p["face"]]
             )
+        outputs = {}  # clip key -> model output, for this track
         acc = np.zeros(len(frames), dtype=np.float64)
         for dur in durations:
             clip = max(int(dur * fps), 1)
             for s in range(0, len(frames), clip):  # W9 tumbling clips
-                idx = frames[s : s + clip]
-                if needs_features:
-                    acc[s : s + clip] += model(
-                        video_id,
-                        track_id,
-                        idx,
-                        dur,
-                        audio=mfcc[s * 4 : (s + clip) * 4],
-                        video=faces[s : s + clip],
-                    )
-                else:
-                    acc[s : s + clip] += model(video_id, track_id, idx, dur)
+                e = min(s + clip, len(frames))
+                key = (s, e) if needs_features else (s, e, dur)
+                if key not in outputs:
+                    idx = frames[s:e]
+                    if needs_features:
+                        outputs[key] = model(
+                            video_id,
+                            track_id,
+                            idx,
+                            dur,
+                            audio=mfcc[s * 4 : e * 4],
+                            video=faces[s:e],
+                        )
+                    else:
+                        outputs[key] = model(video_id, track_id, idx, dur)
+                acc[s:e] += outputs[key]
         mean = acc / len(durations)
         # reference: round(float(s), 1) — banker's (python round)
         scores = np.array([round(float(v), 1) for v in mean])

@@ -484,7 +484,10 @@ def talknet_scorer(weights: dict | None = None, seed: int = 7):
     per-clip MFCC + face tensors the shell slices out (W9 clip loop).
 
     Marked ``needs_features`` so the shell knows to assemble and pass
-    the real tensors instead of only (ids, duration)."""
+    the real tensors instead of only (ids, duration). The score is a
+    function of those clip tensors only (the ids and duration are
+    ignored), which lets the shell call it once per distinct clip
+    across the duration ensemble."""
     w = weights if weights is not None else init_weights(seed)
 
     def score(video_id, track_id, frame_idx, duration, audio=None, video=None):

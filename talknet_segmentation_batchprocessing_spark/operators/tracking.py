@@ -3,11 +3,13 @@ order-dependent sequential algorithm (demoTalkNet.py:146-164), which is
 NOT a Catalyst join: faces are consumed greedily, so results depend on
 scan order exactly like the reference.
 
-Spark mapping: ``applyInPandas`` over ``(video_id, scene_id)`` groups —
-the same unit the reference iterates (demoTalkNet.py:519-523). Groups
-are scene-bounded, so per-task state is small; cross-scene parallelism
-is free. The IoU arithmetic itself is the relational X1 expression; only
-the greedy matching loop lives in Python.
+Spark mapping: ``applyInPandas`` over ``video_id`` groups, each scene
+tracked on its own inside the group — the reference's per-video loop
+over scenes (demoTalkNet.py:519-523). Track ids number the video's
+tracks in scene order, as the reference's ``allTracks`` index does, so
+``(video_id, track_id)`` stays a track key once ``scene_id`` is
+dropped. The IoU arithmetic itself is the relational X1 expression;
+only the greedy matching loop lives in Python.
 
 Parity notes (deliberately replicated reference behaviors):
 - the reference removes a face from the frame list WHILE iterating it,
@@ -124,13 +126,23 @@ def track_faces(
     iou_thres: float = 0.5,
 ) -> DataFrame:
     """J6 entry point: detections(video_id, scene_id, frame_idx, det_id,
-    x1..y2[, conf]) -> tracks, one applyInPandas task per scene."""
+    x1..y2[, conf]) -> tracks, one applyInPandas group per video; track
+    ids run over the whole video, numbered by (scene_id, track in
+    scene)."""
 
     from ..deploy import ensure_worker_imports
 
     ensure_worker_imports(detections)
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return greedy_track_scene(pdf, num_failed_det, min_track, iou_thres)
+        tracks = pd.concat(
+            [
+                greedy_track_scene(scene, num_failed_det, min_track, iou_thres)
+                for _, scene in pdf.groupby("scene_id")
+            ],
+            ignore_index=True,
+        )
+        tracks["track_id"] = tracks.groupby(["scene_id", "track_id"]).ngroup()
+        return tracks
 
-    return detections.groupBy("video_id", "scene_id").applyInPandas(fn, TRACK_SCHEMA)
+    return detections.groupBy("video_id").applyInPandas(fn, TRACK_SCHEMA)

@@ -184,9 +184,10 @@ def _synthetic_detections(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference-algorithm port (demoTalkNet.py:146-164 parity,
     # including the remove-during-iterate skip).
     oracle=None,
-    doc="J6 greedy IoU track association over (video_id, scene_id) "
-    "groups via applyInPandas (demoTalkNet.py:146-164 parity, incl. the "
-    "remove-during-iterate skip); rows-only check + property tests",
+    doc="J6 greedy IoU track association per scene, over video_id groups "
+    "via applyInPandas, track ids numbered over the video in scene order "
+    "(demoTalkNet.py:146-164 parity, incl. the remove-during-iterate "
+    "skip); rows-only check + property tests",
     tags=("J6", "rows-only"),
 )
 def j6_greedy_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:

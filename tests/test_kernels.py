@@ -141,6 +141,38 @@ def test_tracking_deterministic(dets):
     )
 
 
+def test_track_ids_run_over_the_video_in_scene_order(spark):
+    """Each scene is tracked on its own, but track ids number the whole
+    video's tracks in scene order (the reference's allTracks), so
+    consumers keyed on (video_id, track_id) never merge two scenes'
+    tracks."""
+    from talknet_segmentation_batchprocessing_spark.operators.tracking import (
+        track_faces,
+    )
+
+    rows = []
+    # scene 0: frames 0-11, two actors; scene 1: frames 12-23, one
+    for scene, frames, actors in ((0, range(0, 12), (0, 1)), (1, range(12, 24), (0,))):
+        for f in frames:
+            for a in actors:
+                x = 20.0 + 60.0 * a + 0.5 * f
+                rows.append(("v", scene, f, a, x, 40.0, x + 30.0, 70.0))
+    dets = spark.createDataFrame(
+        pd.DataFrame(
+            rows,
+            columns=["video_id", "scene_id", "frame_idx", "det_id", "x1", "y1", "x2", "y2"],
+        )
+    )
+    out = track_faces(dets, min_track=10).toPandas()
+    per_track = out.groupby("track_id").agg(
+        scene=("scene_id", "unique"), first=("frame_idx", "min"), n=("frame_idx", "size")
+    )
+    assert per_track.index.tolist() == [0, 1, 2]
+    assert [list(s) for s in per_track.scene] == [[0], [0], [1]]
+    assert per_track["first"].tolist() == [0, 0, 12]
+    assert (per_track.n == 12).all()
+
+
 # ---------------------------------------------------------------------------
 # W2/W3 reference-quirk parity vs numpy transcriptions (Spark, seeded)
 # ---------------------------------------------------------------------------

@@ -130,6 +130,47 @@ def test_score_tracks_ensemble(spark):
     assert (scores.score * 10 % 1 == 0).all()
 
 
+def test_executor_model_cache_matches_broadcast_by_identity():
+    """The per-process model cache matches the broadcast it was built
+    from by identity: a worker drops a broadcast its task does not use,
+    and a new broadcast at the freed address must not get the old
+    model. The cache does not keep a dropped broadcast (and its bytes)
+    alive."""
+    import gc
+    import weakref
+
+    from talknet_segmentation_batchprocessing_spark.operators import inference
+
+    class StubBroadcast:
+        def __init__(self, value):
+            self.value = value
+
+    builds = []
+
+    def builder(state):
+        builds.append(state)
+        return ("model", state)
+
+    inference._MODEL_CACHE.clear()
+    try:
+        bc = StubBroadcast("w0")
+        assert inference._executor_model(bc, builder) == ("model", "w0")
+        assert inference._executor_model(bc, builder) == ("model", "w0")
+        assert builds == ["w0"]
+        ref = weakref.ref(bc)
+        del bc
+        gc.collect()
+        assert ref() is None
+        # CPython usually hands a new object the address just freed
+        for i in range(1, 6):
+            bc = StubBroadcast(f"w{i}")
+            assert inference._executor_model(bc, builder) == ("model", f"w{i}")
+            del bc
+        assert builds == [f"w{i}" for i in range(6)]
+    finally:
+        inference._MODEL_CACHE.clear()
+
+
 def test_segment_sink_manifest_and_summary(spark, tmp_path):
     from talknet_segmentation_batchprocessing_spark.operators.segmentation import (
         extract_segments,

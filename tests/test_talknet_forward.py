@@ -256,3 +256,109 @@ def test_broadcast_weights_roundtrip(spark):
         via_bc.sort_values("frame_idx").reset_index(drop=True),
         local.sort_values("frame_idx").reset_index(drop=True),
     )
+
+
+def test_score_tracks_forwards_each_distinct_clip_once(spark):
+    """Full duration ensemble on one 60-frame track at 25 fps: the nine
+    (duration, clip) pairs cut five distinct clips, so a feature-aware
+    scorer runs five times, and the scores equal a plain loop that runs
+    the forward for every pair."""
+    import pandas as pd
+
+    from talknet_segmentation_batchprocessing_spark.operators.inference import (
+        DURATION_SET,
+        score_tracks,
+    )
+    from talknet_segmentation_batchprocessing_spark.operators.talknet_forward import (
+        talknet_scorer,
+    )
+
+    rng = np.random.default_rng(17)
+    n = 60
+    pdf = pd.DataFrame(
+        {
+            "video_id": "v",
+            "track_id": 0,
+            "frame_idx": np.arange(n),
+            "mfcc": [rng.standard_normal(4 * 13).tolist() for _ in range(n)],
+            "face": [
+                rng.integers(0, 256, size=112 * 112).astype(float).tolist()
+                for _ in range(n)
+            ],
+        }
+    )
+    calls = spark.sparkContext.accumulator(0)
+
+    def build(_state):
+        score = talknet_scorer(seed=3)
+
+        def counted(*args, **kwargs):
+            calls.add(1)
+            return score(*args, **kwargs)
+
+        counted.needs_features = True
+        return counted
+
+    out = score_tracks(spark.createDataFrame(pdf), model_builder=build).toPandas()
+    assert calls.value == 5
+
+    w = tf.init_weights(seed=3)
+    audio = np.vstack([np.reshape(m, (4, 13)) for m in pdf.mfcc])
+    video = np.stack([np.reshape(f, (112, 112)) for f in pdf.face])
+    acc = np.zeros(n)
+    for dur in DURATION_SET:
+        clip = dur * 25
+        for s in range(0, n, clip):
+            acc[s : s + clip] += tf.talknet_forward(
+                w, audio[s * 4 : (s + clip) * 4], video[s : s + clip]
+            )
+    expected = [round(float(v), 1) for v in acc / len(DURATION_SET)]
+    assert out.sort_values("frame_idx").score.tolist() == expected
+
+
+def test_score_tracks_calls_duration_aware_scorer_per_pair(spark):
+    """A scorer without ``needs_features`` may depend on the duration
+    (``fake_scorer`` hashes it), so it still gets every (duration, clip)
+    pair; the model is built once for all the groups of a task."""
+    from talknet_segmentation_batchprocessing_spark.operators.inference import (
+        DURATION_SET,
+        fake_scorer,
+        score_tracks,
+    )
+
+    calls = spark.sparkContext.accumulator(0)
+    builds = spark.sparkContext.accumulator(0)
+
+    def build(_state):
+        builds.add(1)
+        score = fake_scorer()
+
+        def counted(*args):
+            calls.add(1)
+            return score(*args)
+
+        return counted
+
+    df = spark.createDataFrame(
+        [("v", t, f) for t in (0, 1, 2) for f in range(60)],
+        "video_id string, track_id int, frame_idx int",
+    )
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        out = score_tracks(df, model_builder=build).toPandas()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert calls.value == 3 * 9
+    assert builds.value == 1
+
+    score = fake_scorer()
+    frames = np.arange(60)
+    for t in (0, 1, 2):
+        acc = np.zeros(60)
+        for dur in DURATION_SET:
+            clip = dur * 25
+            for s in range(0, 60, clip):
+                acc[s : s + clip] += score("v", t, frames[s : s + clip], dur)
+        got = out[out.track_id == t].sort_values("frame_idx").score.tolist()
+        assert got == [round(float(v), 1) for v in acc / len(DURATION_SET)]

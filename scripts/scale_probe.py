@@ -429,16 +429,11 @@ def main() -> int:
 
     curve: dict[str, dict] = {}
     out_path = os.path.join(os.path.dirname(__file__), "..", "SCALE_CURVE.json")
-    # --scd2-only: rerun just the streaming sink probe and merge into
-    # the existing curve (the batch sweep is ~25 min; don't repeat it
-    # to refresh one entry)
+    # --only / --x100 / --x100-emb: rerun a subset and merge into the
+    # existing curve (the batch sweep is ~25 min; don't repeat it to
+    # refresh a few entries)
     heavy = HEAVY
-    if (
-        "--scd2-only" in sys.argv
-        or "--only" in sys.argv
-        or "--x100" in sys.argv
-        or "--x100-emb" in sys.argv
-    ):
+    if "--only" in sys.argv or "--x100" in sys.argv or "--x100-emb" in sys.argv:
         heavy = []
         if "--only" in sys.argv:
             heavy = sys.argv[sys.argv.index("--only") + 1].split(",")
@@ -488,78 +483,6 @@ def main() -> int:
     # #4): --x100-emb reruns just those three and merges into the curve
     if "--x100-emb" in sys.argv:
         probe_x100_index(spark, curve)
-
-    # streaming SCD2 changelog + merge sink on a 10x event stream
-    # (VERDICT r8 ask 4's third leg): not a registered batch query, so
-    # probed directly — availableNow over the events parquet, state
-    # bounded at one open interval per user, sink merge keyed
-    # (user_id, version)
-    import shutil as _sh
-    import tempfile as _tf
-
-    from talknet_segmentation_batchprocessing_spark.streaming.scd2 import (  # noqa: E402
-        scd2_merge_sink,
-        streaming_scd2_changelog,
-    )
-
-    # targeted --only / --x100 reruns keep the existing streaming entry
-    run_scd2 = (
-        "--only" not in sys.argv
-        and "--x100" not in sys.argv
-        and "--x100-emb" not in sys.argv
-    )
-    try:
-        from talknet_segmentation_batchprocessing_spark.sources.upsert import (  # noqa: E402
-            init_table,
-        )
-
-        times = {}
-        for label, sf_dir in (("sf0.1", SF_SMALL), ("sf1", SF_BIG)):
-            if not run_scd2:
-                break
-            work = _tf.mkdtemp(prefix=f"scd2_sink_probe_{label}_")
-            src = os.path.join(sf_dir, "events.parquet")
-            # the file stream source needs a DIRECTORY; the testdata
-            # events table is a single parquet file, so stage it into
-            # the probe's work dir
-            if os.path.isdir(src):
-                drop = src
-            else:
-                drop = os.path.join(work, "events_src")
-                os.makedirs(drop)
-                _sh.copy(src, os.path.join(drop, "part-0.parquet"))
-            schema = spark.read.parquet(drop).schema
-            stream = (
-                spark.readStream.schema(schema)
-                .parquet(drop)
-                .select("user_id", "event_id", "event_type", "ts")
-            )
-            chl = streaming_scd2_changelog(stream)
-            table = os.path.join(work, "table")
-            init_table(
-                spark.createDataFrame(
-                    [],
-                    "user_id long, version long, event_type string, "
-                    "valid_from_us long, valid_to_us long, n_events long, "
-                    "uid_ver string",
-                ),
-                table,
-            )
-            t0 = time.perf_counter()
-            q = scd2_merge_sink(chl, table, os.path.join(work, "ckpt"))
-            q.awaitTermination()
-            times[label] = round(time.perf_counter() - t0, 3)
-            _sh.rmtree(work, ignore_errors=True)
-        if run_scd2:
-            ratio = round(times["sf1"] / times["sf0.1"], 2)
-            curve["streaming_scd2_sink"] = {**times, "ratio_10x_rows": ratio}
-            print(
-                f"  streaming_scd2_sink: {times['sf0.1']}s -> {times['sf1']}s"
-                f"  ({ratio}x)"
-            )
-    except Exception as exc:  # never lose the batch curve to this probe
-        curve["streaming_scd2_sink"] = {"error": str(exc)[:300]}
-        print(f"  streaming_scd2_sink FAILED: {exc}")
 
     sidecar = {
         "metric": "scale_curve_10x",

@@ -11,7 +11,8 @@ stage as DataFrame operators:
   shells — ``pipeline/``;
 - large-scale training-data operators (dedup, similarity search,
   multimodal columns, text analysis) — ``extensions/``;
-- Structured Streaming drop-folder variant — ``streaming/``.
+- streaming ANN index ingest and drift monitoring (OPERATIONS.md) —
+  ``streaming/``.
 
 Design rules (see SURVEY.md §7): DataFrame-first, no RDDs; explicit
 StructType schemas (``schemas.py``); ``video_id`` is the canonical

@@ -1,11 +1,10 @@
-"""X4/X7/X8/X18: training-loader signal prep, numpy-only.
+"""X4/X7/X8: training-loader signal prep, numpy-only.
 
 Reference: dataLoader.py:15-28 (SNR noise mixing), 19-23,42-46
-(wrap-padding), 56-75 (visual augmentation), demoTalkNet.py:244-246
-(grayscale 224 resize + 112 center crop). All pure array math — no
-cv2/scipy needed; interpolating resize is approximated by block-mean /
-nearest sampling (the UDF slot accepts a cv2-backed callable in
-production).
+(wrap-padding), demoTalkNet.py:244-246 (grayscale 224 resize + 112
+center crop). All pure array math — no cv2/scipy needed; interpolating
+resize is approximated by block-mean / nearest sampling (the UDF slot
+accepts a cv2-backed callable in production).
 """
 
 from __future__ import annotations
@@ -73,9 +72,3 @@ def face_pipeline(img: np.ndarray, resize_to: int = 224, crop_to: int = 112) -> 
 def visual_normalize(x: np.ndarray) -> np.ndarray:
     """X9: (x/255 - 0.4161) / 0.1688 (model/talkNetModel.py:32)."""
     return (np.asarray(x, dtype=np.float64) / 255.0 - 0.4161) / 0.1688
-
-
-def augment_choice(seed: int) -> str:
-    """X18: deterministic flip/crop/rotate choice from a seed (the
-    reference's random.choice with an explicit RNG; dataLoader.py:56-75)."""
-    return ["orig", "flip", "crop", "rotate"][seed % 4]

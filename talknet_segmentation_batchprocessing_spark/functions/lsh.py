@@ -89,9 +89,7 @@ def sign_matrix(V, n_j: int):
     (sequential-fold dot(V[r], H[j]) > 0) exactly. One BLAS matmul,
     then any dot within the rigorous rounding bound re-folded
     left-to-right before the sign is taken (module docstring). This is
-    THE kernel — batch ``sign_signatures`` and the streaming bucketer
-    (streaming/semantic.py) both call it, so a change to the bound or
-    the hyperplane family cannot desynchronize the two paths."""
+    the kernel ``sign_signatures`` calls."""
     import numpy as np
 
     j = np.arange(n_j, dtype=np.int64)[:, None]
@@ -112,9 +110,8 @@ def sign_matrix(V, n_j: int):
 def band_pack_expr(bands: int, bits: int, signs_col: str = "signs") -> str:
     """SQL expr packing a flat sign array into per-band integer bucket
     ids: transform over bands, each aggregating its ``bits`` signs
-    into a bigint (bit k set iff signs[b*bits+k]). Shared by the batch
-    LSH family (queries/extensions.py) and the streaming corpus index
-    (streaming/semantic.py) — posexplode the result to (band, bucket)."""
+    into a bigint (bit k set iff signs[b*bits+k]), for the LSH family
+    in queries/extensions.py — posexplode the result to (band, bucket)."""
     return (
         f"transform(sequence(0, {bands - 1}), b -> "
         f"aggregate(sequence(0, {bits - 1}), 0L, (acc, k) -> "

@@ -27,9 +27,3 @@ def stable_round(col: Column | str, digits: int) -> Column:
         col = F.col(col)
     p = F.lit(float(10**digits))
     return F.floor(col * p + F.lit(0.5)) / p
-
-
-def stable_round_sql(expr: str, digits: int) -> str:
-    """The same expression as a SQL fragment (DuckDB / Spark SQL)."""
-    p = f"1e{digits}"
-    return f"floor(({expr}) * {p} + 0.5) / {p}"

@@ -18,11 +18,6 @@ def frame_to_seconds(frame: Column | str, fps: float = FPS) -> Column:
     return c / F.lit(fps)
 
 
-def seconds_to_frame(ts: Column | str, fps: float = FPS) -> Column:
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return F.floor(c * F.lit(fps)).cast("int")
-
-
 def remap_fps(frame: Column | str, src_fps: float, dst_fps: float = FPS) -> Column:
     """``int(frame / src_fps * dst_fps)`` — truncation, not rounding
     (demoTalkNet.py:384)."""

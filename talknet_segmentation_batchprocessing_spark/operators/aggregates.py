@@ -19,34 +19,6 @@ from ..functions.rounding import stable_round
 DURATION_SET = [1, 2, 3, 4, 5, 6]
 
 
-def ensemble_mean_scores(per_duration_scores: DataFrame) -> DataFrame:
-    """A1: per (video, track, frame) mean score over the duration
-    ensemble, rounded to 1 decimal (demoTalkNet.py:256-271)."""
-    return (
-        per_duration_scores.groupBy("video_id", "track_id", "frame_idx")
-        .agg(F.round(F.avg("score"), 1).alias("score"))
-    )
-
-
-def track_mean_size(tracks: DataFrame) -> DataFrame:
-    """A2/F4: mean track box size, the face-size filter input
-    (demoTalkNet.py:176: ``max(mean(w), mean(h))``)."""
-    return tracks.groupBy("video_id", "track_id").agg(
-        F.avg(F.col("x2") - F.col("x1")).alias("mean_w"),
-        F.avg(F.col("y2") - F.col("y1")).alias("mean_h"),
-        F.greatest(
-            F.avg(F.col("x2") - F.col("x1")), F.avg(F.col("y2") - F.col("y1"))
-        ).alias("mean_size"),
-    )
-
-
-def conditional_count(df: DataFrame, cond: Column, group_cols: Sequence[str] = ()) -> DataFrame:
-    """A4: ``count(*) FILTER (WHERE ...)`` — positives count
-    (script:145-148)."""
-    agg = F.sum(F.when(cond, 1).otherwise(0)).alias("n_matching")
-    return df.groupBy(*group_cols).agg(agg) if group_cols else df.agg(agg)
-
-
 def per_speaker_f1(
     scored: DataFrame,
     speaker_col: str = "speaker_id",
@@ -304,16 +276,6 @@ def _average_precision_global(
     )
 
 
-def entity_clip_extent(ava: DataFrame) -> DataFrame:
-    """A7: per entity, first/last frame_timestamp + owning video
-    (utils/tools.py:115,125-139 audio-slice bounds)."""
-    return ava.groupBy("entity_id").agg(
-        F.min("frame_timestamp").alias("start_ts"),
-        F.max("frame_timestamp").alias("end_ts"),
-        F.first("video_id").alias("video_id"),
-    )
-
-
 def audio_energy_db(samples_col: Column | str, eps: float = 1e-4) -> Column:
     """A9: ``10*log10(mean(x^2) + eps)`` over a sample array
     (dataLoader.py:24-26) — higher-order ``aggregate``, no UDF."""
@@ -323,9 +285,3 @@ def audio_energy_db(samples_col: Column | str, eps: float = 1e-4) -> Column:
         c, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
     )
     return F.lit(10.0) * F.log10(total / n + F.lit(eps))
-
-
-def snr_gain(clean_db: Column, noise_db: Column, snr: Column) -> Column:
-    """A9 companion: ``sqrt(10 ** ((cleanDB - noiseDB - snr) / 10))``
-    (dataLoader.py:26)."""
-    return F.sqrt(F.pow(F.lit(10.0), (clean_db - noise_db - snr) / F.lit(10.0)))

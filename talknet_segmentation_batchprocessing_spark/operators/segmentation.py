@@ -105,19 +105,3 @@ def extract_segments(
             "duration",
         )
     )
-
-
-def segment_summary(segments: DataFrame, partition_cols: Sequence[str] = ("video_id", "track_id")) -> DataFrame:
-    """S11/A3: per-track segment counts + total speaking time
-    (extractSpeakingSegments.py:151-175 summary.txt analog).
-    """
-    return (
-        segments.groupBy(*partition_cols)
-        .agg(
-            F.count("*").alias("n_segments"),
-            F.round(F.sum("duration"), 2).alias("total_speaking_s"),
-            F.min("start_ts").alias("first_start_ts"),
-            F.max("end_ts").alias("last_end_ts"),
-        )
-        .orderBy(*partition_cols)
-    )

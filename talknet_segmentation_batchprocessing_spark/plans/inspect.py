@@ -91,24 +91,3 @@ def count_exchanges(df: DataFrame) -> int:
         for line in plan.splitlines()
         if "Exchange hashpartitioning" in line or "Exchange rangepartitioning" in line
     )
-
-
-def bucket_table(
-    df: DataFrame,
-    path: str,
-    table_name: str,
-    bucket_cols: list[str],
-    n_buckets: int = 64,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Write a bucketed table so downstream joins/windows on
-    ``bucket_cols`` are co-located (no Exchange) — the §4 custom-
-    strategy note: co-partition frames/detections/tracks by video_id."""
-    w = (
-        df.write.mode("overwrite")
-        .option("path", path)
-        .bucketBy(n_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table_name)

@@ -3817,9 +3817,8 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _late_bind_rrf() -> None:
     # sim_ivf_topk / sim_pq_topk live in extensions.py; import it first so
-    # this module works when imported directly (e.g. sources/training_out.py
-    # lazily imports dataset_ops) instead of relying on _ensure_loaded's
-    # incidental import order.
+    # this module works when imported directly instead of relying on
+    # _ensure_loaded's incidental import order.
     from . import extensions  # noqa: F401
     from ..registry import REGISTRY
 

@@ -333,11 +333,11 @@ FROM events
 """,
     doc="Z-order (Morton) curve value: interleave the low 12 bits of "
     "two keys into one linearization — the multi-dimensional "
-    "data-skipping layout (sources/zorder.write_zordered sorts the "
-    "write by this value so every parquet file carries a tight "
-    "bounding box in BOTH keys and min/max stats prune on either "
-    "predicate). Pure shift/mask integer arithmetic, whole-stage "
-    "codegen, zero shuffles; bit-identical on both engines",
+    "data-skipping layout key (sorting a write by this value gives "
+    "every parquet file a tight bounding box in BOTH keys, so min/max "
+    "stats prune on either predicate). Pure shift/mask integer "
+    "arithmetic, whole-stage codegen, zero shuffles; bit-identical on "
+    "both engines",
     tags=("X21", "ext"),
 )
 def x21_zorder_value(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -154,6 +154,39 @@ def ext_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MERGE_HASH = "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12)) AS BIGINT)"
 
 
+def merge_frames(target: DataFrame, updates: DataFrame, on: str) -> DataFrame:
+    """MERGE semantics as one relational operator: full outer join on
+    ``on``; matched rows take the update's values (INCLUDING explicit
+    NULLs — the gate is side PRESENCE, not per-column coalesce, so
+    ``UPDATE SET c = NULL`` works and NULL-KEYED rows on either side
+    keep their own payload), unmatched updates insert, unmatched
+    target rows carry over. Adds a ``merge_action`` audit column
+    ('kept' | 'updated' | 'inserted').
+
+    Deviation from SQL MERGE: duplicate keys in ``updates`` fan the
+    full-outer join out into duplicate output rows instead of raising
+    a multiple-match error."""
+    cols = [c for c in target.columns if c != on]
+    # side-presence sentinels: a NULL merge key never joins, so key
+    # nullness cannot distinguish "row absent from this side" from
+    # "row present with a NULL key" — the sentinel can
+    t = target.withColumn("_t_present", F.lit(True)).alias("t")
+    u = updates.withColumn("_u_present", F.lit(True)).alias("u")
+    t_here = F.col("t._t_present").isNotNull()
+    u_here = F.col("u._u_present").isNotNull()
+    action = (
+        F.when(~t_here, "inserted").when(~u_here, "kept").otherwise("updated")
+    )
+    return t.join(u, F.col(f"t.{on}") == F.col(f"u.{on}"), "full_outer").select(
+        F.when(u_here, F.col(f"u.{on}")).otherwise(F.col(f"t.{on}")).alias(on),
+        *[
+            F.when(u_here, F.col(f"u.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
+            for c in cols
+        ],
+        action.alias("merge_action"),
+    )
+
+
 @query(
     "u5_merge_upsert",
     oracle=f"""
@@ -177,9 +210,7 @@ FROM target t FULL OUTER JOIN updates u ON u.doc_id = t.doc_id
     "match, unmatched updates insert, unmatched target rows carry "
     "over — with the per-row merge_action audit column every "
     "incremental-ingest job wants. At scale both sides hash-partition "
-    "on the key (one shuffle each); pair with "
-    "sources/upsert.merge_into for the versioned, atomically-published "
-    "table write",
+    "on the key (one shuffle each)",
     tags=("U5", "ext", "pipeline"),
 )
 def u5_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -192,8 +223,6 @@ def u5_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates = docs.filter(F.col("doc_id") % 3 == 0).select(
         "doc_id", "lang", (F.col("n_chars") + 1000).alias("n_chars")
     )
-    from ..sources.upsert import merge_frames
-
     return merge_frames(target, updates, on="doc_id")
 
 

@@ -341,8 +341,7 @@ FROM s GROUP BY user_id, sid
     "inactivity gaps — the time-based sibling of the W1 islands "
     "(extractSpeakingSegments.py:44-61 run-splitting, gap measured in "
     "event time instead of frame count). Same partitioned two-window "
-    "shape; the batch analog of streaming/pipeline.py's "
-    "session_window extension",
+    "shape",
     tags=("W10", "ext"),
 )
 def w10_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -71,11 +71,6 @@ def get_spark(
     return spark
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str):
-    """Read one driver-generated parquet table (TESTDATA.md)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"

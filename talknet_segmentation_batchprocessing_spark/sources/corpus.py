@@ -84,9 +84,6 @@ def iter_dataset_source(
       consumed and the result is a plain scan of that directory —
       driver memory is bounded by one batch regardless of corpus
       size. This is the corpus-scale path.
-
-    For true incremental processing use streaming.pipeline.readStream
-    on a drop-folder instead.
     """
     it = iter(samples)
     if spill_dir is not None:

@@ -624,8 +624,7 @@ def _compact_layout(
     (live missing, ``.old`` present) is healed on the next entry to any
     index operation by :func:`_recover_layout`, which moves the old —
     only-known-complete — layout back. (On a real object store this is
-    the manifest-swap in sources/upsert.py; local rename suffices
-    here.)
+    a manifest swap; local rename suffices here.)
 
     Returns (files_before, files_after). Folding the per-batch
     fragments into the baseline CLOSES the streaming replay window at
@@ -758,8 +757,8 @@ def compact_ivf_index(
     spark: SparkSession, index_path: str, checkpoint_dir: str | None = None
 ) -> tuple[int, int]:
     """OPTIMIZE for the IVF-Flat index: rewrite the vectors layout so
-    each list is one file (sources/compaction.py's small-files story
-    applied to the ANN index). Streaming ingest (streaming/
+    each list is one file (the small-files OPTIMIZE applied to the ANN
+    index). Streaming ingest (streaming/
     ann_ingest.py) accumulates one file per (micro-batch x touched
     list); probing a list then opens every batch's fragment. See
     :func:`_compact_layout` for the swap/crash/replay-window rules;

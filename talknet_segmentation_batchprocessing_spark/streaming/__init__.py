@@ -1,1 +1,1 @@
-"""Structured Streaming surface (SURVEY.md §2.9)."""
+"""ANN ingest and drift (OPERATIONS.md)."""

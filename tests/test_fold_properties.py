@@ -1,91 +1,11 @@
-"""Hypothesis property tests for the round-5 pure-Python kernels: the
-streaming fold state machines must be BATCHING-INVARIANT (folding the
-event sequence in any chunking, with state carried between calls,
-yields the same final state and the same emitted rows as one pass) —
-that invariance is exactly what makes micro-batch boundaries and
-restarts semantically invisible. Plus the adaptive-CC union-find vs
-the brute-force labeling."""
+"""Hypothesis property tests for pure-Python kernels: the adaptive-CC
+union-find vs the brute-force labeling, and the quotient-split Spearman
+identity quality_rank_agreement evaluates on both engines."""
 
 from __future__ import annotations
 
-import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
-
-
-class _FakeState:
-    def __init__(self):
-        self._v = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-
-_TYPES = ["view", "click", "purchase", "error", "search", None]
-
-
-def _events(min_size=0, max_size=40):
-    return st.lists(
-        st.sampled_from(_TYPES), min_size=min_size, max_size=max_size
-    ).map(lambda ts: [(i * 10, t) for i, t in enumerate(ts)])
-
-
-def _splits(n):
-    return st.lists(st.integers(0, max(0, n)), max_size=4).map(
-        lambda cuts: sorted(set(c for c in cuts if 0 < c < n))
-    )
-
-
-def _chunk(events, cuts):
-    out, prev = [], 0
-    for c in cuts + [len(events)]:
-        out.append(events[prev:c])
-        prev = c
-    return [c for c in out if c]
-
-
-def _run_funnel(chunks):
-    from talknet_segmentation_batchprocessing_spark.streaming.funnel import (
-        _fold_batch,
-    )
-
-    state = _FakeState()
-    rows = []
-    for ch in chunks:
-        pdf = pd.DataFrame(
-            {"us": [u for u, _ in ch], "event_type": [t for _, t in ch]}
-        )
-        rows += [
-            tuple(r)
-            for out in _fold_batch((1,), iter([pdf]), state)
-            for r in out.itertuples(index=False)
-        ]
-    return state._v, rows
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.data())
-def test_funnel_fold_batching_invariant(data):
-    events = data.draw(_events(min_size=1))
-    cuts = data.draw(_splits(len(events)))
-    one_state, one_rows = _run_funnel([events])
-    chunked_state, chunked_rows = _run_funnel(_chunk(events, cuts))
-    assert chunked_state == one_state
-    # the LAST emission (standing funnel row) must agree; chunked runs
-    # may emit intermediate stage rows a single pass never surfaces
-    if one_rows:
-        assert chunked_rows and chunked_rows[-1] == one_rows[-1]
-    # and emissions only ever advance the stage
-    stages = [r[1] for r in chunked_rows]
-    assert stages == sorted(stages)
 
 
 @settings(max_examples=150, deadline=None)
@@ -117,136 +37,6 @@ def test_union_find_labels_match_bruteforce(ne):
     for v in range(n):
         if v not in touched:
             assert want[v] == v
-
-
-def _run_scd2(chunks):
-    from talknet_segmentation_batchprocessing_spark.streaming.scd2 import (
-        _fold_batch,
-    )
-
-    state = _FakeState()
-    rows = []
-    for ch in chunks:
-        pdf = pd.DataFrame(
-            {
-                "us": [u for u, _ in ch],
-                "event_id": [u for u, _ in ch],
-                "event_type": [t for _, t in ch],
-            }
-        )
-        rows += [
-            tuple(r)
-            for out in _fold_batch((1,), iter([pdf]), state)
-            for r in out.itertuples(index=False)
-        ]
-    return state._v, rows
-
-
-def _scd2_reference(events):
-    """One-pass reference: closed [from, to) intervals of equal-type
-    runs, plus the final open interval as state."""
-    closed, cur = [], None
-    for us, typ in events:
-        if cur is None:
-            cur = (typ, us, 1, 1)
-        elif typ == cur[0]:
-            cur = (cur[0], cur[1], cur[2] + 1, cur[3])
-        else:
-            closed.append((1, cur[3], cur[0], cur[1], us, cur[2]))
-            cur = (typ, us, 1, cur[3] + 1)
-    return cur, closed
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.data())
-def test_scd2_fold_batching_invariant(data):
-    """The SCD2 interval fold must emit the same closed intervals in
-    the same order under ANY chunking, end in the same open-interval
-    state, and match the one-pass reference: chunk boundaries (and
-    therefore micro-batch boundaries and restarts) are semantically
-    invisible."""
-    events = data.draw(
-        _events(min_size=0, max_size=40).map(
-            lambda es: [(u, t) for u, t in es if t is not None]
-        )
-    )
-    cuts = data.draw(_splits(len(events)))
-    one_state, one_rows = _run_scd2([events] if events else [])
-    chunked_state, chunked_rows = _run_scd2(_chunk(events, cuts))
-    assert chunked_state == one_state
-    assert chunked_rows == one_rows
-    ref_state, ref_rows = _scd2_reference(events)
-    assert one_state == (tuple(ref_state) if ref_state else None) or (
-        one_state is None and ref_state is None
-    )
-    assert one_rows == ref_rows
-    # interval algebra: closed intervals tile [first_ts, last_change)
-    # with no gaps — each valid_to equals the next valid_from
-    for a, b in zip(one_rows, one_rows[1:]):
-        assert a[4] == b[3]
-        assert a[1] + 1 == b[1]  # versions are consecutive
-
-
-def _run_scd2_changelog(chunks):
-    from talknet_segmentation_batchprocessing_spark.streaming.scd2 import (
-        _fold_batch_full,
-    )
-
-    state = _FakeState()
-    rows = []
-    for ch in chunks:
-        pdf = pd.DataFrame(
-            {
-                "us": [u for u, _ in ch],
-                "event_id": [u for u, _ in ch],
-                "event_type": [t for _, t in ch],
-            }
-        )
-        rows += [
-            tuple(r)
-            for out in _fold_batch_full((1,), iter([pdf]), state)
-            for r in out.itertuples(index=False)
-        ]
-    return state._v, rows
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.data())
-def test_scd2_changelog_table_is_chunking_invariant(data):
-    """The changelog's EMISSIONS differ with chunking (an open row per
-    touched batch) — but keep-last-merged by (user_id, version) the
-    resulting TABLE must be identical under any chunking and equal the
-    one-pass reference history: closed rows plus the final open row.
-    This is the sink's idempotent-upsert algebra."""
-    events = data.draw(
-        _events(min_size=1, max_size=40).map(
-            lambda es: [(u, t) for u, t in es if t is not None]
-        )
-    )
-    if not events:
-        return
-    cuts = data.draw(_splits(len(events)))
-
-    def table(chunks):
-        _, rows = _run_scd2_changelog(chunks)
-        t = {}
-        for r in rows:  # r = (uid, ver, type, from, to, n)
-            t[(r[0], r[1])] = r
-        return t
-
-    one = table([events])
-    chunked = table(_chunk(events, cuts))
-    assert chunked == one
-    ref_open, ref_closed = _scd2_reference(events)
-    want = {(r[0], r[1]): r for r in ref_closed}
-    from talknet_segmentation_batchprocessing_spark.streaming.scd2 import (
-        OPEN_SENTINEL,
-    )
-
-    want[(1, ref_open[3])] = (
-        1, ref_open[3], ref_open[0], ref_open[1], OPEN_SENTINEL, ref_open[2]
-    )
-    assert one == want
 
 
 # ---------------------------------------------------------------------------

@@ -231,6 +231,75 @@ def test_csv_roundtrip_predictions(spark, tmp_path):
     assert "label_id" not in back.columns and "instance_id" not in back.columns
 
 
+def test_read_ava_csv_projects_eval_columns(spark, tmp_path):
+    from talknet_segmentation_batchprocessing_spark.sources.csv_io import (
+        AVA_EVAL_COLUMNS,
+        read_ava_csv,
+    )
+
+    path = tmp_path / "ava.csv"
+    path.write_text(
+        "video_id,frame_timestamp,entity_box_x1,entity_box_y1,entity_box_x2,"
+        "entity_box_y2,label,entity_id,label_id,instance_id\n"
+        "vA,900.56,0.1,0.2,0.3,0.4,SPEAKING_AUDIBLE,vA_0_900_960:1,1,i7\n"
+        "vA,900.6,0.15,0.2,0.35,0.4,NOT_SPEAKING,vA_0_900_960:1,0,i8\n"
+    )
+    df = read_ava_csv(spark, str(path))
+    assert df.columns == list(AVA_EVAL_COLUMNS)
+    rows = df.orderBy("frame_timestamp").collect()
+    assert [r.frame_timestamp for r in rows] == [900.56, 900.6]
+    assert (rows[0].entity_box_x2, rows[0].label) == (0.3, "SPEAKING_AUDIBLE")
+    assert rows[1].entity_id == "vA_0_900_960:1"
+
+
+def test_read_trial_list_parses_label_array(spark, tmp_path):
+    from talknet_segmentation_batchprocessing_spark.sources.csv_io import (
+        read_trial_list,
+    )
+
+    path = tmp_path / "trials.tsv"
+    path.write_text(
+        "vA:e1\t3\t25.0\t[0,1,1]\textra\n"
+        "vB:e2\t2\t25.0\t[1, 0]\textra\n"
+    )
+    rows = {r.data_name: r for r in read_trial_list(spark, str(path)).collect()}
+    assert (rows["vA:e1"].num_frames, rows["vA:e1"].fps) == (3, 25.0)
+    assert rows["vA:e1"].label_array == [0, 1, 1]
+    assert rows["vB:e2"].label_array == [1, 0]
+
+
+def test_read_talkset_list_nine_fields(spark, tmp_path):
+    from talknet_segmentation_batchprocessing_spark.sources.csv_io import (
+        read_talkset_list,
+    )
+
+    path = tmp_path / "talkset.txt"
+    path.write_text(
+        "TAudio id1/a/00001 id1/a/00001 4.5 0 4.5 0 4.5 id1_a_00001\n"
+        "FSilence id2/b/00002 id3/c/00003 6 1.5 6 0 4.5 id2_b_00002\n"
+    )
+    rows = read_talkset_list(spark, str(path)).orderBy("file_id").collect()
+    assert len(rows) == 2 and len(rows[0]) == 9
+    assert tuple(rows[0]) == (
+        "TAudio", "id1/a/00001", "id1/a/00001", 4.5, 0.0, 4.5, 0.0, 4.5,
+        "id1_a_00001",
+    )
+    assert (rows[1].clip_type, rows[1].start_T, rows[1].end_F) == (
+        "FSilence", 1.5, 4.5,
+    )
+
+
+def test_write_if_absent_keeps_first_contents(spark, tmp_path):
+    from talknet_segmentation_batchprocessing_spark.sources.corpus import (
+        write_if_absent,
+    )
+
+    path = str(tmp_path / "copy")
+    write_if_absent(spark.createDataFrame([(1, "first")], "k int, v string"), path)
+    write_if_absent(spark.createDataFrame([(2, "second")], "k int, v string"), path)
+    assert [tuple(r) for r in spark.read.parquet(path).collect()] == [(1, "first")]
+
+
 def test_checkpoint_roundtrip(spark, tmp_path):
     from talknet_segmentation_batchprocessing_spark.sources.checkpoints import (
         checkpoint,

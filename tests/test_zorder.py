@@ -1,27 +1,11 @@
-"""Z-order layout: curve correctness + the data-skipping property.
-
-The skipping claim is tested on the actual parquet FOOTER statistics:
-after write_zordered, the per-file z-ranges must be pairwise disjoint
-(each file is one contiguous curve interval), and a box predicate on
-the ORIGINAL keys must map to a z-interval that excludes most files —
-the exact mechanism a 100 TB scan's filter pushdown uses.
-"""
+"""Z-order curve value (functions/zorder.z_value, behind x21_zorder_value):
+bit interleaving, quadrant locality and exact decodability."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from talknet_segmentation_batchprocessing_spark import registry
 from talknet_segmentation_batchprocessing_spark.functions.zorder import z_value
-from talknet_segmentation_batchprocessing_spark.registry import load
-from talknet_segmentation_batchprocessing_spark.sources.zorder import (
-    file_z_ranges,
-    write_zordered,
-)
-
-from .conftest import SF_SMOKE
-
-registry._ensure_loaded()
 
 
 def test_z_value_interleaves_bits(spark):
@@ -56,50 +40,6 @@ def test_z_value_monotone_locality(spark):
         assert (r.z >> 23) & 1 == (r.y >> 11) & 1
 
 
-def test_zordered_files_are_disjoint_curve_intervals(spark, tmp_path):
-    ev = load(spark, SF_SMOKE, "events").select(
-        "event_id", (F.col("user_id") % 4096).alias("xk"),
-        (F.col("event_id") % 4096).alias("yk"),
-    )
-    out = str(tmp_path / "zev")
-    write_zordered(ev, out, "xk", "yk", n_files=8)
-    ranges = file_z_ranges(out)
-    assert len(ranges) >= 4
-    for (_, hi), (lo2, _) in zip(ranges, ranges[1:]):
-        assert hi <= lo2, f"overlapping file z-ranges: {ranges}"
-
-
-def test_zordered_box_predicate_skips_most_files(spark, tmp_path):
-    """A small box in (xk, yk) maps to a narrow z-interval; with
-    disjoint per-file ranges, footer stats exclude most files. Mirrors
-    what the scan's pushdown does, judged on the same statistics."""
-    ev = load(spark, SF_SMOKE, "events").select(
-        "event_id", (F.col("user_id") % 4096).alias("xk"),
-        (F.col("event_id") % 4096).alias("yk"),
-    )
-    out = str(tmp_path / "zev")
-    write_zordered(ev, out, "xk", "yk", n_files=8)
-    ranges = file_z_ranges(out)
-
-    # box: both keys < 256 (low 8 bits only) -> every interleaved bit
-    # above position 15 is zero -> z < 2^16, a contiguous curve prefix
-    zmax_box = 1 << 16
-    touched = [r for r in ranges if r[0] < zmax_box]
-    assert len(touched) <= max(1, len(ranges) // 2), (
-        f"box predicate should skip most files: {ranges}"
-    )
-
-    # and the layout is not vacuous: the box actually contains rows,
-    # all inside the touched z-interval
-    back = spark.read.parquet(out).filter(
-        (F.col("xk") < 256) & (F.col("yk") < 256)
-    )
-    n = back.count()
-    assert n > 0
-    zs = back.select(F.max("_z")).collect()[0][0]
-    assert zs < zmax_box
-
-
 def test_z_value_bijective_on_12bit_pairs(spark):
     """Round-trip: decode the interleave and recover (x, y) exactly for
     a spread of pairs across the full 12-bit range."""
@@ -114,37 +54,3 @@ def test_z_value_bijective_on_12bit_pairs(spark):
             x |= ((r.z >> (2 * i)) & 1) << i
             y |= ((r.z >> (2 * i + 1)) & 1) << i
         assert (x, y) == (r.x, r.y)
-
-
-def test_file_z_ranges_guards(spark, tmp_path):
-    """ADVICE r4: missing files and absent footer statistics must
-    raise, not AttributeError / silently return []."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import pytest
-
-    from talknet_segmentation_batchprocessing_spark.sources.zorder import (
-        file_z_ranges,
-    )
-
-    with pytest.raises(FileNotFoundError):
-        file_z_ranges(str(tmp_path / "nowhere"))
-
-    # a file written with statistics disabled: prune must refuse
-    nostats = tmp_path / "nostats"
-    nostats.mkdir()
-    pq.write_table(
-        pa.table({"_z": [1, 2, 3]}),
-        str(nostats / "part-0.parquet"),
-        write_statistics=False,
-    )
-    with pytest.raises(ValueError, match="statistics"):
-        file_z_ranges(str(nostats))
-
-    # nested/partitioned layout is found via the recursive glob
-    nested = tmp_path / "nested"
-    (nested / "day=1").mkdir(parents=True)
-    pq.write_table(
-        pa.table({"_z": [5, 9]}), str(nested / "day=1" / "part-0.parquet")
-    )
-    assert file_z_ranges(str(nested)) == [(5, 9)]

@@ -439,7 +439,10 @@ def main() -> int:
             heavy = sys.argv[sys.argv.index("--only") + 1].split(",")
         try:
             with open(out_path) as f:
-                curve = json.load(f).get("queries", {})
+                old = json.load(f).get("queries", {})
+            # every probe measures registered queries only: an entry for
+            # a name no longer registered is stale and is not carried
+            curve = {k: v for k, v in old.items() if k in registry.REGISTRY}
         except Exception:
             pass
     for name in heavy:

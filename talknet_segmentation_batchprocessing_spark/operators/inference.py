@@ -14,13 +14,24 @@ Production: ``model_fn`` deserializes broadcast weights into torch
 once per worker (guarded by a module-level cache), exactly like the
 reference loads ``pretrain_TalkNet.model`` once per process
 (talkNet.py:130-147, M4).
+
+A task runs its independent forwards (the frames of an Arrow batch,
+the tracks of a partition) on a thread pool over that one model:
+numpy releases the GIL inside BLAS and its copy loops, so the
+forwards of one task use the worker's cores without a second copy of
+the weights. Plug-ins are therefore called from several threads at
+once and must be functions of their inputs over read-only weights.
 """
 
 from __future__ import annotations
 
+import ctypes
 import hashlib
+import os
 import weakref
+from collections import deque
 from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
@@ -51,6 +62,28 @@ def _executor_model(model_bc, builder: Callable[[object], object]):
         _MODEL_CACHE.clear()  # at most one resident model per process
         _MODEL_CACHE.update(bc=weakref.ref(model_bc), model=builder(model_bc.value))
     return _MODEL_CACHE["model"]
+
+
+def _forward_threads(cores: int) -> int:
+    """Threads of the pool a task runs its independent forwards on: the
+    cores the session had when the operator built its plan, capped by
+    the CPUs this worker may run on. A ``ThreadPoolExecutor`` starts a
+    thread only when none is idle, so it never runs more than its items.
+
+    glibc gives each pool thread its own malloc arena and, once a large
+    numpy temporary is freed, raises its mmap threshold to that size:
+    from then on every thread's freed activations stay resident for the
+    life of the worker. Pinning the threshold at glibc's default keeps
+    large arrays mmapped, so a freed one goes back to the OS."""
+    try:
+        mallopt = ctypes.CDLL(None).mallopt
+    except (OSError, AttributeError):
+        pass  # not glibc
+    else:
+        mallopt.argtypes, mallopt.restype = [ctypes.c_int, ctypes.c_int], ctypes.c_int
+        mallopt(-3, 128 * 1024)  # M_MMAP_THRESHOLD, glibc's default value
+    cpus = len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count()
+    return max(1, min(cores, cpus or 1))
 
 
 def fake_face_detector(max_faces: int = 3, conf_th: float = 0.9):
@@ -148,6 +181,13 @@ def s3fd_detector(
 
     ``input_size`` is the net input (h, w) — the reference feeds the
     facedetScale=0.25-downscaled frame (demoTalkNet.py:34,121).
+
+    ``detect_faces`` calls ``forward_fn`` from up to one thread per
+    core of a task at once, so it must be a function of its inputs over
+    read-only weights, as ``s3fd_net.s3fd_forward_fn`` is. Without ``forward_batch_fn`` the
+    detector reports ``batched_forward = False``: its ``detect_batch``
+    only maps the per-frame forward, and the operator runs those
+    forwards on its thread pool instead.
     """
     from .s3fd_post import detect_faces_from_heads
 
@@ -197,6 +237,7 @@ def s3fd_detector(
         return [_post(*fwd(im, m)) for im, m in zip(images, metas)]
 
     detect.detect_batch = detect_batch
+    detect.batched_forward = forward_batch_fn is not None
     return detect
 
 
@@ -208,48 +249,54 @@ def detect_faces(
     batch_size: int = 64,
 ) -> DataFrame:
     """M1: frames -> detections, UDTF-shaped (one frame row fans out to
-    N detection rows). ``mapInPandas`` so each Arrow batch is one model
-    forward; the confidence filter (F1, demoTalkNet.py:121 conf_th)
-    applies inside the shell so unqualified boxes never hit the shuffle.
+    N detection rows), via ``mapInPandas``; the confidence filter (F1,
+    demoTalkNet.py:121 conf_th) applies inside the shell so unqualified
+    boxes never hit the shuffle.
+
+    A detector with a real batched forward (``detect_batch``, unless it
+    sets ``batched_forward = False``) gets one call per Arrow batch.
+    Otherwise the per-frame forwards of a batch run on the task's
+    thread pool over the task's one model, so the detector is called
+    from up to ``min(cores, worker CPUs, frames)`` threads at once and
+    must be a function of its inputs over read-only weights.
     """
     from ..deploy import ensure_worker_imports
 
     ensure_worker_imports(frames)
     builder = model_builder or (lambda _state: fake_face_detector())
+    cores = frames.sparkSession.sparkContext.defaultParallelism
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = _executor_model(model_bc, builder)
         batch_call = getattr(model, "detect_batch", None)
-        for pdf in batches:
-            rows = []
-            if batch_call is not None:
-                # one model invocation per Arrow batch — the real-NN
-                # shape (stack the batch into one tensor on GPU)
+        if not getattr(model, "batched_forward", True):
+            batch_call = None
+        with ThreadPoolExecutor(_forward_threads(cores)) as pool:
+            for pdf in batches:
                 vids = pdf["video_id"].tolist()
                 fidx = [int(f) for f in pdf["frame_idx"]]
                 imgs = (
-                    pdf["image"].tolist()
-                    if "image" in pdf.columns
-                    else [None] * len(pdf)
+                    pdf["image"].tolist() if "image" in pdf.columns else [None] * len(pdf)
                 )
-                for vid, f, dets in zip(vids, fidx, batch_call(vids, fidx, imgs)):
-                    for d, x1, y1, x2, y2, conf in dets:
-                        if conf > conf_th:
-                            rows.append((vid, f, d, x1, y1, x2, y2, conf))
-            else:
-                for r in pdf.itertuples(index=False):
-                    image = getattr(r, "image", None)
-                    for det in model(r.video_id, int(r.frame_idx), image):
-                        d, x1, y1, x2, y2, conf = det
-                        if conf > conf_th:
-                            rows.append((r.video_id, int(r.frame_idx), d, x1, y1, x2, y2, conf))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "video_id", "frame_idx", "det_id",
-                    "x1", "y1", "x2", "y2", "conf",
-                ],
-            )
+                if batch_call is not None:
+                    # one model invocation per Arrow batch — the real-NN
+                    # shape (stack the batch into one tensor on GPU)
+                    dets = batch_call(vids, fidx, imgs)
+                else:
+                    dets = pool.map(model, vids, fidx, imgs)
+                rows = [
+                    (vid, f, d, x1, y1, x2, y2, conf)
+                    for vid, f, frame_dets in zip(vids, fidx, dets)
+                    for d, x1, y1, x2, y2, conf in frame_dets
+                    if conf > conf_th
+                ]
+                yield pd.DataFrame(
+                    rows,
+                    columns=[
+                        "video_id", "frame_idx", "det_id",
+                        "x1", "y1", "x2", "y2", "conf",
+                    ],
+                )
 
     cols = [c for c in ("video_id", "frame_idx", "image") if c in frames.columns]
     return frames.select(*cols).mapInPandas(fn, DETECTIONS_SCHEMA)
@@ -286,11 +333,18 @@ def score_tracks(
 ) -> DataFrame:
     """M3: per-track ASD scoring with the duration ensemble.
 
-    ``applyInPandas`` over (video_id, track_id) — the reference scores
-    one whole track at a time (demoTalkNet.py:235-272): for each
-    ensemble duration the track is scored in clips of duration*fps
-    frames (W9), then per-frame scores are averaged over the ensemble
-    and rounded to 1 decimal (A1, X14).
+    The reference scores one whole track at a time
+    (demoTalkNet.py:235-272): for each ensemble duration the track is
+    scored in clips of duration*fps frames (W9), then per-frame scores
+    are averaged over the ensemble and rounded to 1 decimal (A1, X14).
+
+    The rows are hash-partitioned by (video_id, track_id) and sorted
+    by (video_id, track_id, frame_idx) within a partition, so each
+    track's rows arrive contiguous in ``mapInPandas``'s Arrow batches;
+    a track that spans batches is stitched back into one group. The
+    task builds its model once and scores its tracks on a thread pool
+    over it, with at most ``min(cores, worker CPUs)`` tracks in flight,
+    yielding their scores in order.
 
     Scorers built with ``needs_features = True`` (the real numpy
     TalkNet forward, operators/talknet_forward.py) additionally
@@ -304,18 +358,18 @@ def score_tracks(
     shorter than the clip) share one model call, so the ensemble runs
     one forward per distinct clip. Other scorers may depend on the
     duration (``fake_scorer`` hashes it) and are called once per
-    (duration, clip). The model is built once per task.
+    (duration, clip). Every scorer is called from several threads of
+    a task at once, so it must be a function of its inputs over
+    read-only weights.
     """
     from ..deploy import ensure_worker_imports
 
     ensure_worker_imports(track_features)
     builder = model_builder or (lambda _state: fake_scorer())
-    task_model: dict[str, object] = {}  # this task's model, built on first use
+    cores = track_features.sparkSession.sparkContext.defaultParallelism
+    keys = ["video_id", "track_id"]
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not task_model:
-            task_model["model"] = _executor_model(model_bc, builder)
-        model = task_model["model"]
+    def score_track(model, pdf: pd.DataFrame) -> pd.DataFrame:
         needs_features = getattr(model, "needs_features", False)
         video_id = pdf["video_id"].iloc[0]
         track_id = int(pdf["track_id"].iloc[0])
@@ -361,9 +415,42 @@ def score_tracks(
             }
         )
 
-    return track_features.groupBy("video_id", "track_id").applyInPandas(
-        fn, SCORES_SCHEMA
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        model = _executor_model(model_bc, builder)
+        n = _forward_threads(cores)
+        with ThreadPoolExecutor(n) as pool:
+            in_flight = deque()
+            for group in _key_groups(batches, keys):
+                in_flight.append(pool.submit(score_track, model, group))
+                if len(in_flight) == n:
+                    yield in_flight.popleft().result()
+            while in_flight:
+                yield in_flight.popleft().result()
+
+    return (
+        track_features.repartition(*keys)
+        .sortWithinPartitions(*keys, "frame_idx")
+        .mapInPandas(fn, SCORES_SCHEMA)
     )
+
+
+def _key_groups(batches: Iterator[pd.DataFrame], keys: list[str]) -> Iterator[pd.DataFrame]:
+    """The rows of each key of key-sorted ``batches`` as one frame, in
+    order; a key whose rows span batches is stitched into one group."""
+
+    def same(a, b):
+        return all(x == y or (pd.isna(x) and pd.isna(y)) for x, y in zip(a, b))
+
+    held, held_key = [], None
+    for pdf in batches:
+        for key, g in pdf.groupby(keys, sort=False, dropna=False):
+            if held and not same(key, held_key):
+                yield pd.concat(held)
+                held = []
+            held.append(g)
+            held_key = key
+    if held:
+        yield pd.concat(held)
 
 
 def broadcast_weights(spark, state: bytes):

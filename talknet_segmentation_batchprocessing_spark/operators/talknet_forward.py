@@ -487,7 +487,10 @@ def talknet_scorer(weights: dict | None = None, seed: int = 7):
     the real tensors instead of only (ids, duration). The score is a
     function of those clip tensors only (the ids and duration are
     ignored), which lets the shell call it once per distinct clip
-    across the duration ensemble."""
+    across the duration ensemble. The forward only reads ``w``, so
+    ``score_tracks`` may call one scorer from several threads of a
+    task at once; keep any replacement forward free of shared mutable
+    state for the same reason."""
     w = weights if weights is not None else init_weights(seed)
 
     def score(video_id, track_id, frame_idx, duration, audio=None, video=None):

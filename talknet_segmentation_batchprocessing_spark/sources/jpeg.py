@@ -19,6 +19,7 @@ Anything else raises naming the unsupported field.
 from __future__ import annotations
 
 import struct
+from functools import lru_cache
 
 import numpy as np
 
@@ -97,14 +98,20 @@ def _huff_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
     return out
 
 
-def _huff_decode_table(
-    bits: list[int], vals: list[int]
-) -> dict[tuple[int, int], int]:
-    """(length, code) -> symbol, for the decoder."""
-    return {
-        (length, code): sym
-        for sym, (code, length) in _huff_codes(bits, vals).items()
-    }
+@lru_cache(maxsize=16)
+def _huff_lut(bits: bytes, vals: bytes) -> tuple[int, ...]:
+    """The decoder's 16-bit peek table: entry ``w`` for the next 16 bits
+    ``w`` of the scan is ``symbol << 5 | length`` of the code that
+    prefixes ``w``, or 0 if no code does. Shorter codes win, as in a
+    bit-by-bit walk."""
+    lut = [0] * 65536
+    codes = sorted(_huff_codes(list(bits), list(vals)).items(), key=lambda c: -c[1][1])
+    for sym, (code, length) in codes:
+        if code >> length:  # overfull BITS: the code does not fit
+            continue
+        lo = code << (16 - length)
+        lut[lo : lo + (1 << (16 - length))] = [(sym << 5) | length] * (1 << (16 - length))
+    return tuple(lut)  # cached and shared by every decode: read-only
 
 
 # orthonormal DCT-II basis: Y = C @ X @ C.T is exactly the JPEG FDCT
@@ -225,60 +232,39 @@ def encode_gray_jpeg(img: np.ndarray, quality: int = 85) -> bytes:
     return b"\xff\xd8" + app0 + dqt + sof0 + dht + sos + entropy + b"\xff\xd9"
 
 
-class _BitReader:
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def _fill(self) -> None:
-        b = self.data[self.pos]
-        self.pos += 1
-        if b == 0xFF:
-            nxt = self.data[self.pos] if self.pos < len(self.data) else 0xD9
-            if nxt == 0x00:
-                self.pos += 1  # unstuff
-            else:  # a marker: entropy data over — feed 1-padding
-                self.pos -= 1
-                b = 0xFF
-                self.data = self.data[: self.pos]  # stop consuming
-        self.acc = (self.acc << 8) | b
-        self.nbits += 8
-
-    def bit(self) -> int:
-        if not self.nbits:
-            if self.pos >= len(self.data):
-                return 1  # spec pad bits
-            self._fill()
-        self.nbits -= 1
-        return (self.acc >> self.nbits) & 1
-
-    def bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.bit()
-        return v
-
-
-def _receive_extend(br: _BitReader, s: int) -> int:
-    if s == 0:
-        return 0
-    v = br.bits(s)
-    return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
+def _scan_windows(scan: bytes) -> list[int]:
+    """Entropy-coded segment -> 32-bit big-endian windows, one per byte
+    offset, over the unstuffed bytes up to the first marker and then
+    1-bits (the spec's padding)."""
+    end = 0
+    while True:
+        end = scan.find(b"\xff", end)
+        if end < 0:
+            end = len(scan)
+            break
+        if end + 1 < len(scan) and scan[end + 1] == 0x00:
+            end += 2
+            continue
+        break
+    b = np.frombuffer(
+        scan[:end].replace(b"\xff\x00", b"\xff") + b"\xff" * 4, dtype=np.uint8
+    ).astype(np.int64)
+    return ((b[:-3] << 24) | (b[1:-2] << 16) | (b[2:-1] << 8) | b[3:]).tolist()
 
 
 def decode_gray_jpeg(data: bytes) -> np.ndarray:
     """Baseline JFIF JPEG bytes -> (h, w) uint8 grayscale array.
 
     Reads the tables FROM THE FILE (DQT/DHT/SOF0), so it decodes any
-    single-component baseline JPEG, not just this module's output."""
+    single-component baseline JPEG, not just this module's output.
+    Each Huffman symbol is one lookup of the next 16 scan bits in a
+    peek table; the IDCT runs once over all blocks."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG stream (no SOI)")
     pos = 2
     qts: dict[int, np.ndarray] = {}
-    dc_tables: dict[int, dict] = {}
-    ac_tables: dict[int, dict] = {}
+    dc_tables: dict[int, tuple] = {}
+    ac_tables: dict[int, tuple] = {}
     h = w = 0
     comp_q = comp_dc = comp_ac = 0
     scan_start = None
@@ -305,12 +291,10 @@ def decode_gray_jpeg(data: bytes) -> np.ndarray:
             o = 0
             while o < len(body):
                 tc, th = body[o] >> 4, body[o] & 0xF
-                bits = list(body[o + 1 : o + 17])
+                bits = bytes(body[o + 1 : o + 17])
                 n = sum(bits)
-                vals = list(body[o + 17 : o + 17 + n])
-                (ac_tables if tc else dc_tables)[th] = _huff_decode_table(
-                    bits, vals
-                )
+                vals = bytes(body[o + 17 : o + 17 + n])
+                (ac_tables if tc else dc_tables)[th] = _huff_lut(bits, vals)
                 o += 17 + n
         elif marker == 0xC0:
             precision = body[0]
@@ -337,43 +321,71 @@ def decode_gray_jpeg(data: bytes) -> np.ndarray:
     qt2d = qts[comp_q].reshape(8, 8).astype(np.float64)
     dct = dc_tables[comp_dc]
     act = ac_tables[comp_ac]
-    br = _BitReader(data[scan_start:])
+    win = _scan_windows(data[scan_start:])
+    n_win = len(win)
+    ones = 0xFFFFFFFF  # past the last window the scan is all pad bits
 
-    def read_symbol(table: dict) -> int:
-        code, length = 0, 0
-        while length <= 16:
-            code = (code << 1) | br.bit()
-            length += 1
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid Huffman code in entropy stream")
+    def take(p: int, n: int) -> int:
+        """``n`` scan bits from bit ``p`` (any ``n``: a file's DC table
+        may carry sizes past the window)."""
+        v = 0
+        while n:
+            k = min(n, 16)
+            i = p >> 3
+            v = (v << k) | (((win[i] if i < n_win else ones) >> (32 - (p & 7) - k)) & ((1 << k) - 1))
+            p += k
+            n -= k
+        return v
 
     ph, pw = (h + 7) & ~7, (w + 7) & ~7
-    out = np.zeros((ph, pw), dtype=np.float64)
+    n_blocks = (ph // 8) * (pw // 8)
+    zigzag = _ZIGZAG.tolist()
+    dcs = []
+    ac_at: list[int] = []  # flat natural index of each nonzero AC coefficient
+    ac_val: list[int] = []
     prev_dc = 0
-    for by in range(0, ph, 8):
-        for bx in range(0, pw, 8):
-            zz = np.zeros(64, dtype=np.int64)
-            s = read_symbol(dct)
-            prev_dc += _receive_extend(br, s)
-            zz[0] = prev_dc
-            k = 1
-            while k < 64:
-                rs = read_symbol(act)
-                run, size = rs >> 4, rs & 0xF
-                if size == 0:
-                    if run == 15:  # ZRL
-                        k += 16
-                        continue
-                    break  # EOB
-                k += run
-                if k > 63:
-                    raise ValueError("AC run past end of block")
-                zz[k] = _receive_extend(br, size)
-                k += 1
-            coef = np.zeros(64, dtype=np.float64)
-            coef[_ZIGZAG] = zz
-            block = _C.T @ (coef.reshape(8, 8) * qt2d) @ _C
-            out[by : by + 8, bx : bx + 8] = block + 128.0
+    p = 0  # bit position in the unstuffed scan
+    for blk in range(n_blocks):
+        i = p >> 3
+        e = dct[((win[i] if i < n_win else ones) >> (16 - (p & 7))) & 0xFFFF]
+        if not e:
+            raise ValueError("invalid Huffman code in entropy stream")
+        p += e & 31
+        s = e >> 5
+        if s:
+            v = take(p, s)
+            p += s
+            prev_dc += v if v >= (1 << (s - 1)) else v - (1 << s) + 1
+        dcs.append(prev_dc)
+        base = blk * 64
+        k = 1
+        while k < 64:
+            i = p >> 3
+            e = act[((win[i] if i < n_win else ones) >> (16 - (p & 7))) & 0xFFFF]
+            if not e:
+                raise ValueError("invalid Huffman code in entropy stream")
+            p += e & 31
+            rs = e >> 5
+            run, size = rs >> 4, rs & 0xF
+            if size == 0:
+                if run == 15:  # ZRL
+                    k += 16
+                    continue
+                break  # EOB
+            k += run
+            if k > 63:
+                raise ValueError("AC run past end of block")
+            # receive/extend from the same window: size <= 15, offset <= 7
+            i = p >> 3
+            v = ((win[i] if i < n_win else ones) >> (32 - (p & 7) - size)) & ((1 << size) - 1)
+            p += size
+            ac_at.append(base + zigzag[k])
+            ac_val.append(v if v >= (1 << (size - 1)) else v - (1 << size) + 1)
+            k += 1
+    zz = np.zeros(n_blocks * 64, dtype=np.int64)
+    zz[::64] = dcs
+    zz[ac_at] = ac_val
+    coef = zz.astype(np.float64).reshape(n_blocks, 8, 8) * qt2d
+    blocks = np.matmul(np.matmul(_C.T, coef), _C) + 128.0
+    out = blocks.reshape(ph // 8, pw // 8, 8, 8).transpose(0, 2, 1, 3).reshape(ph, pw)
     return np.clip(np.round(out), 0, 255).astype(np.uint8)[:h, :w]

@@ -463,3 +463,43 @@ def test_video_corpus_stream_rate_limit_and_resume(spark, tmp_path):
     ids = sorted(r["video_id"] for r in out)
     # resume processed ONLY the two new files (no clip000-002 dupes)
     assert ids == [f"clip{i:03d}" for i in range(5)]
+
+
+def test_detect_faces_runs_frames_of_a_batch_at_once(spark):
+    """A per-frame detector whose calls wait at a two-party barrier:
+    the one-partition batch only finishes if the task's pool runs two
+    frames at the same time. A serial task breaks the barrier after
+    30 s and fails instead of hanging."""
+    from talknet_segmentation_batchprocessing_spark.operators.inference import (
+        detect_faces,
+        fake_face_detector,
+    )
+
+    if spark.sparkContext.defaultParallelism < 2 or len(os.sched_getaffinity(0)) < 2:
+        pytest.skip("the forward pool needs two cores")
+    calls = spark.sparkContext.accumulator(0)
+
+    def build(_state):
+        import threading
+
+        meet = threading.Barrier(2, timeout=30)
+        detect = fake_face_detector()
+
+        def counted(video_id, frame_idx, image):
+            meet.wait()
+            calls.add(1)
+            return detect(video_id, frame_idx, image)
+
+        return counted
+
+    frames = spark.createDataFrame(
+        [("vidA", f) for f in range(4)], "video_id string, frame_idx int"
+    ).coalesce(1)
+    dets = detect_faces(frames, model_builder=build, conf_th=0.0).toPandas()
+    assert calls.value == 4
+    want = detect_faces(frames, conf_th=0.0).toPandas()
+    key = ["video_id", "frame_idx", "det_id"]
+    pd.testing.assert_frame_equal(
+        dets.sort_values(key).reset_index(drop=True),
+        want.sort_values(key).reset_index(drop=True),
+    )

@@ -362,3 +362,119 @@ def test_score_tracks_calls_duration_aware_scorer_per_pair(spark):
                 acc[s : s + clip] += score("v", t, frames[s : s + clip], dur)
         got = out[out.track_id == t].sort_values("frame_idx").score.tolist()
         assert got == [round(float(v), 1) for v in acc / len(DURATION_SET)]
+
+
+def _two_cores(spark):
+    import os
+
+    if spark.sparkContext.defaultParallelism < 2 or len(os.sched_getaffinity(0)) < 2:
+        pytest.skip("the forward pool needs two cores")
+
+
+def test_score_tracks_scores_tracks_of_one_task_at_once(spark):
+    """Two tracks in one shuffle partition: every scorer call waits at a
+    two-party barrier, so the batch only finishes if the task's pool
+    scores both tracks at the same time. A serial task breaks the
+    barrier after 30 s and fails instead of hanging."""
+    from talknet_segmentation_batchprocessing_spark.operators.inference import (
+        DURATION_SET,
+        fake_scorer,
+        score_tracks,
+    )
+
+    _two_cores(spark)
+    calls = spark.sparkContext.accumulator(0)
+
+    def build(_state):
+        import threading
+
+        meet = threading.Barrier(2, timeout=30)
+        score = fake_scorer()
+
+        def counted(*args):
+            meet.wait()
+            calls.add(1)
+            return score(*args)
+
+        return counted
+
+    df = spark.createDataFrame(
+        [("v", t, f) for t in (0, 1) for f in range(60)],
+        "video_id string, track_id int, frame_idx int",
+    )
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        out = score_tracks(df, model_builder=build).toPandas()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert len(out) == 120
+    assert calls.value == 2 * 9
+    want = score_tracks(df, durations=DURATION_SET).toPandas()
+    key = ["track_id", "frame_idx"]
+    assert out.sort_values(key).score.tolist() == want.sort_values(key).score.tolist()
+
+
+def test_score_tracks_stitches_tracks_across_arrow_batches(spark):
+    """3 tracks x 20 frames, shuffled, in one partition read in Arrow
+    batches of 7 rows: every track spans batches, and its scores equal
+    a plain per-track loop exactly. The scorer adds the clip length to
+    each frame's score, so a track scored in pieces would differ."""
+    import random
+
+    from talknet_segmentation_batchprocessing_spark.operators.inference import (
+        DURATION_SET,
+        fake_scorer,
+        score_tracks,
+    )
+
+    def clip_scorer():
+        score = fake_scorer()
+        return lambda v, t, idx, dur: score(v, t, idx, dur) + len(idx) / 8
+
+    rows = [("v", t, f) for t in (0, 1, 2) for f in range(20)]
+    random.Random(3).shuffle(rows)
+    df = spark.createDataFrame(rows, "video_id string, track_id int, frame_idx int")
+    conf = {
+        "spark.sql.shuffle.partitions": "1",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "7",
+    }
+    prev = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        out = score_tracks(df, model_builder=lambda _s: clip_scorer(), fps=4.0).toPandas()
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    assert len(out) == 60
+
+    score = clip_scorer()
+    frames = np.arange(20)
+    for t in (0, 1, 2):
+        acc = np.zeros(20)
+        for dur in DURATION_SET:
+            clip = dur * 4
+            for s in range(0, 20, clip):
+                acc[s : s + clip] += score("v", t, frames[s : s + clip], dur)
+        got = out[out.track_id == t].sort_values("frame_idx")
+        assert got.frame_idx.tolist() == list(range(20))
+        assert got.score.tolist() == [round(float(v), 1) for v in acc / len(DURATION_SET)]
+
+
+def test_score_tracks_plan_is_one_exchange_and_map_in_pandas(spark):
+    """Scoring is a (video_id, track_id) hash exchange, a sort and one
+    MapInPandas over the task's pool; no grouped-map stage remains."""
+    from talknet_segmentation_batchprocessing_spark.operators.inference import (
+        score_tracks,
+    )
+
+    df = spark.createDataFrame(
+        [("v", t, f) for t in (0, 1) for f in range(5)],
+        "video_id string, track_id int, frame_idx int",
+    )
+    plan = score_tracks(df)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning(video_id") == 1
+    assert "Exchange hashpartitioning(video_id#" in plan
+    assert plan.count("MapInPandas") == 1
+    assert "FlatMapGroupsInPandas" not in plan

@@ -196,8 +196,9 @@ def main() -> None:
     # multi-second host pauses (observed 40-50s stalls). Back-to-back
     # repeats of one query can all land inside a single stall;
     # interleaving the passes means a stall inflates at most one pass
-    # per query, and the min discards it. Cache is cleared before
-    # every run so every measurement is a cold plan. (Was 3 passes
+    # per query, and the min discards it. Spark's cache and the
+    # registry's tracked persists are dropped before every run so
+    # every measurement is a cold plan. (Was 3 passes
     # through round 9; the round-10 measured-exclusion sweep grew the
     # headline set 145 -> 172, so the third pass — whose min almost
     # always matched pass 2, both being warm-JIT — was dropped to keep
@@ -205,29 +206,13 @@ def main() -> None:
     timings: dict[str, float] = {}
     pass_times: dict[str, list[float]] = {}
 
-    def drop_session_tables() -> None:
-        # the graph family publishes session-scoped edge tables
-        # (bucketed catalog tables, or memoized checkpointed frames on
-        # the small-graph path) and reuses them on repeat invocations
-        # (the documented pay-once posture) — drop BOTH caches per
-        # measurement so the bench keeps reporting the full
-        # build+consume cost, not the cache hit
-        from talknet_segmentation_batchprocessing_spark.queries.extensions import (
-            release_graph_frames,
-        )
-
-        release_graph_frames()
-        for t in spark.catalog.listTables():
-            if t.name.startswith(("graph_oriented_edges", "graph_sym_edges")):
-                spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-
     for _ in range(n_passes):
         for name in headline:
             spec = registry.REGISTRY.get(name)
             if spec is None:
                 continue
             spark.catalog.clearCache()
-            drop_session_tables()
+            registry.release_persisted()
             t0 = time.perf_counter()
             spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             elapsed = time.perf_counter() - t0
@@ -276,7 +261,7 @@ def main() -> None:
                 if attempt == 2 and best / calib < _EXCLUDE_MAX_CALIB_UNITS:
                     break
                 spark.catalog.clearCache()
-                drop_session_tables()
+                registry.release_persisted()
                 t0 = time.perf_counter()
                 spec.fn(spark, sf_dir).write.format("noop").mode(
                     "overwrite"
@@ -321,7 +306,6 @@ def main() -> None:
                     if name in sf1_errors:
                         continue
                     spark.catalog.clearCache()
-                    drop_session_tables()
                     registry.release_persisted()
                     # per query, so one failure keeps the other timings
                     try:

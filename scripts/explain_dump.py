@@ -40,12 +40,10 @@ def main() -> None:
     assert not unknown, f"unknown queries: {sorted(unknown)}"
 
     for name in args.names:
+        # same reset as bench.py, so the captured plan is the one the
+        # bench times
         spark.catalog.clearCache()
-        # session-scoped graph tables would make the captured plan a
-        # cache-hit scan instead of the full build path the bench times
-        for t in spark.catalog.listTables():
-            if t.name.startswith(("graph_oriented_edges", "graph_sym_edges")):
-                spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+        registry.release_persisted()
         df = registry.REGISTRY[name].fn(spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"

@@ -7,8 +7,8 @@ Usage:
 Unlike ``bench.py --only`` this accepts ANY registered query (including
 BENCH_EXCLUDED ones) and never writes the round's detail file — it is
 the iterate-fast tool for the optimization loop, not the round record.
-Protocol matches bench.py: noop sink, cache cleared per measurement,
-graph session tables dropped, round-robin passes, min reported.
+Protocol matches bench.py: noop sink, Spark cache and tracked persists
+dropped per measurement, round-robin passes, min reported.
 """
 
 from __future__ import annotations
@@ -45,17 +45,10 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     passes: dict[str, list[float]] = {}
-    from talknet_segmentation_batchprocessing_spark.queries.extensions import (
-        release_graph_frames,
-    )
-
     for _ in range(args.passes):
         for name in args.names:
             spark.catalog.clearCache()
-            release_graph_frames()
-            for t in spark.catalog.listTables():
-                if t.name.startswith(("graph_oriented_edges", "graph_sym_edges")):
-                    spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+            registry.release_persisted()
             spark.sparkContext.setJobDescription(f"probe: {name}")
             t0 = time.perf_counter()
             registry.REGISTRY[name].fn(spark, sf_dir).write.format(

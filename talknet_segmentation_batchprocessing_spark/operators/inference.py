@@ -167,7 +167,6 @@ def s3fd_detector(
     forward_fn: Callable = None,
     input_size: tuple[int, int] = (270, 480),
     conf_th: float = 0.8,
-    forward_batch_fn: Callable = None,
 ):
     """M1 detector with REAL post-processing: anchor priors, center-offset
     box decode, per-class sorted NMS, conf_th walk, and the final
@@ -184,10 +183,7 @@ def s3fd_detector(
 
     ``detect_faces`` calls ``forward_fn`` from up to one thread per
     core of a task at once, so it must be a function of its inputs over
-    read-only weights, as ``s3fd_net.s3fd_forward_fn`` is. Without ``forward_batch_fn`` the
-    detector reports ``batched_forward = False``: its ``detect_batch``
-    only maps the per-frame forward, and the operator runs those
-    forwards on its thread pool instead.
+    read-only weights, as ``s3fd_net.s3fd_forward_fn`` is.
     """
     from .s3fd_post import detect_faces_from_heads
 
@@ -207,37 +203,6 @@ def s3fd_detector(
         # element: the actual head grid sizes the priors follow
         return _post(*fwd(image, (video_id, frame_idx)))
 
-    def detect_batch(video_ids, frame_idxs, images):
-        """One forward per ARROW BATCH, not per row: a torch-backed
-        ``forward_batch_fn(images, metas) -> (locs, confs)`` or
-        ``(locs, confs, fmaps)`` stacks the whole batch into one tensor
-        (the GPU-efficient shape); a 3rd element carries the per-image
-        head grids, same as the single-frame path. The fallback maps
-        the single-image forward."""
-        metas = list(zip(video_ids, frame_idxs))
-        if forward_batch_fn is not None:
-            out = forward_batch_fn(images, metas)
-            if len(out) == 3:
-                locs, confs, fmaps = out
-                # fmaps is either ONE per-scale grid list shared by the
-                # whole batch (what s3fd_net.forward returns — elements
-                # are (h, w) pairs) or one such list per image;
-                # normalize by inspecting the first element's shape.
-                fmaps = list(fmaps)
-                shared = bool(fmaps) and len(fmaps[0]) == 2 and not hasattr(
-                    fmaps[0][0], "__len__"
-                )
-                if shared:
-                    fmaps = [fmaps] * len(locs)
-                return [
-                    _post(lo, co, fm) for lo, co, fm in zip(locs, confs, fmaps)
-                ]
-            locs, confs = out
-            return [_post(lo, co) for lo, co in zip(locs, confs)]
-        return [_post(*fwd(im, m)) for im, m in zip(images, metas)]
-
-    detect.detect_batch = detect_batch
-    detect.batched_forward = forward_batch_fn is not None
     return detect
 
 
@@ -246,19 +211,16 @@ def detect_faces(
     model_bc=None,
     model_builder: Callable = None,
     conf_th: float = 0.9,
-    batch_size: int = 64,
 ) -> DataFrame:
     """M1: frames -> detections, UDTF-shaped (one frame row fans out to
     N detection rows), via ``mapInPandas``; the confidence filter (F1,
     demoTalkNet.py:121 conf_th) applies inside the shell so unqualified
     boxes never hit the shuffle.
 
-    A detector with a real batched forward (``detect_batch``, unless it
-    sets ``batched_forward = False``) gets one call per Arrow batch.
-    Otherwise the per-frame forwards of a batch run on the task's
-    thread pool over the task's one model, so the detector is called
-    from up to ``min(cores, worker CPUs, frames)`` threads at once and
-    must be a function of its inputs over read-only weights.
+    The per-frame forwards of a batch run on the task's thread pool
+    over the task's one model, so the detector is called from up to
+    ``min(cores, worker CPUs, frames)`` threads at once and must be a
+    function of its inputs over read-only weights.
     """
     from ..deploy import ensure_worker_imports
 
@@ -268,9 +230,6 @@ def detect_faces(
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = _executor_model(model_bc, builder)
-        batch_call = getattr(model, "detect_batch", None)
-        if not getattr(model, "batched_forward", True):
-            batch_call = None
         with ThreadPoolExecutor(_forward_threads(cores)) as pool:
             for pdf in batches:
                 vids = pdf["video_id"].tolist()
@@ -278,12 +237,7 @@ def detect_faces(
                 imgs = (
                     pdf["image"].tolist() if "image" in pdf.columns else [None] * len(pdf)
                 )
-                if batch_call is not None:
-                    # one model invocation per Arrow batch — the real-NN
-                    # shape (stack the batch into one tensor on GPU)
-                    dets = batch_call(vids, fidx, imgs)
-                else:
-                    dets = pool.map(model, vids, fidx, imgs)
+                dets = pool.map(model, vids, fidx, imgs)
                 rows = [
                     (vid, f, d, x1, y1, x2, y2, conf)
                     for vid, f, frame_dets in zip(vids, fidx, dets)

@@ -19,21 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-IMAGE_META_SCHEMA = (
-    "doc_id long, byte_len int, content_sha string, height int, width int"
-)
 FEATURES_SCHEMA = "doc_id long, feature array<float>"
-
-
-def attach_binary_meta(df: DataFrame, binary_col: str, id_col: str) -> DataFrame:
-    """Typed metadata for an opaque binary column — pure JVM columns,
-    no UDF: length + content hash (dedup key / integrity)."""
-    b = F.col(binary_col)
-    return df.select(
-        F.col(id_col),
-        F.octet_length(b).alias("byte_len"),
-        F.sha2(b, 256).alias("content_sha"),
-    )
 
 
 def fake_image_decoder(height: int = 16, width: int = 16):

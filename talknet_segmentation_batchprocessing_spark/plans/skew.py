@@ -51,21 +51,3 @@ def salted_agg(
     return partial.groupBy(*group_cols).agg(
         *[merge(n).alias(n) for n, (_, merge) in aggs.items()]
     )
-
-
-def salted_broadcast_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: Sequence[str],
-    n_salts: int = 16,
-) -> DataFrame:
-    """Hot-key equi-join: replicate the small side across salts and
-    join on (keys, salt) so one hot key spreads over n_salts tasks.
-    (Only needed when the small side is too big for a plain broadcast
-    but the key histogram is skewed; with a true dim table, plain
-    ``F.broadcast`` wins.)"""
-    keys = list(on)
-    salts = big.sparkSession.range(n_salts).select(F.col("id").cast("int").alias("_salt"))
-    small_rep = small.crossJoin(F.broadcast(salts))
-    big_s = with_salt(big, n_salts)
-    return big_s.join(small_rep, keys + ["_salt"]).drop("_salt")

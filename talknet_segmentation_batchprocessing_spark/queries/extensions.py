@@ -245,27 +245,10 @@ _GRAPH_BUCKETS = 8  # scale knob: pick O(cluster cores) at 100 TB
 _GRAPH_PUBLISH_THRESHOLD = 1_000_000
 
 
-# Small-graph publication memo (round-13, ADVICE r12): the checkpointed
-# broadcast frame analog of the catalog-table cache below. Keyed by the
-# same session+source-scoped table name, so triangle-then-pagerank in
-# one session pays the near-dup edge build ONCE like the bucketed path
-# always did. Checkpointing pins only a few hundred small partitions
-# per (session, sf_dir); benchmarks clear it per measurement via
-# release_graph_frames() exactly as they drop the catalog tables.
-_GRAPH_FRAMES: dict[str, tuple[DataFrame, int]] = {}
-
-
-def release_graph_frames() -> None:
-    """Drop the memoized small-graph frames (bench/probe honesty hook:
-    called wherever the graph catalog tables are dropped, so every
-    measurement pays the full build+consume cost)."""
-    _GRAPH_FRAMES.clear()
-
-
 def _graph_table_name(spark: SparkSession, base: str, sf_dir: str) -> str:
     """Session+source-scoped catalog name: concurrent sessions each
-    write their own table, and the sf_dir hash keys the cache so the
-    same session can serve multiple source dirs."""
+    write their own table, and the sf_dir hash keeps one session's
+    tables for different source dirs apart."""
     import hashlib
     import re
 
@@ -275,9 +258,9 @@ def _graph_table_name(spark: SparkSession, base: str, sf_dir: str) -> str:
 
 
 def _write_graph_table(
-    spark: SparkSession, build, base: str, key: str, sf_dir: str
+    spark: SparkSession, edges: DataFrame, base: str, key: str, sf_dir: str
 ) -> DataFrame:
-    """Publish ``build()`` as a bucketed+bucket-sorted parquet table on
+    """Publish ``edges`` as a bucketed+bucket-sorted parquet table on
     ``key`` (sources/bucketed.py) and return the catalog scan. Every
     downstream self-join / keyed join on ``key`` then plans with ZERO
     exchange on the table side — the pay-the-shuffle-once storage
@@ -285,31 +268,13 @@ def _write_graph_table(
     job and consumed by wedge/close/iteration joins that would
     otherwise each re-shuffle it.
 
-    Within a session the table is built AT MOST ONCE per source dir
-    (testdata is immutable for a session's lifetime) on BOTH
-    publication paths: the bucketed catalog table is found via
-    ``tableExists``, and the small-graph checkpointed frame is memoized
-    in ``_GRAPH_FRAMES`` under the same session+source-scoped name —
-    repeat invocations (pagerank after triangle, a second analytics
-    pass) reuse the stored partitions without recomputing the
-    similarity chain or re-running the sizing count. ``build`` is a
-    thunk so a cache hit skips plan construction entirely. bench.py /
-    probe_time.py / scale_probe.py drop BOTH caches per measurement
-    (:func:`release_graph_frames`) so benchmarks keep reporting the
-    full build+consume cost."""
+    Every call builds and publishes afresh (the bucketed table is
+    overwritten): nothing is reused across queries."""
     import os
     import tempfile
 
     from ..sources.bucketed import write_bucketed
 
-    name = _graph_table_name(spark, base, sf_dir)
-    # the memo holds the frame's row count, so a hit answers only while
-    # the small-graph branch still applies at the current threshold
-    cached = _GRAPH_FRAMES.get(name)
-    if cached is not None and cached[1] <= _GRAPH_PUBLISH_THRESHOLD:
-        return cached[0]
-    if spark.catalog.tableExists(name):
-        return spark.table(name)
     # ADAPTIVE publication (round-12), mirroring the CC operator's
     # local_threshold switch: below the threshold the edge table is
     # broadcast-sized, so every downstream keyed join beats the
@@ -322,7 +287,7 @@ def _write_graph_table(
     # regime — the bucketed zero-exchange publication engages exactly
     # as before. Results are unaffected either way (storage layout
     # only).
-    df = build().localCheckpoint(eager=False)
+    df = edges.localCheckpoint(eager=False)
     n_edges = df.count()
     if n_edges <= _GRAPH_PUBLISH_THRESHOLD:
         # broadcast hint: the checkpointed RDD carries no size stats,
@@ -331,9 +296,8 @@ def _write_graph_table(
         # but the frame is broadcast-sized BY CONSTRUCTION here (the
         # threshold is the point of this branch), so hint it and let
         # the wedge/iteration joins plan exchange-free up front.
-        out = F.broadcast(df)
-        _GRAPH_FRAMES[name] = (out, n_edges)
-        return out
+        return F.broadcast(df)
+    name = _graph_table_name(spark, base, sf_dir)
     path = os.path.join(
         tempfile.gettempdir(), "spark_graft_graph_tables", name
     )
@@ -349,7 +313,7 @@ def _oriented_edges_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     32-bit-bounded here; at larger id domains pack a struct key."""
     return _write_graph_table(
         spark,
-        lambda: _build_oriented_edges(spark, sf_dir),
+        _build_oriented_edges(spark, sf_dir),
         "graph_oriented_edges",
         "s_rk",
         sf_dir,
@@ -389,16 +353,12 @@ def _sym_edges_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetrized, degree-annotated edge table (u, v, d) bucketed on
     ``u``: the per-iteration rank join in PageRank reads matching
     buckets directly — only the (tiny) rank vector moves per round."""
-
-    def build() -> DataFrame:
-        e = _near_dup_edges(spark, sf_dir)
-        ed = e.select(
-            F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-        ).unionAll(e.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
-        deg = ed.groupBy("u").agg(F.count("*").alias("d"))
-        return ed.join(deg, "u")
-
-    return _write_graph_table(spark, build, "graph_sym_edges", "u", sf_dir)
+    e = _near_dup_edges(spark, sf_dir)
+    ed = e.select(
+        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
+    ).unionAll(e.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
+    deg = ed.groupBy("u").agg(F.count("*").alias("d"))
+    return _write_graph_table(spark, ed.join(deg, "u"), "graph_sym_edges", "u", sf_dir)
 
 
 _MINHASH_ORACLE = f"""

@@ -47,15 +47,10 @@ def query(name: str, oracle: str | None = None, doc: str = "", tags: tuple[str, 
     return deco
 
 
-def _ensure_pyfiles(spark: SparkSession) -> None:
-    """Back-compat alias; see deploy.ensure_worker_imports."""
+def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from .deploy import ensure_worker_imports
 
     ensure_worker_imports(spark)
-
-
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    _ensure_pyfiles(spark)
     # The driver may hand us a vanilla SparkSession; without this conf
     # Spark 4 refuses TIMESTAMP(NANOS) parquet columns outright
     # (PARQUET_TYPE_ILLEGAL). It is a runtime SQL conf, so set it here

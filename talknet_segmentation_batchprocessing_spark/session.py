@@ -69,23 +69,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-
-def register_views(spark: SparkSession, sf_dir: str, tables=None) -> list[str]:
-    """Expose the engine's tables as temp views so users can drive it
-    through plain ``spark.sql(...)`` — the same names the DuckDB
-    oracles use, so any oracle query (modulo dialect) runs directly.
-    Uses registry.load (timestamp normalization included), replaces
-    existing views, returns the registered names."""
-    from .registry import load
-
-    names = list(tables or TABLES)
-    for t in names:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
-    return names

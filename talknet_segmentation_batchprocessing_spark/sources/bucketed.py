@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -42,35 +42,3 @@ def write_bucketed(
     if path:
         w = w.option("path", path)
     w.saveAsTable(table)
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: Sequence[str],
-    mode: str = "overwrite",
-) -> None:
-    """Hive-partitioned parquet layout (``partitionBy`` directories):
-    the pruning sibling of bucketing. A filter on a partition column
-    never opens the other directories — the scan's PartitionFilters
-    eliminate them at planning time, so a per-language (or per-day)
-    query reads that partition's bytes only, at any corpus size.
-    Choose LOW-cardinality columns (lang, date, source); per-key
-    directories with millions of keys create a small-file problem."""
-    df.write.format("parquet").mode(mode).partitionBy(*partition_cols).save(path)
-
-
-def bucketed_join_plan_is_shuffle_free(
-    spark: SparkSession, left: str, right: str, on: Sequence[str]
-) -> tuple[bool, str]:
-    """Diagnostic: join the two catalog tables on ``on`` and report
-    whether the executed plan contains any Exchange (it must not when
-    both sides are bucketed on the join key with equal bucket counts).
-    Returns (shuffle_free, plan_string)."""
-    j = spark.table(left).join(spark.table(right), list(on))
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    return ("Exchange" not in plan), plan

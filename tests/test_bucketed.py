@@ -10,10 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from talknet_segmentation_batchprocessing_spark.registry import load
-from talknet_segmentation_batchprocessing_spark.sources.bucketed import (
-    bucketed_join_plan_is_shuffle_free,
-    write_bucketed,
-)
+from talknet_segmentation_batchprocessing_spark.sources.bucketed import write_bucketed
 
 from .conftest import SF_SMOKE
 
@@ -51,10 +48,9 @@ def test_bucketed_join_is_shuffle_free_and_correct(spark, bucketed_pair):
     # bucketing effect — force SMJ for the plan assertion
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        free, plan = bucketed_join_plan_is_shuffle_free(
-            spark, left, right, ["custkey"]
-        )
-        assert free, f"bucketed join still shuffles:\n{plan}"
+        j = spark.table(left).join(spark.table(right), "custkey")
+        plan = j._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, f"bucketed join still shuffles:\n{plan}"
         assert "SortMergeJoin" in plan
 
         got = (
@@ -86,26 +82,3 @@ def test_bucketed_aggregation_skips_exchange(spark, bucketed_pair):
     agg = spark.table(left).groupBy("custkey").agg(F.sum("o_totalprice"))
     plan = agg._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, f"grouping on the bucket key shuffled:\n{plan}"
-
-
-def test_partitioned_write_prunes_partitions(spark, tmp_path):
-    """A filter on the partition column must appear as a
-    PartitionFilters entry on the scan (planning-time directory
-    elimination), and the filtered read must return exactly that
-    partition's rows."""
-    from talknet_segmentation_batchprocessing_spark.sources.bucketed import (
-        write_partitioned,
-    )
-
-    docs = load(spark, SF_SMOKE, "documents").select("doc_id", "lang", "n_chars")
-    dest = str(tmp_path / "docs_by_lang")
-    write_partitioned(docs, dest, ["lang"])
-
-    langs = [r.lang for r in docs.select("lang").distinct().collect()]
-    pick = sorted(langs)[0]
-    rd = spark.read.parquet(dest).filter(F.col("lang") == pick)
-    plan = rd._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and pick in plan, plan
-    # the data filter must NOT degrade to a post-scan Filter on lang
-    want = docs.filter(F.col("lang") == pick).count()
-    assert rd.count() == want > 0

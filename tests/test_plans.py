@@ -254,32 +254,27 @@ def test_triangle_bucketed_wedge_join_zero_exchange(spark, monkeypatch):
         )
 
 
-def test_graph_frame_memo_yields_to_bucketed_threshold(spark, monkeypatch):
-    """Both sides of the graph publish switch from one table name: a
-    frame memoized on the small-graph side must not answer once the
-    threshold puts the same rows on the bucketed side."""
+@pytest.mark.parametrize("side", ["broadcast", "bucketed"])
+def test_graph_table_republish_serves_new_rows(spark, monkeypatch, side):
+    """A second publication under the same name serves its own rows on
+    both sides of the graph publish switch: nothing from the first
+    publication is reused."""
     from talknet_segmentation_batchprocessing_spark.queries import extensions
 
-    base, key = "graph_memo_probe", "k"
-    name = extensions._graph_table_name(spark, base, SF_SMOKE)
+    if side == "bucketed":
+        monkeypatch.setattr(extensions, "_GRAPH_PUBLISH_THRESHOLD", -1)
+    base, key = "graph_republish_probe", "k"
 
-    def publish():
-        return extensions._write_graph_table(
-            spark, lambda: spark.range(3).withColumnRenamed("id", key),
-            base, key, SF_SMOKE,
-        )
+    def publish(n):
+        edges = spark.range(n).withColumnRenamed("id", key)
+        out = extensions._write_graph_table(spark, edges, base, key, SF_SMOKE)
+        return sorted(r[key] for r in out.collect())
 
     try:
-        small = publish()
-        assert publish() is small  # memo hit below the threshold
-        assert not spark.catalog.tableExists(name)
-        monkeypatch.setattr(extensions, "_GRAPH_PUBLISH_THRESHOLD", -1)
-        bucketed = publish()
-        assert bucketed is not small
-        assert spark.catalog.tableExists(name)
-        assert sorted(r[key] for r in bucketed.collect()) == [0, 1, 2]
+        assert publish(3) == [0, 1, 2]
+        assert publish(5) == [0, 1, 2, 3, 4]
     finally:
-        extensions._GRAPH_FRAMES.pop(name, None)
+        name = extensions._graph_table_name(spark, base, SF_SMOKE)
         spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 

@@ -66,21 +66,3 @@ def test_registered_fn_names_match_query_names():
         if spec.fn.__name__ != name
     }
     assert not mismatched, f"@query decorator attached to the wrong def: {mismatched}"
-
-
-def test_register_views_sql_surface(spark):
-    """session.register_views exposes every table to plain spark.sql
-    with the oracle-matching names."""
-    from talknet_segmentation_batchprocessing_spark.session import register_views
-
-    from .conftest import SF_SMOKE
-
-    names = register_views(spark, SF_SMOKE)
-    assert "documents" in names and "lineitem" in names
-    n_docs = spark.sql("SELECT count(*) AS n FROM documents").collect()[0]["n"]
-    assert n_docs > 0
-    j = spark.sql(
-        "SELECT count(*) AS n FROM orders o JOIN customer c "
-        "ON o.o_custkey = c.c_custkey"
-    ).collect()[0]["n"]
-    assert j > 0

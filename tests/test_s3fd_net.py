@@ -139,5 +139,3 @@ def test_detector_shell_end_to_end(w):
     for d, x1, y1, x2, y2, score in rows:
         assert x2 >= x1 and y2 >= y1
         assert 0.0 <= score <= 1.0
-    batch_rows = det.detect_batch(["vid"], [0], [img])
-    assert batch_rows[0] == rows

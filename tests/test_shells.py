@@ -319,7 +319,6 @@ def test_checkpoint_roundtrip(spark, tmp_path):
 
 def test_multimodal_features(spark):
     from talknet_segmentation_batchprocessing_spark.operators.multimodal import (
-        attach_binary_meta,
         extract_image_features,
         fake_image_decoder,
         sample_video_frames,
@@ -329,10 +328,6 @@ def test_multimodal_features(spark):
         [(1, bytearray(b"imgpayload1")), (2, bytearray(b"imgpayload2"))],
         "doc_id long, payload binary",
     )
-    meta = attach_binary_meta(docs, "payload", "doc_id").toPandas()
-    assert meta.byte_len.tolist() == [11, 11]
-    assert meta.content_sha.nunique() == 2
-
     feats = extract_image_features(
         docs, "payload", "doc_id", decoder=fake_image_decoder(16, 16)
     ).toPandas()
@@ -370,36 +365,6 @@ def test_video_corpus_datasource(spark, tmp_path):
     # composes with the relational surface (filter + projection)
     n = df.filter("ext = 'mp4'").count()
     assert n == 1
-
-
-def test_detect_batch_equals_per_row(spark, videos_df):
-    """The Arrow-batch detector path (one model invocation per batch —
-    the real-NN shape) produces exactly the per-row path's rows."""
-    import pandas as pd
-
-    from talknet_segmentation_batchprocessing_spark.operators.inference import (
-        detect_faces,
-        s3fd_detector,
-    )
-    from talknet_segmentation_batchprocessing_spark.sources.media_ingest import (
-        explode_frames,
-        fake_decoder,
-    )
-
-    frames = explode_frames(videos_df, decoder=fake_decoder(n_frames=15))
-
-    def row_only_builder(_state):
-        det = s3fd_detector()
-        del det.detect_batch  # force the per-row fallback
-        return det
-
-    batched = detect_faces(frames, model_builder=lambda _s: s3fd_detector()).toPandas()
-    per_row = detect_faces(frames, model_builder=row_only_builder).toPandas()
-    key = ["video_id", "frame_idx", "det_id"]
-    pd.testing.assert_frame_equal(
-        batched.sort_values(key).reset_index(drop=True),
-        per_row.sort_values(key).reset_index(drop=True),
-    )
 
 
 def test_video_corpus_stream_rate_limit_and_resume(spark, tmp_path):

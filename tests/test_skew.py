@@ -58,19 +58,3 @@ def test_salted_agg_explicit_merge_ignores_alias_names(spark):
     )
     assert plain.n_events.tolist() == salted.n_events.tolist()
     assert plain.max_count.tolist() == salted.max_count.tolist()
-
-
-def test_salted_broadcast_join_matches_plain(spark):
-    from talknet_segmentation_batchprocessing_spark.plans.skew import (
-        salted_broadcast_join,
-    )
-
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").select(
-        "l_orderkey", "l_suppkey", "l_quantity"
-    )
-    sup = spark.read.parquet("/root/testdata/sf0.001/supplier.parquet").select(
-        "s_suppkey", "s_name"
-    ).withColumnRenamed("s_suppkey", "l_suppkey")
-    plain = li.join(sup, "l_suppkey").count()
-    salted = salted_broadcast_join(li, sup, ["l_suppkey"], n_salts=4).count()
-    assert plain == salted

@@ -36,8 +36,8 @@ FEATURES_SCHEMA = (
 
 
 def _decode_gray(img_bytes: bytes) -> np.ndarray:
-    """Default image decode: square uint8 grayscale payload (the fake
-    decoder's format). Real JPEG decode plugs in via ``image_decode``."""
+    """Read a raw uint8 grayscale payload as a square image of side
+    ⌊√n⌋ (the fake decoder's format)."""
     a = np.frombuffer(img_bytes, dtype=np.uint8)
     side = int(np.sqrt(a.size))
     return a[: side * side].reshape(side, side)
@@ -46,12 +46,10 @@ def _decode_gray(img_bytes: bytes) -> np.ndarray:
 def track_faces_features(
     tracks: DataFrame,
     frames: DataFrame,
-    image_decode=None,
     crop_to: int = 112,
 ) -> DataFrame:
     """(video_id, track_id, frame_idx) ⋈ frames -> per-frame face crop
     rows (flattened crop_to² doubles)."""
-    decode = image_decode or _decode_gray
     joined = tracks.select("video_id", "track_id", "frame_idx").join(
         frames.select("video_id", "frame_idx", "image"), ["video_id", "frame_idx"]
     )
@@ -59,7 +57,7 @@ def track_faces_features(
     def fn(batches):
         for pdf in batches:
             faces = [
-                face_pipeline(decode(img), crop_to=crop_to).astype(np.float64).ravel()
+                face_pipeline(_decode_gray(img), crop_to=crop_to).astype(np.float64).ravel()
                 for img in pdf["image"]
             ]
             yield pd.DataFrame(
@@ -133,12 +131,11 @@ def featurize_tracks(
     tracks: DataFrame,
     frames: DataFrame,
     audio: DataFrame,
-    image_decode=None,
 ) -> DataFrame:
     """Full feature assembly for ``score_tracks(needs_features=...)``:
     join the face-crop and MFCC arms on (video_id, track_id,
     frame_idx)."""
-    faces = track_faces_features(tracks, frames, image_decode=image_decode)
+    faces = track_faces_features(tracks, frames)
     mf = track_mfcc_features(tracks, audio)
     return mf.join(faces, ["video_id", "track_id", "frame_idx"]).select(
         "video_id", "track_id", "frame_idx", "mfcc", "face"

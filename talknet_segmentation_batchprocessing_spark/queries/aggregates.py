@@ -496,15 +496,18 @@ def ext_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "ext_pivot",
-    oracle="""
+_PIVOT_ORACLE = """
 SELECT user_id,
        floor((coalesce(sum(CASE WHEN event_type = 'click' THEN value END), 0)) * 1e2 + 0.5) / 1e2 AS v_click,
        floor((coalesce(sum(CASE WHEN event_type = 'view' THEN value END), 0)) * 1e2 + 0.5) / 1e2 AS v_view,
        floor((coalesce(sum(CASE WHEN event_type = 'purchase' THEN value END), 0)) * 1e2 + 0.5) / 1e2 AS v_purchase
 FROM events GROUP BY user_id
-""",
+"""
+
+
+@query(
+    "ext_pivot",
+    oracle=_PIVOT_ORACLE,
     doc="Extension surface: pivot (conditional-agg form on the oracle side)",
     tags=("ext",),
 )
@@ -525,7 +528,11 @@ def ext_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_unpivot",
-    oracle=None,  # late-bound below: UNPIVOT over ext_pivot's registered oracle
+    oracle=f"""
+WITH p AS ({_PIVOT_ORACLE})
+SELECT user_id, metric, v
+FROM (UNPIVOT p ON v_click, v_view, v_purchase INTO NAME metric VALUE v)
+""",
     doc="Extension surface: UNPIVOT/melt — the inverse of ext_pivot, "
     "exercising Spark's native DataFrame.unpivot (Expand under the "
     "hood: one stateless row-multiplying projection, no shuffle, no "
@@ -540,20 +547,6 @@ def ext_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return p.unpivot(
         "user_id", ["v_click", "v_view", "v_purchase"], "metric", "v"
     )
-
-
-def _late_bind_unpivot() -> None:
-    from ..registry import REGISTRY
-
-    pivot = REGISTRY["ext_pivot"].oracle
-    REGISTRY["ext_unpivot"].oracle = f"""
-WITH p AS ({pivot})
-SELECT user_id, metric, v
-FROM (UNPIVOT p ON v_click, v_view, v_purchase INTO NAME metric VALUE v)
-"""
-
-
-_late_bind_unpivot()
 
 
 @query(

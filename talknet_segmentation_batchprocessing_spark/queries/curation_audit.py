@@ -24,7 +24,25 @@ from ..plans.two_phase import (
     one_partition_col,
     parquet_rows,
 )
-from ..registry import REGISTRY, load, query
+from ..registry import load, query
+from .dataset_ops import (
+    _BIGRAM_LM_ORACLE,
+    _DSIR_ORACLE,
+    _GOPHER_ORACLE,
+    _GOPHER_ROUNDED_CTE,
+    _GOPHER_RULE_SQL,
+    _LM_ORACLE,
+    _SHUF_ORACLE,
+    _doc_token_arrays,
+    dsir_importance_weights,
+    gopher_rounded_frame,
+    gopher_rule_exprs,
+    shuffle_shard_assign,
+    text_bigram_logprob,
+    text_gopher_rules,
+    text_unigram_logprob,
+)
+from .extensions import _NGRAM_JACCARD_ORACLE, dedup_ngram_jaccard
 
 # ---------------------------------------------------------------------------
 # temperature-scaled domain mixture (the UnifiedQA / mT5 sampling rule)
@@ -295,8 +313,6 @@ def _attribution_oracle() -> str:
     """Composed from dataset_ops' shared rounded-stats CTE and rule
     predicates — the audit thresholds the SAME rounded values as
     text_gopher_rules by construction."""
-    from .dataset_ops import _GOPHER_ROUNDED_CTE, _GOPHER_RULE_SQL
-
     flag_cols = ", ".join(
         f"CAST({sql} AS INTEGER) AS r_{name}" for name, sql in _GOPHER_RULE_SQL.items()
     )
@@ -326,7 +342,7 @@ agg AS (SELECT count(*) AS total, {sums} FROM nf)
 
 @query(
     "curation_rule_attribution",
-    oracle=None,  # late-bound below (composes dataset_ops' shared CTE)
+    oracle=_attribution_oracle(),
     doc="Filter-ablation audit over the Gopher rule battery: per rule, "
     "how many docs fail it (n_fail), how many fail ONLY it "
     "(n_fail_only = docs recovered if the rule were dropped), and both "
@@ -338,8 +354,6 @@ agg AS (SELECT count(*) AS total, {sums} FROM nf)
     tags=("dataset", "text", "audit", "ext"),
 )
 def curation_rule_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dataset_ops import gopher_rounded_frame, gopher_rule_exprs
-
     rules = gopher_rule_exprs()
     flags = gopher_rounded_frame(spark, sf_dir).select(
         "doc_id", *[r.cast("int").alias(f"r_{n}") for n, r in rules.items()]
@@ -620,10 +634,9 @@ _SWEEP_THRESHOLDS = (0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9)
 def _sweep_oracle() -> str:
     """Composed from the registered n-gram Jaccard oracle: the curve is
     computed over the SAME edge definition users deduplicate with."""
-    ngram = REGISTRY["dedup_ngram_jaccard"].oracle
     ts = ", ".join(str(t) for t in _SWEEP_THRESHOLDS)
     return f"""
-WITH edges AS ({ngram}),
+WITH edges AS ({_NGRAM_JACCARD_ORACLE}),
 ts AS (SELECT unnest(CAST([{ts}] AS DOUBLE[])) AS threshold),
 hits AS (
   SELECT t.threshold, e.doc_a, e.doc_b
@@ -650,7 +663,7 @@ LEFT JOIN docs d ON d.threshold = t.threshold
 
 @query(
     "dedup_threshold_sweep",
-    oracle=None,  # late-bound below (composes the registered ngram oracle)
+    oracle=_sweep_oracle(),
     doc="Dedup-threshold tuning curve: for each candidate Jaccard "
     "threshold, how many near-dup pairs fire and how many distinct "
     "docs they touch — the curve a curation team reads to pick the "
@@ -664,7 +677,6 @@ LEFT JOIN docs d ON d.threshold = t.threshold
     tags=("dedup", "audit", "ext"),
 )
 def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .extensions import dedup_ngram_jaccard
     from ..registry import track_persist
 
     edges = track_persist(dedup_ngram_jaccard(spark, sf_dir))
@@ -1043,9 +1055,8 @@ def classifier_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _shard_balance_oracle() -> str:
     """Composed from the registered shuffle_shard_assign oracle: the
     audit describes exactly the sharding users write."""
-    shuf = REGISTRY["shuffle_shard_assign"].oracle
     return f"""
-WITH assign AS ({shuf}),
+WITH assign AS ({_SHUF_ORACLE}),
 per_shard AS (
   SELECT a.shard, CAST(count(*) AS BIGINT) AS n_docs,
          CAST(sum(d.n_chars) AS BIGINT) AS total_chars
@@ -1067,7 +1078,7 @@ FROM per_shard p CROSS JOIN tot t
 
 @query(
     "shard_balance_audit",
-    oracle=None,  # late-bound below (composes the registered shuffle oracle)
+    oracle=_shard_balance_oracle(),
     doc="Shard-balance audit over shuffle_shard_assign: per shard, doc "
     "and char totals plus skew ratios vs the uniform ideal (1.0 = "
     "perfectly balanced). Straggler shards are the classic silent "
@@ -1078,8 +1089,6 @@ FROM per_shard p CROSS JOIN tot t
     tags=("dataset", "audit", "ext"),
 )
 def shard_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dataset_ops import shuffle_shard_assign
-
     assign = shuffle_shard_assign(spark, sf_dir).select("doc_id", "shard")
     docs = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
     per_shard = assign.join(docs, "doc_id").groupBy("shard").agg(
@@ -1103,15 +1112,6 @@ def shard_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("chars_skew"),
     )
-
-
-def _late_bind_oracles() -> None:
-    REGISTRY["curation_rule_attribution"].oracle = _attribution_oracle()
-    REGISTRY["dedup_threshold_sweep"].oracle = _sweep_oracle()
-    REGISTRY["shard_balance_audit"].oracle = _shard_balance_oracle()
-
-
-_late_bind_oracles()
 
 
 # ---------------------------------------------------------------------------
@@ -1317,7 +1317,36 @@ def classifier_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "curation_dsir_vs_rules",
-    oracle=None,  # late-bound below: composes the two registered oracles
+    oracle=f"""
+WITH d AS ({_DSIR_ORACLE}),
+g AS ({_GOPHER_ORACLE}),
+j AS (
+  SELECT d.doc_id, d.keep AS dsir_keep, g.keep AS rules_keep
+  FROM d JOIN g USING (doc_id)
+),
+agg AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_docs,
+         CAST(count(*) FILTER (WHERE dsir_keep AND rules_keep) AS BIGINT)
+           AS n_both_keep,
+         CAST(count(*) FILTER (WHERE dsir_keep AND NOT rules_keep) AS BIGINT)
+           AS n_dsir_only,
+         CAST(count(*) FILTER (WHERE NOT dsir_keep AND rules_keep) AS BIGINT)
+           AS n_rules_only,
+         CAST(count(*) FILTER (WHERE NOT dsir_keep AND NOT rules_keep)
+              AS BIGINT) AS n_both_drop
+  FROM j
+)
+SELECT n_docs, n_both_keep, n_dsir_only, n_rules_only, n_both_drop,
+       CAST(CASE WHEN n_docs = 0 THEN 0
+            ELSE (2 * (n_both_keep + n_both_drop) * 1000000 + n_docs)
+                 // (2 * n_docs) END AS BIGINT) AS agreement_ppm,
+       CAST(CASE WHEN n_both_keep + n_dsir_only + n_rules_only = 0 THEN 0
+            ELSE (2 * n_both_keep * 1000000
+                  + (n_both_keep + n_dsir_only + n_rules_only))
+                 // (2 * (n_both_keep + n_dsir_only + n_rules_only)) END
+            AS BIGINT) AS keep_jaccard_ppm
+FROM agg
+""",
     doc="Selection-method agreement audit: the confusion matrix between "
     "DSIR's distribution-matched keep (dsir_importance_weights) and the "
     "Gopher hand-rule keep (text_gopher_rules) over the docs both score "
@@ -1333,11 +1362,6 @@ def classifier_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("curation", "audit", "ext"),
 )
 def curation_dsir_vs_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dataset_ops import (
-        _doc_token_arrays,
-        dsir_importance_weights,
-        text_gopher_rules,
-    )
     # one tokenization DEFINITION feeds both scorers (round-12; NOT
     # persisted — see quality_ensemble_vote's note: caching the
     # array<string> frame measured slower than re-running the split)
@@ -1388,46 +1412,6 @@ def curation_dsir_vs_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _late_bind_dsir_vs_rules() -> None:
-    from . import dataset_ops  # noqa: F401  (registers the two parents)
-
-    dsir = REGISTRY["dsir_importance_weights"].oracle
-    gopher = REGISTRY["text_gopher_rules"].oracle
-    REGISTRY["curation_dsir_vs_rules"].oracle = f"""
-WITH d AS ({dsir}),
-g AS ({gopher}),
-j AS (
-  SELECT d.doc_id, d.keep AS dsir_keep, g.keep AS rules_keep
-  FROM d JOIN g USING (doc_id)
-),
-agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(count(*) FILTER (WHERE dsir_keep AND rules_keep) AS BIGINT)
-           AS n_both_keep,
-         CAST(count(*) FILTER (WHERE dsir_keep AND NOT rules_keep) AS BIGINT)
-           AS n_dsir_only,
-         CAST(count(*) FILTER (WHERE NOT dsir_keep AND rules_keep) AS BIGINT)
-           AS n_rules_only,
-         CAST(count(*) FILTER (WHERE NOT dsir_keep AND NOT rules_keep)
-              AS BIGINT) AS n_both_drop
-  FROM j
-)
-SELECT n_docs, n_both_keep, n_dsir_only, n_rules_only, n_both_drop,
-       CAST(CASE WHEN n_docs = 0 THEN 0
-            ELSE (2 * (n_both_keep + n_both_drop) * 1000000 + n_docs)
-                 // (2 * n_docs) END AS BIGINT) AS agreement_ppm,
-       CAST(CASE WHEN n_both_keep + n_dsir_only + n_rules_only = 0 THEN 0
-            ELSE (2 * n_both_keep * 1000000
-                  + (n_both_keep + n_dsir_only + n_rules_only))
-                 // (2 * (n_both_keep + n_dsir_only + n_rules_only)) END
-            AS BIGINT) AS keep_jaccard_ppm
-FROM agg
-"""
-
-
-_late_bind_dsir_vs_rules()
-
-
 # ---------------------------------------------------------------------------
 # quality-signal ensemble vote (round 7)
 # ---------------------------------------------------------------------------
@@ -1435,7 +1419,38 @@ _late_bind_dsir_vs_rules()
 
 @query(
     "quality_ensemble_vote",
-    oracle=None,  # late-bound below: composes three registered oracles
+    oracle=f"""
+WITH clf AS ({_CLF_ORACLE}),
+gop AS ({_GOPHER_ORACLE}),
+lm AS ({_LM_ORACLE}),
+m AS (
+  SELECT doc_id,
+         CAST(floor(mean_neg_logprob * 1e6 + 0.5) AS BIGINT) AS m_fixed
+  FROM lm
+),
+thr AS (
+  SELECT CAST(sum(m_fixed) AS BIGINT) AS m_total,
+         CAST(count(*) AS BIGINT) AS n_docs
+  FROM m
+),
+flu AS (
+  SELECT doc_id, m_fixed * n_docs < m_total AS fluent_keep
+  FROM m CROSS JOIN thr
+),
+j AS (
+  SELECT clf.doc_id, clf.keep AS clf_keep, gop.keep AS rules_keep,
+         flu.fluent_keep
+  FROM clf
+  JOIN gop ON gop.doc_id = clf.doc_id
+  JOIN flu ON flu.doc_id = clf.doc_id
+)
+SELECT doc_id, clf_keep, rules_keep, fluent_keep,
+       CAST(CAST(clf_keep AS INTEGER) + CAST(rules_keep AS INTEGER)
+            + CAST(fluent_keep AS INTEGER) AS INTEGER) AS n_votes,
+       CAST(clf_keep AS INTEGER) + CAST(rules_keep AS INTEGER)
+         + CAST(fluent_keep AS INTEGER) >= 2 AS keep
+FROM j
+""",
     doc="Ensemble quality filtering (the FineWeb-Edu/DataComp pattern: "
     "no single signal is trusted alone): every doc collects three "
     "binary verdicts — the fasttext-style classifier's keep, Gopher "
@@ -1452,11 +1467,6 @@ _late_bind_dsir_vs_rules()
     tags=("curation", "text", "quality", "ext"),
 )
 def quality_ensemble_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dataset_ops import (
-        _doc_token_arrays,
-        text_gopher_rules,
-        text_unigram_logprob,
-    )
     # one tokenization DEFINITION feeds all three voters (round-12 —
     # the mix_doremi_weights sharing pattern extended to this
     # composition; each parent's own expression over the bound array
@@ -1507,49 +1517,6 @@ def quality_ensemble_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _late_bind_quality_ensemble() -> None:
-    from . import dataset_ops  # noqa: F401  (registers the three parents)
-
-    clf = REGISTRY["text_classifier_score"].oracle
-    gop = REGISTRY["text_gopher_rules"].oracle
-    lm = REGISTRY["text_unigram_logprob"].oracle
-    REGISTRY["quality_ensemble_vote"].oracle = f"""
-WITH clf AS ({clf}),
-gop AS ({gop}),
-lm AS ({lm}),
-m AS (
-  SELECT doc_id,
-         CAST(floor(mean_neg_logprob * 1e6 + 0.5) AS BIGINT) AS m_fixed
-  FROM lm
-),
-thr AS (
-  SELECT CAST(sum(m_fixed) AS BIGINT) AS m_total,
-         CAST(count(*) AS BIGINT) AS n_docs
-  FROM m
-),
-flu AS (
-  SELECT doc_id, m_fixed * n_docs < m_total AS fluent_keep
-  FROM m CROSS JOIN thr
-),
-j AS (
-  SELECT clf.doc_id, clf.keep AS clf_keep, gop.keep AS rules_keep,
-         flu.fluent_keep
-  FROM clf
-  JOIN gop ON gop.doc_id = clf.doc_id
-  JOIN flu ON flu.doc_id = clf.doc_id
-)
-SELECT doc_id, clf_keep, rules_keep, fluent_keep,
-       CAST(CAST(clf_keep AS INTEGER) + CAST(rules_keep AS INTEGER)
-            + CAST(fluent_keep AS INTEGER) AS INTEGER) AS n_votes,
-       CAST(clf_keep AS INTEGER) + CAST(rules_keep AS INTEGER)
-         + CAST(fluent_keep AS INTEGER) >= 2 AS keep
-FROM j
-"""
-
-
-_late_bind_quality_ensemble()
-
-
 # ---------------------------------------------------------------------------
 # DoReMi-style domain reweighting (round 8)
 # ---------------------------------------------------------------------------
@@ -1557,7 +1524,40 @@ _late_bind_quality_ensemble()
 
 @query(
     "mix_doremi_weights",
-    oracle=None,  # late-bound below: composes the two registered LM oracles
+    oracle=f"""
+WITH uni AS ({_LM_ORACLE}),
+big AS ({_BIGRAM_LM_ORACLE}),
+per AS (
+  SELECT d.source,
+         CAST(floor(u.mean_neg_logprob * 1e4 + 0.5) AS BIGINT) AS u4,
+         CAST(floor(b.mean_neg_logprob * 1e4 + 0.5) AS BIGINT) AS b4
+  FROM documents d
+  JOIN uni u ON u.doc_id = d.doc_id
+  JOIN big b ON b.doc_id = d.doc_id
+),
+dom AS (
+  SELECT source, CAST(count(*) AS BIGINT) AS n_docs_scored,
+         CAST((CAST(sum(u4) AS HUGEINT) * 100) // CAST(count(*) AS HUGEINT)
+           AS BIGINT) AS uni_nll_micro,
+         CAST((CAST(sum(b4) AS HUGEINT) * 100) // CAST(count(*) AS HUGEINT)
+           AS BIGINT) AS bi_nll_micro
+  FROM per GROUP BY source
+),
+ex AS (
+  SELECT source, n_docs_scored, uni_nll_micro, bi_nll_micro,
+         greatest(CAST(0 AS BIGINT), uni_nll_micro - bi_nll_micro)
+           AS excess_micro,
+         1000000 + greatest(CAST(0 AS BIGINT), uni_nll_micro - bi_nll_micro)
+           AS w_num
+  FROM dom
+),
+tot AS (SELECT CAST(sum(w_num) AS BIGINT) AS w_tot FROM ex)
+SELECT e.source, e.n_docs_scored, e.uni_nll_micro, e.bi_nll_micro,
+       e.excess_micro,
+       CAST((2 * e.w_num * 1000000 + t.w_tot) // (2 * t.w_tot) AS BIGINT)
+         AS weight_ppm
+FROM ex e CROSS JOIN tot t
+""",
     doc="DoReMi-style domain reweighting (Xie et al. 2023): one "
     "multiplicative-weights step over per-source EXCESS LOSS — the gap "
     "between a weak reference LM's loss (corpus unigram, "
@@ -1579,12 +1579,6 @@ _late_bind_quality_ensemble()
 )
 def mix_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..registry import track_persist
-    from .dataset_ops import (
-        _doc_token_arrays,
-        text_bigram_logprob,
-        text_unigram_logprob,
-    )
-
     # one tokenization DEFINITION feeds BOTH corpus LMs — unpersisted
     # (round-12): caching the array<string> frame measured slower than
     # re-running the codegen'd split per consumer (see
@@ -1636,50 +1630,6 @@ def mix_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _late_bind_mix_doremi() -> None:
-    from . import dataset_ops  # noqa: F401  (registers the two parents)
-
-    uni = REGISTRY["text_unigram_logprob"].oracle
-    big = REGISTRY["text_bigram_logprob"].oracle
-    REGISTRY["mix_doremi_weights"].oracle = f"""
-WITH uni AS ({uni}),
-big AS ({big}),
-per AS (
-  SELECT d.source,
-         CAST(floor(u.mean_neg_logprob * 1e4 + 0.5) AS BIGINT) AS u4,
-         CAST(floor(b.mean_neg_logprob * 1e4 + 0.5) AS BIGINT) AS b4
-  FROM documents d
-  JOIN uni u ON u.doc_id = d.doc_id
-  JOIN big b ON b.doc_id = d.doc_id
-),
-dom AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_docs_scored,
-         CAST((CAST(sum(u4) AS HUGEINT) * 100) // CAST(count(*) AS HUGEINT)
-           AS BIGINT) AS uni_nll_micro,
-         CAST((CAST(sum(b4) AS HUGEINT) * 100) // CAST(count(*) AS HUGEINT)
-           AS BIGINT) AS bi_nll_micro
-  FROM per GROUP BY source
-),
-ex AS (
-  SELECT source, n_docs_scored, uni_nll_micro, bi_nll_micro,
-         greatest(CAST(0 AS BIGINT), uni_nll_micro - bi_nll_micro)
-           AS excess_micro,
-         1000000 + greatest(CAST(0 AS BIGINT), uni_nll_micro - bi_nll_micro)
-           AS w_num
-  FROM dom
-),
-tot AS (SELECT CAST(sum(w_num) AS BIGINT) AS w_tot FROM ex)
-SELECT e.source, e.n_docs_scored, e.uni_nll_micro, e.bi_nll_micro,
-       e.excess_micro,
-       CAST((2 * e.w_num * 1000000 + t.w_tot) // (2 * t.w_tot) AS BIGINT)
-         AS weight_ppm
-FROM ex e CROSS JOIN tot t
-"""
-
-
-_late_bind_mix_doremi()
-
-
 # ---------------------------------------------------------------------------
 # Spearman rank agreement between two quality scores (round 8)
 # ---------------------------------------------------------------------------
@@ -1687,7 +1637,67 @@ _late_bind_mix_doremi()
 
 @query(
     "quality_rank_agreement",
-    oracle=None,  # late-bound below: composes the unigram-LM oracle
+    oracle=f"""
+WITH {_CLF_PER_DOC_SQL},
+clf AS (
+  SELECT doc_id,
+         (CAST(margin_ppm AS BIGINT) * 1000000) // n_tokens AS margin_scaled
+  FROM per_doc
+),
+uni AS ({_LM_ORACLE}),
+lm AS (
+  SELECT doc_id,
+         CAST(floor(mean_neg_logprob * 1e4 + 0.5) AS BIGINT) AS nll_fixed
+  FROM uni
+),
+rc AS (
+  SELECT doc_id, row_number() OVER (ORDER BY margin_scaled DESC, doc_id)
+           AS r_clf
+  FROM clf
+),
+rl AS (
+  SELECT doc_id, row_number() OVER (ORDER BY nll_fixed ASC, doc_id) AS r_lm
+  FROM lm
+),
+d AS (
+  SELECT CAST(rc.r_clf AS BIGINT) - CAST(rl.r_lm AS BIGINT) AS d
+  FROM rc JOIN rl ON rl.doc_id = rc.doc_id
+),
+agg AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_docs,
+         CAST(sum(d * d) AS HUGEINT) AS s2,
+         CAST(sum(abs(d)) AS HUGEINT) AS sad,
+         CAST(max(abs(d)) AS BIGINT) AS max_abs_rank_gap
+  FROM d
+),
+agg2 AS (
+  SELECT n_docs, sad, max_abs_rank_gap,
+         s2 // GREATEST(n_docs, 1) AS a,
+         s2 - (s2 // GREATEST(n_docs, 1)) * n_docs AS b,
+         CAST(n_docs AS HUGEINT) * n_docs - 1 AS n2m1
+  FROM agg
+),
+agg3 AS (
+  SELECT n_docs, sad, max_abs_rank_gap, b,
+         12000000 * a + n2m1 AS A, 2 * n2m1 AS M
+  FROM agg2
+),
+agg4 AS (
+  SELECT n_docs, sad, max_abs_rank_gap, b, M,
+         A // GREATEST(M, 1) AS qA,
+         A - (A // GREATEST(M, 1)) * M AS rA
+  FROM agg3
+)
+SELECT n_docs,
+       CAST(CASE WHEN n_docs < 2 THEN 1000000 ELSE
+         1000000 - (qA + (rA * n_docs + 12000000 * b)
+                    // GREATEST(M * n_docs, 1))
+         END AS BIGINT) AS spearman_rho_ppm,
+       CAST((2 * sad * 1000000 + n_docs) // (2 * n_docs) AS BIGINT)
+         AS mean_abs_rank_gap_ppm,
+       max_abs_rank_gap
+FROM agg4
+""",
     doc="Spearman rank agreement between two quality signals — the "
     "hash-feature classifier margin (text_classifier_score) and the "
     "unigram-LM fluency score (text_unigram_logprob) — the audit a "
@@ -1711,8 +1721,6 @@ _late_bind_mix_doremi()
 def quality_rank_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.two_phase import global_rank
     from ..registry import track_persist
-    from .dataset_ops import _doc_token_arrays, text_unigram_logprob
-
     # one tokenization DEFINITION feeds both scorers — unpersisted
     # (round-12, same note as quality_ensemble_vote)
     t = _doc_token_arrays(spark, sf_dir)
@@ -1786,71 +1794,3 @@ def quality_rank_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _late_bind_rank_agreement() -> None:
-    from . import dataset_ops  # noqa: F401  (registers the LM parent)
-
-    uni = REGISTRY["text_unigram_logprob"].oracle
-    REGISTRY["quality_rank_agreement"].oracle = f"""
-WITH {_CLF_PER_DOC_SQL},
-clf AS (
-  SELECT doc_id,
-         (CAST(margin_ppm AS BIGINT) * 1000000) // n_tokens AS margin_scaled
-  FROM per_doc
-),
-uni AS ({uni}),
-lm AS (
-  SELECT doc_id,
-         CAST(floor(mean_neg_logprob * 1e4 + 0.5) AS BIGINT) AS nll_fixed
-  FROM uni
-),
-rc AS (
-  SELECT doc_id, row_number() OVER (ORDER BY margin_scaled DESC, doc_id)
-           AS r_clf
-  FROM clf
-),
-rl AS (
-  SELECT doc_id, row_number() OVER (ORDER BY nll_fixed ASC, doc_id) AS r_lm
-  FROM lm
-),
-d AS (
-  SELECT CAST(rc.r_clf AS BIGINT) - CAST(rl.r_lm AS BIGINT) AS d
-  FROM rc JOIN rl ON rl.doc_id = rc.doc_id
-),
-agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(d * d) AS HUGEINT) AS s2,
-         CAST(sum(abs(d)) AS HUGEINT) AS sad,
-         CAST(max(abs(d)) AS BIGINT) AS max_abs_rank_gap
-  FROM d
-),
-agg2 AS (
-  SELECT n_docs, sad, max_abs_rank_gap,
-         s2 // GREATEST(n_docs, 1) AS a,
-         s2 - (s2 // GREATEST(n_docs, 1)) * n_docs AS b,
-         CAST(n_docs AS HUGEINT) * n_docs - 1 AS n2m1
-  FROM agg
-),
-agg3 AS (
-  SELECT n_docs, sad, max_abs_rank_gap, b,
-         12000000 * a + n2m1 AS A, 2 * n2m1 AS M
-  FROM agg2
-),
-agg4 AS (
-  SELECT n_docs, sad, max_abs_rank_gap, b, M,
-         A // GREATEST(M, 1) AS qA,
-         A - (A // GREATEST(M, 1)) * M AS rA
-  FROM agg3
-)
-SELECT n_docs,
-       CAST(CASE WHEN n_docs < 2 THEN 1000000 ELSE
-         1000000 - (qA + (rA * n_docs + 12000000 * b)
-                    // GREATEST(M * n_docs, 1))
-         END AS BIGINT) AS spearman_rho_ppm,
-       CAST((2 * sad * 1000000 + n_docs) // (2 * n_docs) AS BIGINT)
-         AS mean_abs_rank_gap_ppm,
-       max_abs_rank_gap
-FROM agg4
-"""
-
-
-_late_bind_rank_agreement()

@@ -18,6 +18,24 @@ from pyspark.sql import functions as F
 from ..functions.rounding import stable_round
 from ..functions.shingles import word_shingles
 from ..registry import load, query, track_persist
+from .extensions import (
+    _BRUTEFORCE_ORACLE,
+    _COS_VC_DUCK,
+    _IVF_NPROBE,
+    _IVF_SAMPLE,
+    _IVF_TOPK_ORACLE,
+    _KEEP_CANONICAL_ORACLE,
+    _NPROBE_AXIS,
+    _QUALITY_ORACLE,
+    _ivf_centroids,
+    _ivf_disk_index_path,
+    _ivf_kmeans_cte,
+    _sweep_assemble,
+    dedup_keep_canonical,
+    sim_ivf_topk,
+    sim_topk_bruteforce,
+    text_quality_score,
+)
 
 # md5-derived deterministic uniform hash in [0, 2^48) — identical
 # expression family as extensions.py's shingle ids.
@@ -1170,9 +1188,12 @@ FROM (
 """
 
 
+_PQ_TOPK_ORACLE = _PQ_SEARCH_ORACLE.format(cte=_pq_kmeans_cte(), l2=_PQ_L2)
+
+
 @query(
     "sim_pq_topk",
-    oracle=_PQ_SEARCH_ORACLE.format(cte=_pq_kmeans_cte(), l2=_PQ_L2),
+    oracle=_PQ_TOPK_ORACLE,
     doc="PQ asymmetric-distance search (ADC): top-5 neighbors per "
     "query vector, scored as sum over subspaces of "
     "L2(query_subvector, codeword[candidate_code]) — the consumer of "
@@ -1347,9 +1368,6 @@ def _pq_bits_arm_sql(n_sub: int) -> str:
 
 
 def _pq_bits_sweep_oracle() -> str:
-    from ..registry import REGISTRY
-
-    bf = REGISTRY["sim_topk_bruteforce"].oracle
     arms = "\n".join(_pq_bits_arm_sql(n) for n in _PQ_BITS_AXIS)
     rows = "\nUNION ALL\n".join(
         f"""SELECT CAST({n} AS INTEGER) AS n_subspaces,
@@ -1364,7 +1382,7 @@ FROM s{n}_hits h CROSS JOIN nq CROSS JOIN s{n}_err r"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 samp AS (SELECT vec_id, v FROM e WHERE vec_id < {_PQ_SAMPLE}),
 q AS (SELECT vec_id AS query_id, v FROM e WHERE vec_id < {_PQ_NQ}),
-bf AS ({bf}),
+bf AS ({_BRUTEFORCE_ORACLE}),
 nq AS (SELECT count(DISTINCT query_id) AS q FROM bf),
 {arms}
 _done AS (SELECT 1)
@@ -1374,7 +1392,7 @@ _done AS (SELECT 1)
 
 @query(
     "sim_pq_bits_sweep",
-    oracle=None,  # late-bound below (needs sim_topk_bruteforce registered)
+    oracle=_pq_bits_sweep_oracle(),
     doc="The COMPRESSION tuning curve — the codebook analog of "
     "sim_nprobe_sweep: recall@3 vs the shared brute-force ground "
     "truth at m = 2/4/8 subspaces over the 64-dim embeddings (code "
@@ -1389,8 +1407,6 @@ _done AS (SELECT 1)
 )
 def sim_pq_bits_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from functools import reduce
-
-    from .extensions import sim_topk_bruteforce
 
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -1488,18 +1504,6 @@ def sim_pq_bits_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "mean_recon_err",
         )
     )
-
-
-def _late_bind_pq_bits() -> None:
-    # sim_topk_bruteforce lives in extensions.py — same late-bind
-    # discipline as _late_bind_rrf below.
-    from . import extensions  # noqa: F401
-    from ..registry import REGISTRY
-
-    REGISTRY["sim_pq_bits_sweep"].oracle = _pq_bits_sweep_oracle()
-
-
-_late_bind_pq_bits()
 
 
 # ---------------------------------------------------------------------------
@@ -2051,8 +2055,6 @@ def _curation_oracle() -> str:
     ship (keep-canonical dedup, quality scoring, benchmark
     contamination) — the pipeline's correctness is checked against the
     composition of already-proven parts, not a re-derivation."""
-    from .extensions import _KEEP_CANONICAL_ORACLE, _QUALITY_ORACLE
-
     split_h = _SQL_MD5_BIGINT.format(c="k.doc_id")
     return f"""
 WITH keep AS ({_KEEP_CANONICAL_ORACLE}),
@@ -2073,7 +2075,7 @@ WHERE k.doc_id >= {_BENCH_DOCS}
 
 @query(
     "curation_pipeline",
-    oracle=None,  # assigned below — needs the extensions module loaded
+    oracle=_curation_oracle(),
     doc="THE end-to-end curation pass a pretraining pipeline ships: "
     "near-dup dedup survivors (shingle Jaccard -> star CC -> "
     "canonical-per-component) INTERSECT quality >= 0.5 INTERSECT "
@@ -2086,8 +2088,6 @@ WHERE k.doc_id >= {_BENCH_DOCS}
     tags=("dataset", "pipeline", "ext"),
 )
 def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .extensions import dedup_keep_canonical, text_quality_score
-
     keep = dedup_keep_canonical(spark, sf_dir).select("doc_id", "lang")
     quality = text_quality_score(spark, sf_dir).select("doc_id", "n_tokens", "quality")
     contam = contamination_ngram(spark, sf_dir).select("doc_id", "contaminated")
@@ -2101,13 +2101,6 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.coalesce(F.col("contaminated"), F.lit(False)) == F.lit(False))
         .select("doc_id", "lang", "n_tokens", split.alias("split"))
     )
-
-
-# late-bind the composed oracle (avoids import-order issues between
-# this module and extensions at registration time)
-from ..registry import REGISTRY as _REG  # noqa: E402
-
-_REG["curation_pipeline"].oracle = _curation_oracle()
 
 
 _WS_PPM = 1_000_000
@@ -3568,20 +3561,18 @@ FROM dev d JOIN mad m USING (user_id)
     tags=("dataset", "analytics", "ext"),
 )
 def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = track_persist(
+    v = (
         load(spark, sf_dir, "events")
         .select("event_id", "user_id", "value")
         .filter(F.col("value").isNotNull())
     )
     med = v.groupBy("user_id").agg(F.expr("percentile(value, 0.5)").alias("med"))
-    dev = track_persist(
-        v.join(med, "user_id").select(
-            "event_id",
-            "user_id",
-            "value",
-            "med",
-            F.abs(F.col("value") - F.col("med")).alias("adev"),
-        )
+    dev = v.join(med, "user_id").select(
+        "event_id",
+        "user_id",
+        "value",
+        "med",
+        F.abs(F.col("value") - F.col("med")).alias("adev"),
     )
     mad = dev.groupBy("user_id").agg(F.expr("percentile(adev, 0.5)").alias("mad"))
     return dev.join(mad, "user_id").select(
@@ -3726,16 +3717,11 @@ _RRF_K = 60  # the canonical RRF constant (Cormack et al.)
 _RRF_TOPK = 3
 
 
-def _rrf_oracle() -> str:
-    """Composed from the two registered retrieval oracles, so the
-    fusion describes exactly the rankings users run."""
-    from ..registry import REGISTRY
-
-    ivf = REGISTRY["sim_ivf_topk"].oracle
-    pq = REGISTRY["sim_pq_topk"].oracle
-    return f"""
-WITH ivf AS ({ivf}),
-pq AS ({pq}),
+# Composed from the two retrieval oracles, so the fusion describes
+# exactly the rankings users run.
+_RRF_ORACLE = f"""
+WITH ivf AS ({_IVF_TOPK_ORACLE}),
+pq AS ({_PQ_TOPK_ORACLE}),
 u AS (
   SELECT query_id, neighbor_id, rank, 1 AS src_ivf, 0 AS src_pq FROM ivf
   UNION ALL
@@ -3761,7 +3747,7 @@ FROM ranked WHERE fused_rank <= {_RRF_TOPK}
 
 @query(
     "sim_rrf_fusion",
-    oracle=None,  # late-bound below (composes the two retrieval oracles)
+    oracle=_RRF_ORACLE,
     doc="Hybrid retrieval via reciprocal-rank fusion: the IVF and PQ "
     f"indexes' top-k lists merge with the canonical RRF score "
     f"sum(1/({_RRF_K} + rank)) — here in round-half-up integer ppm, so "
@@ -3776,8 +3762,6 @@ FROM ranked WHERE fused_rank <= {_RRF_TOPK}
     tags=("similarity", "embedding", "ext"),
 )
 def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .extensions import sim_ivf_topk
-
     ivf = sim_ivf_topk(spark, sf_dir).select(
         "query_id",
         "neighbor_id",
@@ -3813,19 +3797,6 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id", "neighbor_id", "fused_rank", "rrf_ppm", "in_ivf", "in_pq"
         )
     )
-
-
-def _late_bind_rrf() -> None:
-    # sim_ivf_topk / sim_pq_topk live in extensions.py; import it first so
-    # this module works when imported directly instead of relying on
-    # _ensure_loaded's incidental import order.
-    from . import extensions  # noqa: F401
-    from ..registry import REGISTRY
-
-    REGISTRY["sim_rrf_fusion"].oracle = _rrf_oracle()
-
-
-_late_bind_rrf()
 
 
 # ---------------------------------------------------------------------------
@@ -4019,9 +3990,160 @@ def dsir_importance_weights(
 # ---------------------------------------------------------------------------
 
 
+# The IVF+PQ oracles stitch the two index definitions' CTE chains. Each
+# chain lives in its OWN nested WITH scope (their CTE names collide:
+# samp/dims/c0/a1...), referencing the shared outer ``e``; DuckDB scopes
+# nested WITHs per subquery. The disk index and the incremental merge
+# answer exactly like the in-session index (incremental == rebuild),
+# so all three share _IVFPQ_TOPK_ORACLE.
+_IVFPQ_CAND_SQL = f"""
+  WITH {_ivf_kmeans_cte()}
+  assign AS (
+    SELECT vec_id, cent_id FROM (
+      SELECT e.vec_id, c.cent_id,
+             row_number() OVER (PARTITION BY e.vec_id
+                                ORDER BY {_COS_VC_DUCK} DESC, c.cent_id) AS rn
+      FROM e CROSS JOIN cent c
+    ) WHERE rn = 1
+  ),
+  qprobe AS (
+    SELECT vec_id AS query_id, cent_id FROM (
+      SELECT e.vec_id, c.cent_id,
+             row_number() OVER (PARTITION BY e.vec_id
+                                ORDER BY {_COS_VC_DUCK} DESC, c.cent_id) AS rn
+      FROM e CROSS JOIN cent c WHERE e.vec_id < {_PQ_NQ}
+    ) WHERE rn <= {_IVF_NPROBE}
+  )
+  SELECT DISTINCT q.query_id, a.vec_id AS neighbor_id
+  FROM qprobe q JOIN assign a ON a.cent_id = q.cent_id
+  WHERE a.vec_id <> q.query_id
+"""
+_IVFPQ_CODES_SQL = f"""
+  WITH {_pq_kmeans_cte()}
+  allsub AS (
+    SELECT vec_id, m, list_transform(range(1, 17), i -> v[m*16 + i]) AS sv
+    FROM e CROSS JOIN ms
+  ),
+  codes AS (
+    SELECT vec_id, m, code_id FROM (
+      SELECT s.vec_id, s.m, c.code_id,
+             row_number() OVER (PARTITION BY s.vec_id, s.m
+                                ORDER BY {_PQ_L2} ASC, c.code_id) AS rn
+      FROM allsub s JOIN cb c ON c.m = s.m
+    ) WHERE rn = 1
+  )
+  SELECT vec_id,
+         max(CASE WHEN m = 0 THEN code_id END) AS code0,
+         max(CASE WHEN m = 1 THEN code_id END) AS code1,
+         max(CASE WHEN m = 2 THEN code_id END) AS code2,
+         max(CASE WHEN m = 3 THEN code_id END) AS code3
+  FROM codes GROUP BY vec_id
+"""
+_IVFPQ_LUT_SQL = f"""
+  WITH {_pq_kmeans_cte()}
+  q AS (SELECT vec_id AS query_id, v FROM e WHERE vec_id < {_PQ_NQ})
+  SELECT q.query_id, c.m, c.code_id,
+         list_sum(list_transform(range(1, 17),
+           i -> (q.v[c.m*16 + i] - c.cv[i]) * (q.v[c.m*16 + i] - c.cv[i]))) AS d2
+  FROM q CROSS JOIN cb c
+"""
+_IVFPQ_TOPK_ORACLE = f"""
+WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+cand AS ({_IVFPQ_CAND_SQL}),
+pc AS ({_IVFPQ_CODES_SQL}),
+lut AS ({_IVFPQ_LUT_SQL}),
+adc AS (
+  SELECT cd.query_id, cd.neighbor_id,
+         l0.d2 + l1.d2 + l2.d2 + l3.d2 AS adc
+  FROM cand cd
+  JOIN pc p ON p.vec_id = cd.neighbor_id
+  JOIN lut l0 ON l0.query_id = cd.query_id AND l0.m = 0 AND l0.code_id = p.code0
+  JOIN lut l1 ON l1.query_id = cd.query_id AND l1.m = 1 AND l1.code_id = p.code1
+  JOIN lut l2 ON l2.query_id = cd.query_id AND l2.m = 2 AND l2.code_id = p.code2
+  JOIN lut l3 ON l3.query_id = cd.query_id AND l3.m = 3 AND l3.code_id = p.code3
+)
+SELECT query_id, neighbor_id, CAST(rn AS INTEGER) AS rank,
+       floor(adc * 1e6 + 0.5) / 1e6 AS adc_dist
+FROM (
+  SELECT *, row_number() OVER (PARTITION BY query_id
+                               ORDER BY adc, neighbor_id) AS rn
+  FROM adc
+) WHERE rn <= {_PQ_TOPK}
+"""
+
+# Per-width stitch for sim_nprobe_sweep_pq_disk: qprobe keeps its probe
+# rank, the ADC chain scores each (query, candidate) pair ONCE, and the
+# per-width top-3 just filters probe_rn <= np — the same one-scoring-pass
+# shape as the in-session sweep's oracle.
+_IVFPQ_PROBE_CAND_SQL = f"""
+  WITH {_ivf_kmeans_cte()}
+  ranked AS (
+    SELECT vec_id, cent_id, rn FROM (
+      SELECT e.vec_id, c.cent_id,
+             row_number() OVER (PARTITION BY e.vec_id
+                                ORDER BY {_COS_VC_DUCK} DESC, c.cent_id) AS rn
+      FROM e CROSS JOIN cent c
+    )
+  ),
+  assign AS (SELECT vec_id, cent_id FROM ranked WHERE rn = 1),
+  qprobe AS (
+    SELECT vec_id AS query_id, cent_id, rn AS probe_rn
+    FROM ranked WHERE vec_id < {_PQ_NQ}
+  )
+  SELECT q.query_id, a.vec_id AS neighbor_id, q.probe_rn
+  FROM qprobe q JOIN assign a
+    ON a.cent_id = q.cent_id AND a.vec_id <> q.query_id
+"""
+_NPROBE_SWEEP_PQ_ORACLE = f"""
+WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+cand AS ({_IVFPQ_PROBE_CAND_SQL}),
+pc AS ({_IVFPQ_CODES_SQL}),
+lut AS ({_IVFPQ_LUT_SQL}),
+adc AS (
+  SELECT cd.query_id, cd.neighbor_id, cd.probe_rn,
+         l0.d2 + l1.d2 + l2.d2 + l3.d2 AS adc
+  FROM cand cd
+  JOIN pc p ON p.vec_id = cd.neighbor_id
+  JOIN lut l0 ON l0.query_id = cd.query_id AND l0.m = 0 AND l0.code_id = p.code0
+  JOIN lut l1 ON l1.query_id = cd.query_id AND l1.m = 1 AND l1.code_id = p.code1
+  JOIN lut l2 ON l2.query_id = cd.query_id AND l2.m = 2 AND l2.code_id = p.code2
+  JOIN lut l3 ON l3.query_id = cd.query_id AND l3.m = 3 AND l3.code_id = p.code3
+),
+axis AS (SELECT unnest([{", ".join(str(x) for x in _NPROBE_AXIS)}]) AS np),
+pern AS (
+  SELECT a.query_id, a.neighbor_id, a.adc, x.np
+  FROM adc a CROSS JOIN axis x WHERE a.probe_rn <= x.np
+),
+topk AS (
+  SELECT np, query_id, neighbor_id FROM (
+    SELECT *, row_number() OVER (PARTITION BY np, query_id
+                                 ORDER BY adc, neighbor_id) AS rk
+    FROM pern
+  ) WHERE rk <= 3
+),
+bf AS ({_BRUTEFORCE_ORACLE}),
+hits AS (
+  SELECT t.np, count(*) AS n_hits
+  FROM topk t JOIN bf b
+    ON b.query_id = t.query_id AND b.neighbor_id = t.neighbor_id
+   AND b.rank <= 3
+  GROUP BY t.np
+),
+counts AS (SELECT np, count(*) AS n_candidates FROM pern GROUP BY np),
+nq AS (SELECT count(DISTINCT query_id) AS q FROM bf)
+SELECT CAST(x.np AS INTEGER) AS nprobe,
+       CAST(coalesce(c.n_candidates, 0) AS BIGINT) AS n_candidates,
+       CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
+       floor((coalesce(h.n_hits, 0) * 1.0 / (nq.q * 3)) * 1e6 + 0.5) / 1e6
+         AS recall_at_3
+FROM axis x LEFT JOIN counts c ON c.np = x.np
+LEFT JOIN hits h ON h.np = x.np CROSS JOIN nq
+"""
+
+
 @query(
     "sim_ivfpq_topk",
-    oracle=None,  # late-bound below: stitches the IVF and PQ CTE chains
+    oracle=_IVFPQ_TOPK_ORACLE,
     doc="IVF+PQ search (Jegou et al. TPAMI'11, the FAISS IVFPQ "
     "architecture): queries route through the IVF coarse quantizer to "
     "their nprobe nearest centroid lists, and only vectors in the "
@@ -4039,8 +4161,6 @@ def dsir_importance_weights(
     tags=("similarity", "quantization", "ext"),
 )
 def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .extensions import _IVF_NPROBE, _ivf_centroids
-
     emb = (
         load(spark, sf_dir, "embeddings")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
@@ -4103,96 +4223,9 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _late_bind_ivfpq() -> None:
-    """Stitch the two registered index definitions' CTE chains into one
-    oracle. Each chain lives in its OWN nested WITH scope (their CTE
-    names collide: samp/dims/c0/a1...), referencing the shared outer
-    ``e``; DuckDB scopes nested WITHs per subquery."""
-    from .extensions import _COS_VC_DUCK, _IVF_NPROBE, _ivf_kmeans_cte
-    from ..registry import REGISTRY
-
-    cand_sql = f"""
-  WITH {_ivf_kmeans_cte()}
-  assign AS (
-    SELECT vec_id, cent_id FROM (
-      SELECT e.vec_id, c.cent_id,
-             row_number() OVER (PARTITION BY e.vec_id
-                                ORDER BY {_COS_VC_DUCK} DESC, c.cent_id) AS rn
-      FROM e CROSS JOIN cent c
-    ) WHERE rn = 1
-  ),
-  qprobe AS (
-    SELECT vec_id AS query_id, cent_id FROM (
-      SELECT e.vec_id, c.cent_id,
-             row_number() OVER (PARTITION BY e.vec_id
-                                ORDER BY {_COS_VC_DUCK} DESC, c.cent_id) AS rn
-      FROM e CROSS JOIN cent c WHERE e.vec_id < {_PQ_NQ}
-    ) WHERE rn <= {_IVF_NPROBE}
-  )
-  SELECT DISTINCT q.query_id, a.vec_id AS neighbor_id
-  FROM qprobe q JOIN assign a ON a.cent_id = q.cent_id
-  WHERE a.vec_id <> q.query_id
-"""
-    pc_sql = f"""
-  WITH {_pq_kmeans_cte()}
-  allsub AS (
-    SELECT vec_id, m, list_transform(range(1, 17), i -> v[m*16 + i]) AS sv
-    FROM e CROSS JOIN ms
-  ),
-  codes AS (
-    SELECT vec_id, m, code_id FROM (
-      SELECT s.vec_id, s.m, c.code_id,
-             row_number() OVER (PARTITION BY s.vec_id, s.m
-                                ORDER BY {_PQ_L2} ASC, c.code_id) AS rn
-      FROM allsub s JOIN cb c ON c.m = s.m
-    ) WHERE rn = 1
-  )
-  SELECT vec_id,
-         max(CASE WHEN m = 0 THEN code_id END) AS code0,
-         max(CASE WHEN m = 1 THEN code_id END) AS code1,
-         max(CASE WHEN m = 2 THEN code_id END) AS code2,
-         max(CASE WHEN m = 3 THEN code_id END) AS code3
-  FROM codes GROUP BY vec_id
-"""
-    lut_sql = f"""
-  WITH {_pq_kmeans_cte()}
-  q AS (SELECT vec_id AS query_id, v FROM e WHERE vec_id < {_PQ_NQ})
-  SELECT q.query_id, c.m, c.code_id,
-         list_sum(list_transform(range(1, 17),
-           i -> (q.v[c.m*16 + i] - c.cv[i]) * (q.v[c.m*16 + i] - c.cv[i]))) AS d2
-  FROM q CROSS JOIN cb c
-"""
-    REGISTRY["sim_ivfpq_topk"].oracle = f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-cand AS ({cand_sql}),
-pc AS ({pc_sql}),
-lut AS ({lut_sql}),
-adc AS (
-  SELECT cd.query_id, cd.neighbor_id,
-         l0.d2 + l1.d2 + l2.d2 + l3.d2 AS adc
-  FROM cand cd
-  JOIN pc p ON p.vec_id = cd.neighbor_id
-  JOIN lut l0 ON l0.query_id = cd.query_id AND l0.m = 0 AND l0.code_id = p.code0
-  JOIN lut l1 ON l1.query_id = cd.query_id AND l1.m = 1 AND l1.code_id = p.code1
-  JOIN lut l2 ON l2.query_id = cd.query_id AND l2.m = 2 AND l2.code_id = p.code2
-  JOIN lut l3 ON l3.query_id = cd.query_id AND l3.m = 3 AND l3.code_id = p.code3
-)
-SELECT query_id, neighbor_id, CAST(rn AS INTEGER) AS rank,
-       floor(adc * 1e6 + 0.5) / 1e6 AS adc_dist
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY adc, neighbor_id) AS rn
-  FROM adc
-) WHERE rn <= {_PQ_TOPK}
-"""
-
-
-_late_bind_ivfpq()
-
-
 @query(
     "sim_ivfpq_disk_topk",
-    oracle=None,  # late-bound below: shares sim_ivfpq_topk's oracle
+    oracle=_IVFPQ_TOPK_ORACLE,
     doc="The persisted FAISS IndexIVFPQ: coarse centroids, PQ "
     "codebooks, and per-vector codes on disk — codes partitioned by "
     "coarse list, RAW VECTORS NEVER STORED (the 16x compression is "
@@ -4208,7 +4241,6 @@ def sim_ivfpq_disk_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..sources.ivf_index import build_ivfpq_index, search_ivfpq_index
-    from .extensions import _IVF_NPROBE, _ivf_disk_index_path
 
     path = _ivf_disk_index_path(sf_dir) + "_pq"
     if not os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
@@ -4229,18 +4261,9 @@ def sim_ivfpq_disk_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _late_bind_ivfpq_disk() -> None:
-    from ..registry import REGISTRY
-
-    REGISTRY["sim_ivfpq_disk_topk"].oracle = REGISTRY["sim_ivfpq_topk"].oracle
-
-
-_late_bind_ivfpq_disk()
-
-
 @query(
     "sim_nprobe_sweep_pq_disk",
-    oracle=None,  # late-bound below: per-width stitch of the ivfpq CTEs
+    oracle=_NPROBE_SWEEP_PQ_ORACLE,
     doc="The nprobe tuning curve for the COMPRESSED persisted index — "
     "sim_nprobe_sweep_disk's report for the layout you actually serve "
     "at 100 TB (codes only on disk, 16x smaller): at every probe "
@@ -4267,12 +4290,6 @@ def sim_nprobe_sweep_pq_disk(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_ivfpq_index,
         collect_probe_rows,
         probe_candidates,
-    )
-    from .extensions import (
-        _NPROBE_AXIS,
-        _ivf_disk_index_path,
-        _sweep_assemble,
-        sim_topk_bruteforce,
     )
 
     path = _ivf_disk_index_path(sf_dir) + "_pq"
@@ -4338,116 +4355,9 @@ def sim_nprobe_sweep_pq_disk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sweep_assemble(counts, hits, nq)
 
 
-def _late_bind_nprobe_sweep_pq() -> None:
-    """Per-width stitch of the registered ivfpq CTE chains: qprobe
-    keeps its probe rank, the ADC chain scores each (query, candidate)
-    pair ONCE, and the per-width top-3 just filters probe_rn <= np —
-    the same one-scoring-pass shape as the in-session sweep's oracle."""
-    from ..registry import REGISTRY
-    from .extensions import _COS_VC_DUCK, _NPROBE_AXIS, _ivf_kmeans_cte
-
-    bf = REGISTRY["sim_topk_bruteforce"].oracle
-    cand_sql = f"""
-  WITH {_ivf_kmeans_cte()}
-  ranked AS (
-    SELECT vec_id, cent_id, rn FROM (
-      SELECT e.vec_id, c.cent_id,
-             row_number() OVER (PARTITION BY e.vec_id
-                                ORDER BY {_COS_VC_DUCK} DESC, c.cent_id) AS rn
-      FROM e CROSS JOIN cent c
-    )
-  ),
-  assign AS (SELECT vec_id, cent_id FROM ranked WHERE rn = 1),
-  qprobe AS (
-    SELECT vec_id AS query_id, cent_id, rn AS probe_rn
-    FROM ranked WHERE vec_id < {_PQ_NQ}
-  )
-  SELECT q.query_id, a.vec_id AS neighbor_id, q.probe_rn
-  FROM qprobe q JOIN assign a
-    ON a.cent_id = q.cent_id AND a.vec_id <> q.query_id
-"""
-    pc_sql = f"""
-  WITH {_pq_kmeans_cte()}
-  allsub AS (
-    SELECT vec_id, m, list_transform(range(1, 17), i -> v[m*16 + i]) AS sv
-    FROM e CROSS JOIN ms
-  ),
-  codes AS (
-    SELECT vec_id, m, code_id FROM (
-      SELECT s.vec_id, s.m, c.code_id,
-             row_number() OVER (PARTITION BY s.vec_id, s.m
-                                ORDER BY {_PQ_L2} ASC, c.code_id) AS rn
-      FROM allsub s JOIN cb c ON c.m = s.m
-    ) WHERE rn = 1
-  )
-  SELECT vec_id,
-         max(CASE WHEN m = 0 THEN code_id END) AS code0,
-         max(CASE WHEN m = 1 THEN code_id END) AS code1,
-         max(CASE WHEN m = 2 THEN code_id END) AS code2,
-         max(CASE WHEN m = 3 THEN code_id END) AS code3
-  FROM codes GROUP BY vec_id
-"""
-    lut_sql = f"""
-  WITH {_pq_kmeans_cte()}
-  q AS (SELECT vec_id AS query_id, v FROM e WHERE vec_id < {_PQ_NQ})
-  SELECT q.query_id, c.m, c.code_id,
-         list_sum(list_transform(range(1, 17),
-           i -> (q.v[c.m*16 + i] - c.cv[i]) * (q.v[c.m*16 + i] - c.cv[i]))) AS d2
-  FROM q CROSS JOIN cb c
-"""
-    REGISTRY["sim_nprobe_sweep_pq_disk"].oracle = f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-cand AS ({cand_sql}),
-pc AS ({pc_sql}),
-lut AS ({lut_sql}),
-adc AS (
-  SELECT cd.query_id, cd.neighbor_id, cd.probe_rn,
-         l0.d2 + l1.d2 + l2.d2 + l3.d2 AS adc
-  FROM cand cd
-  JOIN pc p ON p.vec_id = cd.neighbor_id
-  JOIN lut l0 ON l0.query_id = cd.query_id AND l0.m = 0 AND l0.code_id = p.code0
-  JOIN lut l1 ON l1.query_id = cd.query_id AND l1.m = 1 AND l1.code_id = p.code1
-  JOIN lut l2 ON l2.query_id = cd.query_id AND l2.m = 2 AND l2.code_id = p.code2
-  JOIN lut l3 ON l3.query_id = cd.query_id AND l3.m = 3 AND l3.code_id = p.code3
-),
-axis AS (SELECT unnest([{", ".join(str(x) for x in _NPROBE_AXIS)}]) AS np),
-pern AS (
-  SELECT a.query_id, a.neighbor_id, a.adc, x.np
-  FROM adc a CROSS JOIN axis x WHERE a.probe_rn <= x.np
-),
-topk AS (
-  SELECT np, query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY np, query_id
-                                 ORDER BY adc, neighbor_id) AS rk
-    FROM pern
-  ) WHERE rk <= 3
-),
-bf AS ({bf}),
-hits AS (
-  SELECT t.np, count(*) AS n_hits
-  FROM topk t JOIN bf b
-    ON b.query_id = t.query_id AND b.neighbor_id = t.neighbor_id
-   AND b.rank <= 3
-  GROUP BY t.np
-),
-counts AS (SELECT np, count(*) AS n_candidates FROM pern GROUP BY np),
-nq AS (SELECT count(DISTINCT query_id) AS q FROM bf)
-SELECT CAST(x.np AS INTEGER) AS nprobe,
-       CAST(coalesce(c.n_candidates, 0) AS BIGINT) AS n_candidates,
-       CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-       floor((coalesce(h.n_hits, 0) * 1.0 / (nq.q * 3)) * 1e6 + 0.5) / 1e6
-         AS recall_at_3
-FROM axis x LEFT JOIN counts c ON c.np = x.np
-LEFT JOIN hits h ON h.np = x.np CROSS JOIN nq
-"""
-
-
-_late_bind_nprobe_sweep_pq()
-
-
 @query(
     "sim_ivfpq_disk_merge",
-    oracle=None,  # late-bound below: the full-rebuild contract
+    oracle=_IVFPQ_TOPK_ORACLE,
     doc="Incremental maintenance for the COMPRESSED index — "
     "sim_ivf_disk_merge's daily-crawl posture applied to the persisted "
     "IndexIVFPQ (sources/ivf_index.py append_ivfpq_index): seed-build "
@@ -4474,7 +4384,6 @@ def sim_ivfpq_disk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_ivfpq_index,
         search_ivfpq_index,
     )
-    from .extensions import _IVF_NPROBE, _IVF_SAMPLE, _ivf_disk_index_path
 
     path = _ivf_disk_index_path(sf_dir) + "_pq_merged"
     marker = os.path.join(path, "_MERGED")
@@ -4511,21 +4420,23 @@ def sim_ivfpq_disk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _late_bind_ivfpq_disk_merge() -> None:
-    from ..registry import REGISTRY
-
-    # incremental == rebuild for the compressed layout: the merged
-    # index must answer exactly like a full-corpus build, which is
-    # what sim_ivfpq_topk's oracle computes
-    REGISTRY["sim_ivfpq_disk_merge"].oracle = REGISTRY["sim_ivfpq_topk"].oracle
-
-
-_late_bind_ivfpq_disk_merge()
-
-
 @query(
     "sim_ivfpq_recall",
-    oracle=None,  # late-bound below: composes two registered oracles
+    oracle=f"""
+WITH bf AS ({_BRUTEFORCE_ORACLE}),
+ipq AS ({_IVFPQ_TOPK_ORACLE}),
+hits AS (
+  SELECT b.query_id, count(*) AS n_hits
+  FROM bf b JOIN ipq i ON i.query_id = b.query_id
+   AND i.neighbor_id = b.neighbor_id
+  WHERE b.rank <= 3 AND i.rank <= 3
+  GROUP BY b.query_id
+),
+q AS (SELECT DISTINCT query_id FROM bf)
+SELECT q.query_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
+       floor((coalesce(h.n_hits, 0) / 3.0) * 1e6 + 0.5) / 1e6 AS recall_at_3
+FROM q LEFT JOIN hits h ON h.query_id = q.query_id
+""",
     doc="ANN quality audit for the composed index — recall@3 of "
     "sim_ivfpq_topk (its top-3 of 5) against the brute-force ground "
     "truth per query: the go/no-go report for serving IVF+PQ, read "
@@ -4537,8 +4448,6 @@ _late_bind_ivfpq_disk_merge()
     tags=("similarity", "eval", "quantization", "ext"),
 )
 def sim_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .extensions import sim_topk_bruteforce
-
     bf = sim_topk_bruteforce(spark, sf_dir).filter(F.col("rank") <= 3)
     ipq = sim_ivfpq_topk(spark, sf_dir).filter(F.col("rank") <= 3)
     hits = (
@@ -4553,32 +4462,6 @@ def sim_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         nh.cast("bigint").alias("n_hits"),
         stable_round(nh / 3.0, 6).alias("recall_at_3"),
     )
-
-
-def _late_bind_ivfpq_recall() -> None:
-    from . import extensions  # noqa: F401  (registers the brute-force oracle)
-    from ..registry import REGISTRY
-
-    bf = REGISTRY["sim_topk_bruteforce"].oracle
-    ipq = REGISTRY["sim_ivfpq_topk"].oracle
-    REGISTRY["sim_ivfpq_recall"].oracle = f"""
-WITH bf AS ({bf}),
-ipq AS ({ipq}),
-hits AS (
-  SELECT b.query_id, count(*) AS n_hits
-  FROM bf b JOIN ipq i ON i.query_id = b.query_id
-   AND i.neighbor_id = b.neighbor_id
-  WHERE b.rank <= 3 AND i.rank <= 3
-  GROUP BY b.query_id
-),
-q AS (SELECT DISTINCT query_id FROM bf)
-SELECT q.query_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-       floor((coalesce(h.n_hits, 0) / 3.0) * 1e6 + 0.5) / 1e6 AS recall_at_3
-FROM q LEFT JOIN hits h ON h.query_id = q.query_id
-"""
-
-
-_late_bind_ivfpq_recall()
 
 
 # ---------------------------------------------------------------------------

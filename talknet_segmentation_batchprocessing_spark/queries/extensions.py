@@ -190,9 +190,10 @@ WHERE p.n_common * 1.0 / (sa.n + sb.n - p.n_common) >= 0.2
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _doc_shingles(spark, sf_dir)
-    # sizes is joined on both pair sides — persist the (tiny, one row
-    # per doc) frame so the aggregation over sh runs once, not twice
-    sizes = track_persist(sh.groupBy("doc_id").agg(F.count("*").alias("n")))
+    # sizes is joined on both pair sides; the second side reads the
+    # first's exchange (ReusedExchange), so the aggregation over sh runs
+    # once without a persist
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     x = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     y = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     pairs = (
@@ -325,9 +326,10 @@ def _build_oriented_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = e.unionAll(
         e.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     )
-    # deg feeds BOTH sides of the ranking join — persist so the
-    # degree aggregation runs once
-    deg = track_persist(
+    # deg feeds BOTH sides of the ranking join; the second side reads
+    # the first's exchange (ReusedExchange), so the degree aggregation
+    # runs once without a persist
+    deg = (
         sym.groupBy("doc_a")
         .agg(F.count("*").alias("d"))
         .select(
@@ -967,9 +969,7 @@ def dedup_embedding_cosine(
     )
 
 
-@query(
-    "sim_topk_bruteforce",
-    oracle=f"""
+_BRUTEFORCE_ORACLE = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 pairs AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.v AS av, c.v AS bv
@@ -983,7 +983,12 @@ FROM (
   SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rn
   FROM scored
 ) WHERE rn <= 5
-""",
+"""
+
+
+@query(
+    "sim_topk_bruteforce",
+    oracle=_BRUTEFORCE_ORACLE,
     doc="ANN baseline: brute-force cosine top-5 for 10 query vectors. "
     "Scale path: broadcast the query batch, scan candidates once, "
     "partial top-k per partition then global merge (Spark does this via "
@@ -1170,9 +1175,7 @@ _DOT_VC_SPARK = (
 )
 
 
-@query(
-    "sim_ivf_topk",
-    oracle=f"""
+_IVF_TOPK_ORACLE = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 {_ivf_kmeans_cte()}
 assign AS (
@@ -1211,7 +1214,12 @@ FROM (
   SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rn
   FROM scored
 ) WHERE rn <= 3
-""",
+"""
+
+
+@query(
+    "sim_ivf_topk",
+    oracle=_IVF_TOPK_ORACLE,
     doc="ANN scale path #2: IVF-Flat — coarse centroids from "
     "deterministic sampled k-means (bounded training sample, fixed "
     "Lloyd rounds, broadcast-K assignment), every vector assigned to "
@@ -1335,7 +1343,7 @@ def _ivf_disk_index_path(sf_dir: str) -> str:
 
 @query(
     "sim_ivf_disk_topk",
-    oracle=None,  # late-bound below: identical contract to sim_ivf_topk
+    oracle=_IVF_TOPK_ORACLE,
     doc="ANN scale path #2b: the IVF index ON DISK "
     "(sources/ivf_index.py) — vectors parquet-partitioned by their "
     "coarse-quantizer list id, built once per dataset fingerprint and "
@@ -1373,7 +1381,9 @@ def sim_ivf_disk_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_ivf_disk_merge",
-    oracle=None,  # late-bound below: the full-rebuild contract
+    # incremental == rebuild: the merged index must answer exactly like
+    # a full-corpus build, which is what sim_ivf_topk's oracle computes
+    oracle=_IVF_TOPK_ORACLE,
     doc="Incremental ANN index maintenance — the daily-crawl posture "
     "for the on-disk IVF index (FAISS IndexIVF.add): the index is "
     "seeded from the first half of the corpus (which contains the "
@@ -1432,18 +1442,6 @@ def sim_ivf_disk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return search_ivf_index(spark, path, queries, k=3, nprobe=_IVF_NPROBE)
-
-
-def _late_bind_ivf_disk_oracle() -> None:
-    from ..registry import REGISTRY
-
-    REGISTRY["sim_ivf_disk_topk"].oracle = REGISTRY["sim_ivf_topk"].oracle
-    # incremental == rebuild: the merged index must answer exactly like
-    # a full-corpus build, which is what sim_ivf_topk's oracle computes
-    REGISTRY["sim_ivf_disk_merge"].oracle = REGISTRY["sim_ivf_topk"].oracle
-
-
-_late_bind_ivf_disk_oracle()
 
 
 @query(
@@ -2552,17 +2550,12 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nodes.groupBy("node").agg(F.count("*").cast("bigint").alias("n_triangles"))
 
 
-def _recall_oracle() -> str:
-    """Composed from the registered brute-force and IVF oracles (the
-    ground truth and the candidate ANN are the already-proven
-    definitions, not re-derivations)."""
-    from ..registry import REGISTRY
-
-    bf = REGISTRY["sim_topk_bruteforce"].oracle
-    ivf = REGISTRY["sim_ivf_topk"].oracle
-    return f"""
-WITH bf AS ({bf}),
-ivf AS ({ivf}),
+# Composed from the brute-force and IVF oracles (the ground truth and
+# the candidate ANN are the already-proven definitions, not
+# re-derivations).
+_RECALL_ORACLE = f"""
+WITH bf AS ({_BRUTEFORCE_ORACLE}),
+ivf AS ({_IVF_TOPK_ORACLE}),
 hits AS (
   SELECT b.query_id, count(*) AS n_hits
   FROM bf b JOIN ivf i ON i.query_id = b.query_id
@@ -2579,7 +2572,7 @@ FROM q LEFT JOIN hits h ON h.query_id = q.query_id
 
 @query(
     "sim_recall_eval",
-    oracle=None,  # late-bound below: composes two registered oracles
+    oracle=_RECALL_ORACLE,
     doc="ANN quality audit — recall@3 of the IVF index against the "
     "brute-force ground truth, per query: the STANDARD metric every "
     "ANN deployment tracks. Both sides are the registered queries "
@@ -2607,19 +2600,13 @@ def sim_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from ..registry import REGISTRY as _EXT_REG  # noqa: E402
-
-_EXT_REG["sim_recall_eval"].oracle = _recall_oracle()
-
-
 _NPROBE_AXIS = (1, 2, 4, 8)
 
 
-def _nprobe_sweep_oracle() -> str:
-    from ..registry import REGISTRY
-
-    bf = REGISTRY["sim_topk_bruteforce"].oracle
-    return f"""
+# One curve, two queries: the disk layout stores the identical
+# assignment, so sim_nprobe_sweep_disk is checked against the same
+# oracle as the in-session sim_nprobe_sweep.
+_NPROBE_SWEEP_ORACLE = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 {_ivf_kmeans_cte()}
 ranked AS (
@@ -2661,7 +2648,7 @@ topk AS (
     FROM pern
   ) WHERE rk <= 3
 ),
-bf AS ({bf}),
+bf AS ({_BRUTEFORCE_ORACLE}),
 hits AS (
   SELECT t.np, count(*) AS n_hits
   FROM topk t JOIN bf b
@@ -2683,7 +2670,7 @@ LEFT JOIN hits h ON h.np = x.np CROSS JOIN nq
 
 @query(
     "sim_nprobe_sweep",
-    oracle=None,  # late-bound below (needs sim_topk_bruteforce registered)
+    oracle=_NPROBE_SWEEP_ORACLE,
     doc="The nprobe tuning curve — dedup_threshold_sweep's "
     "measure-the-knob pattern applied to the IVF index: recall@3 vs "
     "brute-force ground truth AND candidate-scan cost at every probe "
@@ -2767,9 +2754,6 @@ def sim_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sweep_assemble(counts, hits, nq)
 
 
-_EXT_REG["sim_nprobe_sweep"].oracle = _nprobe_sweep_oracle()
-
-
 def _sweep_assemble(
     counts: DataFrame, hits: DataFrame, nq: DataFrame
 ) -> DataFrame:
@@ -2808,7 +2792,7 @@ def _sweep_assemble(
 
 @query(
     "sim_nprobe_sweep_disk",
-    oracle=None,  # late-bound below: identical curve to sim_nprobe_sweep
+    oracle=_NPROBE_SWEEP_ORACLE,
     doc="The nprobe tuning curve against the PERSISTED index — the "
     "report a 100 TB operator actually reads before setting the knob: "
     "sim_nprobe_sweep measures the in-session assignment, this one "
@@ -2922,11 +2906,6 @@ def sim_nprobe_sweep_disk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("_nh"))
     )
     return _sweep_assemble(counts, hits, nq)
-
-
-# the disk layout stores the identical assignment, so the persisted
-# curve is checked against the SAME oracle as the in-session sweep
-_EXT_REG["sim_nprobe_sweep_disk"].oracle = _nprobe_sweep_oracle()
 
 
 @query(
@@ -3255,8 +3234,8 @@ def _keep_lsh_recall_oracle() -> str:
     stratum injected into each oracle's single ``FROM embeddings``
     site (asserted, so an oracle refactor cannot silently desync)."""
     stratum = f"FROM embeddings WHERE vec_id % {_AUDIT_STRATUM_K} = 0"
-    exact = _EXT_REG["dedup_semantic_keep"].oracle
-    lsh = _EXT_REG["dedup_semantic_keep_lsh"].oracle
+    exact = _SEMANTIC_KEEP_ORACLE
+    lsh = _SEMANTIC_KEEP_LSH_ORACLE
     assert exact.count("FROM embeddings") == 1, "exact oracle shape changed"
     assert lsh.count("FROM embeddings") == 1, "lsh oracle shape changed"
     exact = exact.replace("FROM embeddings", stratum)
@@ -3281,7 +3260,7 @@ FROM agree a
 
 @query(
     "dedup_keep_lsh_recall",
-    oracle=None,  # late-bound below: composes two registered oracles
+    oracle=_keep_lsh_recall_oracle(),
     doc="SemDeDup quality audit — survivor-set agreement of the "
     "LSH-candidate scale path (dedup_semantic_keep_lsh) against the "
     "exact all-pairs baseline (dedup_semantic_keep): the metric that "
@@ -3333,9 +3312,6 @@ def dedup_keep_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "keep_precision"
         ),
     )
-
-
-_EXT_REG["dedup_keep_lsh_recall"].oracle = _keep_lsh_recall_oracle()
 
 
 _PR_ITERS = 5
@@ -3393,7 +3369,7 @@ FROM final
 
 @query(
     "graph_pagerank",
-    oracle=None,  # late-bound below (generated CTE chain)
+    oracle=_pagerank_oracle(),
     doc=f"PageRank on the near-dup similarity graph, {_PR_ITERS} fixed "
     f"iterations, damping {_PR_DAMP}: per iteration one equi-join of "
     "the rank vector against the (materialized, degree-annotated) "
@@ -3454,9 +3430,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return r.select("doc_id", stable_round("r", 6).alias("pagerank"))
 
 
-_EXT_REG["graph_pagerank"].oracle = _pagerank_oracle()
-
-
 def _keep_canonical_lsh_oracle() -> str:
     """Composed: minhash-LSH candidate pairs (the registered oracle's
     definition) thresholded at true Jaccard >= 0.2, then the same
@@ -3483,7 +3456,7 @@ WHERE l.cluster_id = d.doc_id
 
 @query(
     "dedup_keep_canonical_lsh",
-    oracle=None,  # late-bound below (composes the minhash oracle)
+    oracle=_keep_canonical_lsh_oracle(),
     doc="The complete text dedup pass at the 100 TB CANDIDATE shape — "
     "dedup_keep_canonical with the pair stage swapped from the exact "
     "shingle self-join to minhash-LSH band candidates (true-Jaccard "
@@ -3509,9 +3482,6 @@ def dedup_keep_canonical_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     keep = out.filter(F.col("component") == F.col("doc_id")).select("doc_id")
     return docs.join(keep, "doc_id").select("doc_id", "lang", "n_chars")
-
-
-_EXT_REG["dedup_keep_canonical_lsh"].oracle = _keep_canonical_lsh_oracle()
 
 
 _CLUSTER_STATS_ORACLE = f"""
@@ -3624,12 +3594,10 @@ FROM scored
 def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = _near_dup_edges(spark, sf_dir)
     ascii_lower = F.regexp_replace(F.lower(F.col("text")), r"[^\x20-\x7e]", "")
-    pfx = track_persist(
-        load(spark, sf_dir, "documents").select(
-            "doc_id",
-            F.substring(ascii_lower, 1, _ED_PREFIX).alias("p"),
-        ).withColumn("plen", F.length("p"))
-    )
+    pfx = load(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.substring(ascii_lower, 1, _ED_PREFIX).alias("p"),
+    ).withColumn("plen", F.length("p"))
     a = pfx.select(F.col("doc_id").alias("doc_a"), F.col("p").alias("pa"),
                    F.col("plen").alias("la"))
     b = pfx.select(F.col("doc_id").alias("doc_b"), F.col("p").alias("pb"),
@@ -4040,7 +4008,7 @@ FROM (
 
 @query(
     "sim_knn_graph_lsh",
-    oracle=None,  # late-bound below (params CTE computed at bind time)
+    oracle=_knn_graph_oracle(),
     doc=f"kNN-graph construction (top-{_KNN_K} neighbors per vector) "
     "with candidates restricted to the vector's LSH bucket — the "
     "building block SemDeDup-style clustering and graph-ANN indexes "
@@ -4076,14 +4044,12 @@ def sim_knn_graph_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         min(_KNN_MAX_BITS, (m - 1).bit_length() if m > 1 else 1),
     )
     sigs = sign_signatures(all_v, bits)
-    buckets = track_persist(
-        sigs.select(
-            "vec_id",
-            F.expr(
-                f"aggregate(sequence(0, {bits - 1}), 0L, (acc, j) -> "
-                f"acc + IF(signs[j], cast(shiftleft(1, j) as bigint), 0L))"
-            ).alias("bucket"),
-        )
+    buckets = sigs.select(
+        "vec_id",
+        F.expr(
+            f"aggregate(sequence(0, {bits - 1}), 0L, (acc, j) -> "
+            f"acc + IF(signs[j], cast(shiftleft(1, j) as bigint), 0L))"
+        ).alias("bucket"),
     )
     emb = (
         load(spark, sf_dir, "embeddings")
@@ -4162,11 +4128,6 @@ def sim_knn_graph_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         stable_round("cs", 4).alias("cos_sim"),
         "rank",
     )
-
-
-from ..registry import REGISTRY as _REG  # noqa: E402
-
-_REG["sim_knn_graph_lsh"].oracle = _knn_graph_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -4506,7 +4467,25 @@ def sim_hard_negatives_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_hard_negatives_recall",
-    oracle=None,  # late-bound below: composes the two registered oracles
+    oracle=f"""
+WITH ex AS ({_HARD_NEG_ORACLE}),
+an AS ({_HARD_NEG_ANN_ORACLE}),
+hits AS (
+  SELECT e.query_id, count(*) AS n_hits
+  FROM ex e JOIN an a ON a.query_id = e.query_id
+   AND a.neighbor_id = e.neighbor_id
+  GROUP BY e.query_id
+),
+per_q AS (
+  SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact
+  FROM ex GROUP BY query_id
+)
+SELECT p.query_id, p.n_exact,
+       CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
+       CAST((2 * coalesce(h.n_hits, 0) * 1000000 + p.n_exact)
+            // (2 * p.n_exact) AS BIGINT) AS recall_ppm
+FROM per_q p LEFT JOIN hits h ON h.query_id = p.query_id
+""",
     doc=f"ANN quality audit for index-backed hard negatives - "
     f"recall@{_HN_K} of sim_hard_negatives_ann against the exact-pass "
     "ground truth per query: the go/no-go report for mining negatives "
@@ -4542,35 +4521,6 @@ def sim_hard_negatives_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("recall_ppm"),
     )
-
-
-def _late_bind_hard_neg_recall() -> None:
-    from ..registry import REGISTRY
-
-    exact = REGISTRY["sim_hard_negatives"].oracle
-    ann = REGISTRY["sim_hard_negatives_ann"].oracle
-    REGISTRY["sim_hard_negatives_recall"].oracle = f"""
-WITH ex AS ({exact}),
-an AS ({ann}),
-hits AS (
-  SELECT e.query_id, count(*) AS n_hits
-  FROM ex e JOIN an a ON a.query_id = e.query_id
-   AND a.neighbor_id = e.neighbor_id
-  GROUP BY e.query_id
-),
-per_q AS (
-  SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact
-  FROM ex GROUP BY query_id
-)
-SELECT p.query_id, p.n_exact,
-       CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-       CAST((2 * coalesce(h.n_hits, 0) * 1000000 + p.n_exact)
-            // (2 * p.n_exact) AS BIGINT) AS recall_ppm
-FROM per_q p LEFT JOIN hits h ON h.query_id = p.query_id
-"""
-
-
-_late_bind_hard_neg_recall()
 
 
 # ---------------------------------------------------------------------------
@@ -4982,7 +4932,17 @@ def contamination_semantic_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "contamination_semantic_agreement",
-    oracle=None,  # late-bound below: composes the two registered oracles
+    oracle=f"""
+WITH ex AS ({_SEMANTIC_CONTAM_ORACLE}),
+an AS ({_SEMANTIC_CONTAM_ANN_ORACLE})
+SELECT e.test_id,
+       a.nearest_train_id IS NOT NULL AS ann_found,
+       coalesce(a.nearest_train_id = e.nearest_train_id, FALSE)
+         AS same_nearest,
+       coalesce(a.contaminated = e.contaminated, NOT e.contaminated)
+         AS same_verdict
+FROM ex e LEFT JOIN an a ON a.test_id = e.test_id
+""",
     doc="Decision-level audit for index-backed decontamination - per "
     "stratum test vector, does contamination_semantic_ann reach the "
     "exact query's verdict? Columns: whether the ANN variant found ANY "
@@ -5019,27 +4979,6 @@ def contamination_semantic_agreement(
             F.col("ann_verdict") == F.col("ex_verdict"), ~F.col("ex_verdict")
         ).alias("same_verdict"),
     )
-
-
-def _late_bind_contam_agreement() -> None:
-    from ..registry import REGISTRY
-
-    exact = REGISTRY["contamination_semantic"].oracle
-    ann = REGISTRY["contamination_semantic_ann"].oracle
-    REGISTRY["contamination_semantic_agreement"].oracle = f"""
-WITH ex AS ({exact}),
-an AS ({ann})
-SELECT e.test_id,
-       a.nearest_train_id IS NOT NULL AS ann_found,
-       coalesce(a.nearest_train_id = e.nearest_train_id, FALSE)
-         AS same_nearest,
-       coalesce(a.contaminated = e.contaminated, NOT e.contaminated)
-         AS same_verdict
-FROM ex e LEFT JOIN an a ON a.test_id = e.test_id
-"""
-
-
-_late_bind_contam_agreement()
 
 
 # ---------------------------------------------------------------------------

@@ -395,7 +395,7 @@ def sketch_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # x 4 again for the estimates, plus a third full aggregation for
     # the exact counts). One candidate frame feeds both cell build and
     # estimate lookup.
-    occ = track_persist(
+    occ = (
         docs.select(F.split(F.lower("text"), " ").alias("w"))
         .filter(F.size("w") >= 3)
         .select(F.explode(word_shingles("w", 3)).alias("tok"))

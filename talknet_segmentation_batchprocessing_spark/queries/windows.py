@@ -921,14 +921,10 @@ def w19_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _conversion_latency_oracle() -> str:
-    """Composed from the registered funnel oracle: the latency report
-    describes exactly the funnel users run."""
-    from ..registry import REGISTRY
-
-    funnel = REGISTRY["w12_funnel_steps"].oracle
-    return f"""
-WITH f AS ({funnel}),
+# Composed from the funnel oracle: the latency report describes exactly
+# the funnel users run.
+_CONVERSION_LATENCY_ORACLE = f"""
+WITH f AS ({_FUNNEL_ORACLE}),
 conv AS (
   SELECT user_id,
          t1_us // 86400000000 AS cohort_day,
@@ -947,7 +943,7 @@ FROM conv GROUP BY cohort_day
 
 @query(
     "w20_conversion_latency",
-    oracle=None,  # late-bound below (composes the registered funnel oracle)
+    oracle=_CONVERSION_LATENCY_ORACLE,
     doc="Conversion-latency distribution: for users who completed the "
     "w12 funnel, view->purchase latency in integer milliseconds "
     "(microsecond difference rounded on the integer grid — the j9 "
@@ -1169,11 +1165,6 @@ def w22_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from ..registry import REGISTRY as _WREG  # noqa: E402
-
-_WREG["w20_conversion_latency"].oracle = _conversion_latency_oracle()
-
-
 # ---------------------------------------------------------------------------
 # w23: RFM customer segmentation (round 7)
 # ---------------------------------------------------------------------------
@@ -1261,7 +1252,6 @@ def w23_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("vmicro"),
         )
     )
-    p = track_persist(p)
     per_user = p.groupBy("user_id").agg(
         F.max("us").alias("last_us"),
         F.count("*").cast("bigint").alias("freq"),

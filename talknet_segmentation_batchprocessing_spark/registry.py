@@ -27,7 +27,10 @@ from pyspark.sql import DataFrame, SparkSession
 class QuerySpec:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # DuckDB SQL over pre-registered views, or None => rows-only check
+    # DuckDB SQL over pre-registered views, or None => rows-only check.
+    # Bound in the query's own @query(oracle=...) decorator; an oracle
+    # that composes another names that query's SQL as a module constant.
+    oracle: str | None
     doc: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
 
@@ -70,18 +73,29 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# DataFrames persist()ed inside query bodies (shingle sets, minhash
-# signatures, IVF rankings). persist is only a recompute hint — dropping
-# it never changes results — so the frames are released lazily: at the
-# START of the next registry query. By then the previous query's output
-# has been materialized by whoever called it (driver sweep, bench loop,
-# parity tests), so a 70-query sweep holds at most one query's caches
-# instead of accumulating all of them across a long-lived session.
+# DataFrames persist()ed inside query bodies: frames that two or more
+# Spark actions read (track_persist states the full keep rule). persist
+# is only a recompute hint — dropping it never changes results — so the
+# frames are released lazily: at the START of the next registry query.
+# By then the previous query's output has been materialized by whoever
+# called it (driver sweep, bench loop, parity tests), so a long sweep
+# holds at most one query's caches instead of accumulating all of them
+# across a long-lived session.
 _PERSISTED: list[DataFrame] = []
 
 
 def track_persist(df: DataFrame) -> DataFrame:
-    """``df.persist()`` with sweep-scoped lifecycle tracking."""
+    """``df.persist()`` with sweep-scoped lifecycle tracking.
+
+    Keep rule: persist a frame that two or more Spark actions read — a
+    driver action in the query body or in a helper it calls (a count,
+    a collect, a checkpoint-materializing probe) plus the returned
+    plan. A frame that only one action reads is left unpersisted when
+    that action's plan computes its shared subtree once (a
+    ReusedExchange serves every other reader) or when the other reads
+    re-run only a parquet scan plus project/filter: the cache build
+    then costs a pass and buys nothing. Any other single-action frame
+    keeps its persist unless an A/B shows dropping it is no slower."""
     _PERSISTED.append(df)
     return df.persist()
 

@@ -220,6 +220,23 @@ def test_ap_one_phase_sorts_exactly_twice(spark):
         assert n_sorts <= 2, f"{name}: {n_sorts} Sort nodes\n{plan}"
 
 
+def _drop_graph_table(spark, name):
+    """Drop a published graph table and delete its external location:
+    ``DROP TABLE`` keeps an external table's files."""
+    import shutil
+    from urllib.parse import urlparse
+
+    if not spark.catalog.tableExists(name):
+        return
+    loc = next(
+        r.data_type
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+        if r.col_name == "Location"
+    )
+    spark.sql(f"DROP TABLE {name}")
+    shutil.rmtree(urlparse(loc).path, ignore_errors=True)
+
+
 def test_triangle_bucketed_wedge_join_zero_exchange(spark, monkeypatch):
     """Round 6: the oriented near-dup edge table is published bucketed
     on s_rk (sources/bucketed.py), so the wedge SELF-join — the hot
@@ -252,6 +269,12 @@ def test_triangle_bucketed_wedge_join_zero_exchange(spark, monkeypatch):
         spark.conf.set(
             "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
         )
+        _drop_graph_table(
+            spark,
+            extensions._graph_table_name(
+                spark, "graph_oriented_edges", SF_SMOKE
+            ),
+        )
 
 
 @pytest.mark.parametrize("side", ["broadcast", "bucketed"])
@@ -274,8 +297,32 @@ def test_graph_table_republish_serves_new_rows(spark, monkeypatch, side):
         assert publish(3) == [0, 1, 2]
         assert publish(5) == [0, 1, 2, 3, 4]
     finally:
-        name = extensions._graph_table_name(spark, base, SF_SMOKE)
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        _drop_graph_table(
+            spark, extensions._graph_table_name(spark, base, SF_SMOKE)
+        )
+
+
+@pytest.mark.parametrize("name", ["dedup_ngram_jaccard", "events_anomaly_mad"])
+def test_single_action_frame_shares_exchange_without_persist(spark, name):
+    """A frame that only the returned plan reads is not persisted:
+    within one action, exchange reuse already computes the shared
+    aggregate once. dedup_ngram_jaccard joins its per-doc shingle
+    counts onto both sides of each pair, and events_anomaly_mad
+    aggregates the per-user deviations that it also returns. After the
+    action the final plan scans no cache, and a ReusedExchange serves
+    the second reader."""
+    registry.release_persisted()
+    df = q(name, spark)
+    df.collect()
+    final = (
+        df._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+        .split("\n+- == Initial Plan ==")[0]
+    )
+    assert "isFinalPlan=true" in final
+    assert "InMemoryTableScan" not in final, final
+    assert "ReusedExchange" in final, final
 
 
 def test_triangle_executed_exchanges_bounded(spark):

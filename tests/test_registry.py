@@ -66,3 +66,30 @@ def test_registered_fn_names_match_query_names():
         if spec.fn.__name__ != name
     }
     assert not mismatched, f"@query decorator attached to the wrong def: {mismatched}"
+
+
+def test_oracles_are_bound_in_the_decorator():
+    """Every oracle is passed in its own ``@query(oracle=...)``: no
+    module under ``queries/`` assigns to a ``.oracle`` attribute after
+    registration, so a query is never registered without its oracle
+    while an import is still running."""
+    import ast
+    from pathlib import Path
+
+    from talknet_segmentation_batchprocessing_spark import queries
+
+    hits = []
+    for path in sorted(Path(queries.__file__).parent.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, (ast.AugAssign, ast.AnnAssign)):
+                targets = [node.target]
+            else:
+                continue
+            hits += [
+                f"{path.name}:{node.lineno}"
+                for t in targets
+                if isinstance(t, ast.Attribute) and t.attr == "oracle"
+            ]
+    assert not hits, f"late .oracle assignments: {hits}"

@@ -67,8 +67,3 @@ def face_pipeline(img: np.ndarray, resize_to: int = 224, crop_to: int = 112) -> 
     """X4 end-to-end: grayscale -> resize -> center-crop, the visual
     frontend's input prep (demoTalkNet.py:244-246)."""
     return center_crop(resize_nearest(to_grayscale(img), resize_to, resize_to), crop_to)
-
-
-def visual_normalize(x: np.ndarray) -> np.ndarray:
-    """X9: (x/255 - 0.4161) / 0.1688 (model/talkNetModel.py:32)."""
-    return (np.asarray(x, dtype=np.float64) / 255.0 - 0.4161) / 0.1688

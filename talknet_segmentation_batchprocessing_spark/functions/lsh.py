@@ -46,15 +46,15 @@ SIGNS_SCHEMA = "vec_id long, signs array<boolean>"
 _BORDER_REL = 1e-13
 
 
-def fold_gram(V, W=None, row_chunk: int = 2048):
+def fold_gram(V, W=None):
     """EXACT-fold Gram matrix: out[a, b] = left-to-right fold sum of
     V[a, i] * W[b, i] — each (a, b) pair's additions happen in element
     order i = 0..d-1, identical to DuckDB's sequential ``list_sum``
     fold and Spark's ``aggregate`` fold, but vectorized ACROSS pairs
     (one fused elementwise op per dimension instead of one matmul:
     ~3-5x slower than BLAS yet bit-exact, which removes the whole
-    borderline-re-fold dance). ``row_chunk`` bounds peak memory to
-    row_chunk x len(W) doubles for very full buckets.
+    borderline-re-fold dance). Rows go in chunks of 2048, which bounds
+    peak memory to 2048 x len(W) doubles for very full buckets.
 
     Returns a (len(V), len(W)) float64 array.
     """
@@ -63,8 +63,8 @@ def fold_gram(V, W=None, row_chunk: int = 2048):
     if W is None:
         W = V
     out = np.empty((len(V), len(W)))
-    for s in range(0, len(V), row_chunk):
-        e = min(s + row_chunk, len(V))
+    for s in range(0, len(V), 2048):
+        e = min(s + 2048, len(V))
         acc = np.zeros((e - s, len(W)))
         for i in range(V.shape[1]):
             acc += V[s:e, i, None] * W[None, :, i]
@@ -107,15 +107,15 @@ def sign_matrix(V, n_j: int):
     return signs
 
 
-def band_pack_expr(bands: int, bits: int, signs_col: str = "signs") -> str:
-    """SQL expr packing a flat sign array into per-band integer bucket
-    ids: transform over bands, each aggregating its ``bits`` signs
+def band_pack_expr(bands: int, bits: int) -> str:
+    """SQL expr packing the flat ``signs`` array into per-band integer
+    bucket ids: transform over bands, each aggregating its ``bits`` signs
     into a bigint (bit k set iff signs[b*bits+k]), for the LSH family
     in queries/extensions.py — posexplode the result to (band, bucket)."""
     return (
         f"transform(sequence(0, {bands - 1}), b -> "
         f"aggregate(sequence(0, {bits - 1}), 0L, (acc, k) -> "
-        f"acc + IF({signs_col}[b * {bits} + k], "
+        f"acc + IF(signs[b * {bits} + k], "
         f"cast(shiftleft(1, k) as bigint), 0L)))"
     )
 

@@ -6,8 +6,9 @@ dataLoader.py:40-41) — 100 feature rows per second of 16 kHz audio.
 That library is pure public DSP math (Davis & Mermelstein 1980:
 pre-emphasis -> framing -> Hamming-less periodogram -> mel filterbank
 -> log -> DCT-II -> liftering), re-derived here on numpy so the
-feature shell is REAL in this image (no external deps), emitted through
-an Arrow-batched ``mapInPandas``.
+feature shell is REAL in this image (no external deps);
+``operators/featurize.track_mfcc_features`` runs it per track in a
+cogrouped ``applyInPandas``.
 
 Matches python_speech_features defaults: preemph 0.97, nfft 512,
 nfilt 26, numcep 13, ceplifter 22, appendEnergy True, rounded
@@ -17,13 +18,8 @@ half-up frame count.
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-
-MFCC_SCHEMA = "video_id string, chunk_idx int, mfcc array<array<float>>"
 
 
 def _mel(hz: np.ndarray | float) -> np.ndarray | float:
@@ -88,24 +84,3 @@ def mfcc(
         cep = cep * lift
     cep[:, 0] = np.log(energy)  # appendEnergy=True replaces c0
     return cep.astype(np.float32)
-
-
-def extract_mfcc(audio: DataFrame, sr: int = 16000) -> DataFrame:
-    """Audio chunks table (video_id, chunk_idx, sr, samples) -> MFCC
-    rows, 100 steps/s. Per-chunk independence keeps tasks bounded; a
-    track assembles its clip features by time range downstream (X6)."""
-    from ..deploy import ensure_worker_imports
-
-    ensure_worker_imports(audio)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                feats = mfcc(np.asarray(r.samples), sr=int(r.sr))
-                out.append((r.video_id, int(r.chunk_idx), [row.tolist() for row in feats]))
-            yield pd.DataFrame(out, columns=["video_id", "chunk_idx", "mfcc"])
-
-    return audio.select("video_id", "chunk_idx", "sr", "samples").mapInPandas(
-        fn, MFCC_SCHEMA
-    )

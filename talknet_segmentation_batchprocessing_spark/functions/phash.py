@@ -104,13 +104,6 @@ def phash64_bands(gray: np.ndarray) -> tuple[int, int, int, int]:
     return bands[0], bands[1], bands[2], bands[3]
 
 
-def hamming64_bands(
-    a: tuple[int, int, int, int], b: tuple[int, int, int, int]
-) -> int:
-    """Exact Hamming distance between two banded 64-bit hashes."""
-    return sum(bin(x ^ y).count("1") for x, y in zip(a, b))
-
-
 def image_phash_bands(
     df: DataFrame,
     binary_col: str,

@@ -55,64 +55,20 @@ def per_speaker_f1(
     )
 
 
-def average_precision(
-    df: DataFrame,
-    score_col: str = "score",
-    label_col: str = "is_positive",
-    tiebreak_cols: Sequence[str] = ("uid",),
-    group_cols: Sequence[str] = (),
-    out_col: str = "ap",
-    ndigits: int = 6,
-    n_upper: int | None = None,
-    extra_aggs: Sequence[Column] = (),
-) -> DataFrame:
-    """A6: VOC average precision as a pure window pipeline
-    (utils/get_ava_active_speaker_performance.py:23-67,151-177).
-
-    Sorted desc by score: ``tp = cumsum(label)``, ``precision = tp/rank``,
-    ``recall = tp/P``; precision made monotone non-increasing via suffix
-    max; ``AP = sum(delta_recall * smoothed_precision)``. The reference's
-    [0,...,1]/[0,...,0] padding contributes nothing to the sum (the
-    appended point has precision 0), so the window form is exact.
-
-    ``tiebreak_cols`` pins the order among equal scores (pandas sort is
-    stable on merge order; any fixed total order yields the same AP only
-    up to tie handling, so determinism requires the explicit key).
-    """
-    part: list = list(group_cols)
-    lab = F.col(label_col).cast("int")
-    if part and (n_upper is not None or extra_aggs):
-        # fail loudly instead of silently dropping the options: the
-        # grouped pipeline has no phase switch (partitioned windows)
-        # and its output is one row PER GROUP, so ungrouped-style
-        # extra aggregates have no well-defined home there
-        raise ValueError(
-            "n_upper/extra_aggs apply only to the ungrouped AP form "
-            "(group_cols was given)"
-        )
-    if not part:
-        return _average_precision_global(
-            df, score_col, lab, tiebreak_cols, out_col, ndigits, n_upper,
-            extra_aggs,
-        )
-    return _ap_grouped(df, score_col, lab, tiebreak_cols, part, out_col, ndigits)
-
-
-def _ap_grouped(
+def _ap_one_phase(
     df: DataFrame,
     score_col: str,
     lab: Column,
     tiebreak_cols: Sequence[str],
-    part: Sequence[str],
-    out_col: str,
-    ndigits: int,
-    final_ungrouped: bool = False,
-    extra_aggs: Sequence[Column] = (),
+    extra_aggs: Sequence[Column],
 ) -> DataFrame:
-    """Grouped AP window pipeline — also the one-phase body for the
-    ungrouped form below the crossover (one opaque partition)."""
+    """AP window pipeline over one opaque partition: the form below the
+    crossover of :func:`average_precision`."""
+    from ..plans.two_phase import one_partition_col
+
+    df = df.withColumn("_ap_p", one_partition_col())
     order = [F.desc(score_col)] + [F.col(c) for c in tiebreak_cols]
-    w = Window.partitionBy(*part).orderBy(*order)
+    w = Window.partitionBy("_ap_p").orderBy(*order)
     wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     wall = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     # Suffix max expressed as a running max over the exact REVERSE total
@@ -120,7 +76,7 @@ def _ap_grouped(
     # by WindowExec (O(n^2) per partition — 145 s at 100k rows), while
     # growing UNBOUNDED PRECEDING frames aggregate incrementally (O(n)).
     order_rev = [F.asc(score_col)] + [F.desc(c) for c in tiebreak_cols]
-    w_rev = Window.partitionBy(*part).orderBy(*order_rev)
+    w_rev = Window.partitionBy("_ap_p").orderBy(*order_rev)
     wsuffix = w_rev.rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
     ranked = (
@@ -128,8 +84,8 @@ def _ap_grouped(
         .withColumn("_tp", F.sum(lab).over(wcum))
         .withColumn("_pos", F.sum(lab).over(wall))
     )
-    # try_divide: a group with zero positives must yield a NULL AP (the
-    # DuckDB oracle's ``x/0``) rather than an ANSI DIVIDE_BY_ZERO error.
+    # try_divide: zero positives must yield a NULL AP (the DuckDB
+    # oracle's ``x/0``) rather than an ANSI DIVIDE_BY_ZERO error.
     pr = ranked.withColumn("_prec", F.col("_tp") / F.col("_rank")).withColumn(
         "_rec", F.try_divide(F.col("_tp"), F.col("_pos"))
     )
@@ -142,42 +98,52 @@ def _ap_grouped(
     sm = pr.withColumn(
         "_dr", F.col("_rec") - F.coalesce(F.lag("_rec").over(w), F.lit(0.0))
     ).withColumn("_sprec", F.max("_prec").over(wsuffix))
-    agg = stable_round(F.sum(F.col("_dr") * F.col("_sprec")), ndigits).alias(out_col)
-    if final_ungrouped:
-        # Ungrouped final aggregate: exactly one output row even on an
-        # empty input (NULL AP — the oracle's semantics), while the
-        # windows above still carry the opaque single-partition spec.
-        # ``extra_aggs`` (e.g. the eval arm's validation counts) ride
-        # the same aggregate, so callers need no second scan of the
-        # input and no crossJoin of 1-row frames.
-        return sm.agg(agg, *extra_aggs)
-    return sm.groupBy(*part).agg(agg)
+    # Ungrouped final aggregate: exactly one output row even on an
+    # empty input (NULL AP — the oracle's semantics), while the windows
+    # above still carry the opaque single-partition spec.
+    return sm.agg(
+        stable_round(F.sum(F.col("_dr") * F.col("_sprec")), 6).alias("ap"),
+        *extra_aggs,
+    )
 
 
-def _average_precision_global(
+def average_precision(
     df: DataFrame,
-    score_col: str,
-    lab: Column,
-    tiebreak_cols: Sequence[str],
-    out_col: str,
-    ndigits: int,
+    score_col: str = "score",
+    label_col: str = "is_positive",
+    tiebreak_cols: Sequence[str] = ("uid",),
     n_upper: int | None = None,
     extra_aggs: Sequence[Column] = (),
 ) -> DataFrame:
-    """Ungrouped AP, adaptive one-/two-phase.
+    """A6: VOC average precision as a pure window pipeline
+    (utils/get_ava_active_speaker_performance.py:23-67,151-177), one
+    ``ap`` row rounded to 6 digits.
 
-    Measured tradeoff (local[32], min of 3): the single-partition
-    one-phase form wins below ~1.5M rows (re-measured round 4; fixed
-    per-stage overhead dominates), the two-phase form wins 2x at 5M
-    (6.3s vs 11.7s) and the gap widens with scale: one-phase runs the
-    whole sort+window on ONE task of one executor (strictly serial),
-    two-phase keeps every pass parallel. The switch is measured, not
-    guessed: ``prepare_keyed``'s single driver action returns the row
-    count alongside the bucket boundaries, and below
-    ``two_phase.CROSSOVER_ROWS`` the grouped pipeline runs over one
-    opaque partition (``one_partition_col`` — a real partition spec,
-    no WindowExec hazard warning) at one-phase cost with zero scale
-    risk above the crossover.
+    Sorted desc by score: ``tp = cumsum(label)``, ``precision = tp/rank``,
+    ``recall = tp/P``; precision made monotone non-increasing via suffix
+    max; ``AP = sum(delta_recall * smoothed_precision)``. The reference's
+    [0,...,1]/[0,...,0] padding contributes nothing to the sum (the
+    appended point has precision 0), so the window form is exact.
+
+    ``tiebreak_cols`` pins the order among equal scores (pandas sort is
+    stable on merge order; any fixed total order yields the same AP only
+    up to tie handling, so determinism requires the explicit key).
+    ``extra_aggs`` (e.g. the eval arm's validation counts) ride the
+    final aggregate, so callers need no second scan of the input and no
+    crossJoin of 1-row frames.
+
+    Adaptive one-/two-phase. Measured tradeoff (local[32], min of 3):
+    the single-partition one-phase form wins below ~1.5M rows
+    (re-measured round 4; fixed per-stage overhead dominates), the
+    two-phase form wins 2x at 5M (6.3s vs 11.7s) and the gap widens
+    with scale: one-phase runs the whole sort+window on ONE task of one
+    executor (strictly serial), two-phase keeps every pass parallel. The
+    switch is measured, not guessed: ``prepare_keyed``'s single driver
+    action returns the row count alongside the bucket boundaries, and
+    below ``two_phase.CROSSOVER_ROWS`` the window pipeline runs over one
+    opaque partition (``one_partition_col`` — a real partition spec, no
+    WindowExec hazard warning) at one-phase cost with zero scale risk
+    above the crossover.
 
     Two-phase structure:
 
@@ -205,16 +171,10 @@ def _average_precision_global(
         prepare_keyed,
     )
 
+    lab = F.col(label_col).cast("int")
     df, n, bnds = prepare_keyed(df, score_col, n_upper=n_upper)
     if n <= CROSSOVER_ROWS or not bnds:
-        # final_ungrouped: one NULL-AP row even on an empty input (the
-        # oracle's ungrouped-aggregate semantics) — which also lets the
-        # n_upper fast path skip the exact count entirely.
-        p = df.withColumn("_ap_p", one_partition_col())
-        return _ap_grouped(
-            p, score_col, lab, tiebreak_cols, ["_ap_p"], out_col, ndigits,
-            final_ungrouped=True, extra_aggs=extra_aggs,
-        )
+        return _ap_one_phase(df, score_col, lab, tiebreak_cols, extra_aggs)
     b = attach_range_bucket(df, score_col, bnds, descending=True)
     stats = b.groupBy(_BUCKET).agg(
         F.count("*").alias("_tp_cnt"), F.sum(lab).alias("_tp_np")
@@ -271,7 +231,7 @@ def _average_precision_global(
         F.greatest(F.col("_lsuf"), F.coalesce(F.col("_tail"), F.lit(float("-inf")))),
     )
     return sm.agg(
-        stable_round(F.sum(F.col("_dr") * F.col("_sprec")), ndigits).alias(out_col),
+        stable_round(F.sum(F.col("_dr") * F.col("_sprec")), 6).alias("ap"),
         *extra_aggs,
     )
 

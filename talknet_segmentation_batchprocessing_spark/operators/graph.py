@@ -85,7 +85,6 @@ def _union_find_labels(us, vs) -> dict[int, int]:
 def connected_components_star(
     nodes: DataFrame,
     edges: DataFrame,
-    max_rounds: int = 50,
     edges_distinct: bool = False,
     edges_materialized: bool = False,
     local_threshold: int = 1_000_000,
@@ -114,7 +113,7 @@ def connected_components_star(
     equal edge sets ({(3,1),(4,2)} vs {(4,1),(3,2)} collide), so a
     signature match triggers one ``exceptAll`` emptiness check against
     the previous round's (checkpointed, so cheap) frame before
-    stopping. Exhausting ``max_rounds`` without a fixpoint raises —
+    stopping. Exhausting 50 rounds without a fixpoint raises —
     silently returning unconverged labels would be a wrong answer.
 
     ``edges_materialized``: callers handing over an already
@@ -174,7 +173,7 @@ def connected_components_star(
     e.count()
     prev_sig = None
     converged = False
-    for _ in range(max_rounds):
+    for _ in range(50):
         prev_e = e
         # eager=False: the signature .collect() below is the action
         # that materializes this round's checkpoint, so the round runs
@@ -191,7 +190,7 @@ def connected_components_star(
         prev_sig = sig
     if not converged:
         raise RuntimeError(
-            f"connected_components_star: no fixpoint after {max_rounds} rounds"
+            "connected_components_star: no fixpoint after 50 rounds"
         )
     comp = e.select(F.col("u").alias(node_col), F.col("v").alias("component"))
     return (

@@ -86,9 +86,9 @@ def _forward_threads(cores: int) -> int:
     return max(1, min(cores, cpus or 1))
 
 
-def fake_face_detector(max_faces: int = 3, conf_th: float = 0.9):
+def fake_face_detector():
     """Deterministic stand-in for S3FD, temporally coherent: each video
-    gets 1..max_faces persistent 'actors' whose 30x30 boxes drift
+    gets 1..3 persistent 'actors' whose 30x30 boxes drift
     smoothly with frame_idx (high consecutive-frame IoU), so greedy
     tracking (J6) links them like real faces. Confidence varies in
     [0.85, 1.0) per (video, frame, actor) so the F1 conf>0.9 filter is
@@ -97,7 +97,7 @@ def fake_face_detector(max_faces: int = 3, conf_th: float = 0.9):
     def detect(video_id: str, frame_idx: int, image: bytes | None):
         vseed = int.from_bytes(hashlib.sha256(video_id.encode()).digest()[:4], "big")
         vrng = np.random.RandomState(vseed)
-        n_actors = int(vrng.randint(1, max_faces + 1))
+        n_actors = int(vrng.randint(1, 4))
         out = []
         for a in range(n_actors):
             arng = np.random.RandomState(vseed + 7919 * (a + 1))

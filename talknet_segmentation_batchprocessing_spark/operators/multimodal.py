@@ -102,16 +102,16 @@ def extract_image_features(
     binary_col: str,
     id_col: str,
     decoder: Callable[[bytes], np.ndarray] | None = None,
-    resize_to: tuple[int, int] = (8, 8),
 ) -> DataFrame:
-    """Decode -> resize (block-mean, the X4 grayscale+resize analog) ->
-    flatten to a float feature vector. Arrow-batched ``mapInPandas``;
-    one batch = one vectorized decode loop, no per-row Python UDF."""
+    """Decode -> resize to 8x8 (block-mean, the X4 grayscale+resize
+    analog) -> flatten to a 64-float feature vector. Arrow-batched
+    ``mapInPandas``; one batch = one vectorized decode loop, no per-row
+    Python UDF."""
     from ..deploy import ensure_worker_imports
 
     ensure_worker_imports(df)
     dec = decoder or fake_image_decoder()
-    rh, rw = resize_to
+    rh = rw = 8
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -129,11 +129,7 @@ def extract_image_features(
     return df.select(id_col, binary_col).mapInPandas(fn, FEATURES_SCHEMA)
 
 
-def sample_video_frames(
-    frames: DataFrame,
-    every_n: int = 25,
-    frame_col: str = "frame_idx",
-) -> DataFrame:
-    """Frame sampling (1 fps from a 25 fps stream when every_n=25) —
-    pure relational modulo filter, pushed to the scan."""
-    return frames.filter((F.col(frame_col) % every_n) == 0)
+def sample_video_frames(frames: DataFrame, every_n: int = 25) -> DataFrame:
+    """Frame sampling on ``frame_idx`` (1 fps from a 25 fps stream when
+    every_n=25) — pure relational modulo filter, pushed to the scan."""
+    return frames.filter((F.col("frame_idx") % every_n) == 0)

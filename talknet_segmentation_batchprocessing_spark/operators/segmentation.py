@@ -62,12 +62,10 @@ def extract_segments(
     threshold: float = DEFAULT_THRESHOLD,
     min_duration_s: float = DEFAULT_MIN_DURATION_S,
     fps: float = DEFAULT_FPS,
-    partition_cols: Sequence[str] = ("video_id", "track_id"),
-    frame_col: str = "frame_idx",
-    score_col: str = "score",
 ) -> DataFrame:
-    """Full W1 + F5 + F6 + X10 pipeline: scores -> segments table
-    (FIXTURES.md §6 schema).
+    """Full W1 + F5 + F6 + X10 pipeline: per-frame ``score`` rows keyed
+    by (video_id, track_id, frame_idx) -> segments table (FIXTURES.md
+    §6 schema).
 
     ``end_frame`` is exclusive (max frame in run + 1,
     extractSpeakingSegments.py:57-59); min length keeps runs with
@@ -76,27 +74,28 @@ def extract_segments(
     track in frame order (extractSpeakingSegments.py:108).
     """
     min_frames = int(min_duration_s * fps)
-    flagged = scores.withColumn("_speaking", speaking_flag(score_col, threshold))
+    track = ("video_id", "track_id")
+    flagged = scores.withColumn("_speaking", speaking_flag("score", threshold))
     runs = gaps_and_islands(
-        flagged, partition_cols, [frame_col], flag_col="_speaking", island_col="_island"
+        flagged, track, ["frame_idx"], flag_col="_speaking", island_col="_island"
     )
     segs = (
         runs.filter(F.col("_speaking"))
-        .groupBy(*partition_cols, "_island")
+        .groupBy(*track, "_island")
         .agg(
-            F.min(frame_col).alias("start_frame"),
-            (F.max(frame_col) + F.lit(1)).alias("end_frame"),
+            F.min("frame_idx").alias("start_frame"),
+            (F.max("frame_idx") + F.lit(1)).alias("end_frame"),
         )
         .filter((F.col("end_frame") - F.col("start_frame")) >= F.lit(min_frames))
     )
-    wseg = Window.partitionBy(*partition_cols).orderBy("start_frame")
+    wseg = Window.partitionBy(*track).orderBy("start_frame")
     return (
         segs.withColumn("seg_id", (F.row_number().over(wseg) - F.lit(1)))
         .withColumn("start_ts", F.col("start_frame") / F.lit(fps))
         .withColumn("end_ts", F.col("end_frame") / F.lit(fps))
         .withColumn("duration", (F.col("end_frame") - F.col("start_frame")) / F.lit(fps))
         .select(
-            *partition_cols,
+            *track,
             "seg_id",
             "start_frame",
             "end_frame",

@@ -86,7 +86,7 @@ def _unflatten(flat):
 
 
 def _epoch_mean_grad(feats: DataFrame, wb: dict):
-    """The distributed allreduce shared by every optimizer: executors
+    """The distributed allreduce of one training epoch: executors
     emit one (n, n*loss, n*flat_grad) payload VECTOR per Arrow batch as
     2+_FLAT_DIM=1032 (idx, val) rows, so the shuffle is
     #batches x 1032 tiny rows (~8 KB per batch) regardless of corpus
@@ -149,31 +149,6 @@ def _check_head_params(w: dict) -> dict:
         # stripped inference checkpoint commonly lacks lossA/lossV
         raise KeyError(f"weights dict is missing head params: {missing}")
     return {k: np.asarray(w[k], dtype=np.float64) for k in _PARAM_KEYS}
-
-
-def train_heads_epoch(feats: DataFrame, w: dict, lr: float = 1e-4):
-    """One exact full-batch SGD step, distributed.
-
-    ``feats`` columns: ``av`` array<double>[256], ``a`` / ``v``
-    array<double>[128], ``label`` int (0/1; validated, nulls rejected).
-    One :func:`_epoch_mean_grad` allreduce, then the driver applies
-    ``w - lr * grad``; equals the local full-batch step exactly.
-
-    Returns (new_weights, mean_loss, n_samples). For the reference's
-    actual optimizer (Adam + StepLR) see :func:`train_heads_adam`.
-    """
-    from ..deploy import ensure_worker_imports
-
-    ensure_worker_imports(feats)
-    wb = _check_head_params(w)
-    n_total, mean_loss, flat = _epoch_mean_grad(feats, wb)
-    if n_total == 0:
-        return dict(w), mean_loss, 0
-    grad = _unflatten(flat)
-    new_w = dict(w)
-    for k in _PARAM_KEYS:
-        new_w[k] = wb[k] - lr * grad[k]
-    return new_w, mean_loss, n_total
 
 
 class AdamState:
@@ -258,68 +233,3 @@ def train_heads_adam(
     new_w = dict(w)
     new_w.update(_unflatten(flat_w))
     return new_w, losses, n_total, st
-
-
-def train_distributed(
-    spark,
-    feats: DataFrame,
-    w: dict,
-    epochs: int = 1,
-    lr: float = 1e-4,
-    lr_decay: float = 0.95,
-    num_processes: int = 2,
-    use_gpu: bool = False,
-    full_network: bool = False,
-):
-    """M5 front door for FULL-network training: the Spark-idiomatic
-    path for backpropagating through the audio/visual trunks is
-    ``pyspark.ml.torch.distributor.TorchDistributor`` running the
-    reference's own torch loop (talkNet.py:20-86 train_network with
-    loss AV + 0.4*A + 0.4*V, Adam + StepLR(1, 0.95) —
-    trainTalkNet.py:70-83) under DDP, one process per GPU, reading the
-    featurized table as shards.
-
-    The DEFAULT path is the exact frozen-trunk head trainer
-    (:func:`train_heads_adam`, same loss heads, same optimizer
-    schedule) regardless of whether torch is installed — the
-    full-network DDP loop body is not yet ported (SURVEY.md M5 scopes
-    it out of the core engine), so merely having torch on the image
-    must not change what a default call computes. Passing
-    ``full_network=True`` opts into the distributor wiring: it
-    requires torch + ``pyspark.ml.torch.distributor`` (ImportError
-    otherwise, naming the missing wheel) and currently raises
-    NotImplementedError FROM INSIDE the distributor-launched process,
-    proving the launch plumbing while being explicit that the DDP
-    epoch body (talkNet.py:20-86 train_network) is the remaining
-    port.
-
-    Returns ``(new_weights, per_epoch_losses, n_samples, backend)``
-    with ``backend`` in ``("torch-distributor", "heads-allreduce")``.
-    """
-    if not full_network:
-        new_w, losses, n, _st = train_heads_adam(
-            feats, w, epochs=epochs, lr=lr, lr_decay=lr_decay
-        )
-        return new_w, losses, n, "heads-allreduce"
-
-    from pyspark.ml.torch.distributor import TorchDistributor
-
-    # Torch present and full-network explicitly requested: ship the
-    # featurized shards to a DDP train loop. The loop body is the
-    # reference's train_network epoch; only data loading is
-    # Spark-shaped (arrow batches -> tensors). Same embedding columns
-    # the head trainer consumes.
-    feat_rows = feats.select("av", "a", "v", "label")
-
-    def _train_fn():  # pragma: no cover - requires torch at runtime
-        raise NotImplementedError(
-            "full-network DDP loop: port talkNet.py:20-86 train_network "
-            "onto the collected shard iterator; out of scope for the "
-            "torch-free engine image (SURVEY.md M5 note)"
-        )
-
-    distributor = TorchDistributor(
-        num_processes=num_processes, local_mode=True, use_gpu=use_gpu
-    )
-    result = distributor.run(_train_fn)
-    return result, [], feat_rows.count(), "torch-distributor"

@@ -172,10 +172,9 @@ def pack_batches(
     batch_size: int,
     order_desc: bool = True,
     tiebreak_cols: Sequence[str] = (),
-    batch_col: str = "batch_id",
     n_upper: int | None = None,
 ) -> DataFrame:
-    """W7: length-sorted dynamic batch packing (reference
+    """W7: length-sorted dynamic batch packing into ``batch_id`` (reference
     dataLoader.py:89-108): sort by length desc, walk rows packing while
     the running "cost" stays under ``batch_size``.
 
@@ -204,9 +203,8 @@ def pack_batches(
         out_col="_cum",
         n_upper=n_upper,
     )
-    return cum.withColumn(
-        batch_col, F.floor((F.col("_cum") - F.lit(1)) / F.lit(batch_size)).cast("bigint")
-    ).drop("_cum")
+    batch = F.floor((F.col("_cum") - F.lit(1)) / F.lit(batch_size)).cast("bigint")
+    return cum.withColumn("batch_id", batch).drop("_cum")
 
 
 def pack_batches_exact(
@@ -214,28 +212,27 @@ def pack_batches_exact(
     length_col: str,
     batch_size: int,
     tiebreak_cols: Sequence[str] = (),
-    group_cols: Sequence[str] = (),
-    batch_col: str = "batch_id",
 ) -> DataFrame:
     """W7 exact semantics (dataLoader.py:96-104): after sorting by
     length desc, each batch takes ``max(int(batch_size / first_row_len),
     1)`` consecutive rows — the capacity is set by the batch's FIRST
     (longest) row. A sequential recurrence (each batch boundary depends
-    on the previous), so it runs as a pandas kernel per ``group_cols``
-    group (one global group when empty — batching is per-epoch in the
-    reference, bounded input).
+    on the previous), so it runs as one pandas kernel over the whole
+    input (batching is per-epoch in the reference, bounded input) and
+    adds ``batch_id``.
     """
     import pandas as pd
 
     from ..deploy import ensure_worker_imports
 
     ensure_worker_imports(df)
-    gc = list(group_cols)
     sort_cols = [length_col, *tiebreak_cols]
     ascending = [False] + [True] * len(tiebreak_cols)
 
     def assign(pdf: pd.DataFrame) -> pd.DataFrame:
-        p = pdf.sort_values(sort_cols, ascending=ascending, kind="mergesort")
+        p = pdf.drop(columns=["_g"]).sort_values(
+            sort_cols, ascending=ascending, kind="mergesort"
+        )
         ids = []
         bid = 0
         i = 0
@@ -246,15 +243,11 @@ def pack_batches_exact(
             ids.extend([bid] * min(cap, n - i))
             i += cap
             bid += 1
-        p[batch_col] = pd.Series(ids, index=p.index[: len(ids)]).astype("int64")
+        p["batch_id"] = pd.Series(ids, index=p.index[: len(ids)]).astype("int64")
         return p
 
     schema = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
-        + [f"{batch_col} bigint"]
+        + ["batch_id bigint"]
     )
-    if gc:
-        return df.groupBy(*gc).applyInPandas(assign, schema)
-    return df.withColumn("_g", F.lit(0)).groupBy("_g").applyInPandas(
-        lambda pdf: assign(pdf.drop(columns=["_g"])), schema
-    )
+    return df.withColumn("_g", F.lit(0)).groupBy("_g").applyInPandas(assign, schema)

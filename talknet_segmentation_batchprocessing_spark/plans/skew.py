@@ -14,12 +14,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def with_salt(df: DataFrame, n_salts: int = 16, salt_col: str = "_salt") -> DataFrame:
-    """Deterministic salt from a stable row hash (no rand(): reruns and
-    retried tasks must agree), spreading each hot key over n_salts
+def with_salt(df: DataFrame, n_salts: int = 16) -> DataFrame:
+    """Deterministic ``_salt`` from a stable row hash (no rand(): reruns
+    and retried tasks must agree), spreading each hot key over n_salts
     subkeys."""
     h = F.xxhash64(*[F.col(c) for c in df.columns])
-    return df.withColumn(salt_col, F.pmod(h, F.lit(n_salts)).cast("int"))
+    return df.withColumn("_salt", F.pmod(h, F.lit(n_salts)).cast("int"))
 
 
 def salted_agg(

@@ -180,14 +180,14 @@ def attach_range_bucket(
     key_col: str,
     bnds: Sequence[float],
     descending: bool = False,
-    bucket_col: str = _BUCKET,
 ) -> DataFrame:
-    """Attach a range-bucket id that is monotone non-decreasing along
-    the (key_col, descending) sort order; equal keys share a bucket.
+    """Attach a range-bucket id ``_BUCKET`` that is monotone
+    non-decreasing along the (key_col, descending) sort order; equal
+    keys share a bucket.
     ``bnds`` are the sorted boundary literals from :func:`prepare_keyed`.
     """
     if not bnds:
-        return df.withColumn(bucket_col, F.lit(0))
+        return df.withColumn(_BUCKET, F.lit(0))
     key = F.col(key_col).cast("double")
     # bucket id = #boundaries the key has passed, as a plain sum of
     # comparisons against literals (NOT a filter() higher-order
@@ -201,7 +201,7 @@ def attach_range_bucket(
     bucket = terms[0]
     for t in terms[1:]:
         bucket = bucket + t
-    return df.withColumn(bucket_col, bucket)
+    return df.withColumn(_BUCKET, bucket)
 
 
 def bucket_prefix(
@@ -323,11 +323,11 @@ def global_lead(
     tiebreak_cols: Sequence[str],
     lead_cols: Sequence[str],
     descending: bool = False,
-    out_prefix: str = "_next_",
     n_buckets: int | None = None,
     n_upper: int | None = None,
 ) -> DataFrame:
-    """``lead(col) OVER (ORDER BY key, tiebreaks)`` for several columns:
+    """``lead(col) OVER (ORDER BY key, tiebreaks)`` for several columns,
+    each into ``_next_<col>``:
     adaptive one-phase window below CROSSOVER_ROWS, else bucket-local
     lead with each bucket's trailing row patched from the next
     non-empty bucket's head row (min-by over the tiny heads frame,
@@ -338,7 +338,7 @@ def global_lead(
         w = Window.partitionBy("_tp_p").orderBy(*order)
         out = df.withColumn("_tp_p", one_partition_col())
         for c in lead_cols:
-            out = out.withColumn(out_prefix + c, F.lead(c).over(w))
+            out = out.withColumn("_next_" + c, F.lead(c).over(w))
         return out.drop("_tp_p")
     b = attach_range_bucket(df, key_col, bnds, descending)
     # Head row per bucket = first row in sort order. Encode the sort
@@ -366,6 +366,6 @@ def global_lead(
     out = b.join(F.broadcast(nxt), _BUCKET, "left")
     for i, c in enumerate(lead_cols):
         out = out.withColumn(
-            out_prefix + c, F.coalesce(F.lead(c).over(w), F.col(f"_tp_nh._tp_l{i}"))
+            "_next_" + c, F.coalesce(F.lead(c).over(w), F.col(f"_tp_nh._tp_l{i}"))
         )
     return out.drop(_BUCKET, "_tp_nh")

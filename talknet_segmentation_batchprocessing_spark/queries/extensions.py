@@ -30,8 +30,8 @@ from ..registry import load, query, track_persist
 _MINHASH_P = 8191  # Mersenne prime for the affine hash family
 
 
-def _doc_shingles(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
-    """Distinct word k-shingles per document.
+def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct word 3-shingles per document.
 
     zip_with over the MATERIALIZED token-array column and its tails —
     no window. Two earlier forms were slower: transform(sequence,
@@ -39,10 +39,7 @@ def _doc_shingles(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     (O(tokens^2) per doc, the lambda-expression-capture trap), and the
     round-1..4 posexplode+lead form paid a per-doc-partition window
     SORT on every shingling. Slicing a bound array column is one pass
-    per row; result set identical. The frame is persisted because
-    every dedup query fans it into several DAG branches (vocab,
-    doc-shingle pairs, sizes) that would otherwise each recompute the
-    explode.
+    per row; result set identical.
     """
     # The testdata table is one parquet file = ONE scan partition; fan
     # out by doc_id before the explode or all shingling runs on a
@@ -53,10 +50,10 @@ def _doc_shingles(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
         spark.sparkContext.defaultParallelism, "doc_id"
     )
     d = docs.select("doc_id", F.split(F.lower("text"), " ").alias("w")).filter(
-        F.size("w") >= k
+        F.size("w") >= 3
     )
     sh = (
-        d.select("doc_id", F.explode(word_shingles("w", k)).alias("shingle"))
+        d.select("doc_id", F.explode(word_shingles("w", 3)).alias("shingle"))
         .distinct()
     )
     # NOT persisted since round 12 (guide §5): within one action
@@ -1022,7 +1019,6 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _HYPERPLANE_DUCK = "((((j * 64 + (i - 1)) * 2654435761) % 2000) / 1000.0 - 1.0)"
-_HYPERPLANE_SPARK = "((((j * 64 + (i - 1)) * 2654435761) % 2000) / 1000.0 - 1.0)"
 
 
 @query(
@@ -4298,15 +4294,13 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _ivf_ranked(emb: DataFrame, max_rn: int = None) -> DataFrame:
+def _ivf_ranked(emb: DataFrame) -> DataFrame:
     """Shared IVF routing stage: (vec_id, cent_id, rn) for rn <=
     max(1, nprobe) by cosine against the broadcast sampled-k-means
     centroids — exactly sim_ivf_topk's assign/probe window, factored
     out so the ANN verify queries search the SAME registered index.
     ``emb`` must carry (vec_id, v, nrm). Persisted: both the assign
     (rn=1) and probe (rn<=nprobe) branches read it."""
-    if max_rn is None:
-        max_rn = max(1, _IVF_NPROBE)
     cent = _ivf_centroids(emb).withColumn("cn", F.expr(_NORM_CV_SPARK))
     pairs = emb.crossJoin(F.broadcast(cent)).withColumn(
         "cc", F.try_divide(F.expr(_DOT_VC_SPARK), F.col("nrm") * F.col("cn"))
@@ -4314,7 +4308,7 @@ def _ivf_ranked(emb: DataFrame, max_rn: int = None) -> DataFrame:
     wv = Window.partitionBy("vec_id").orderBy(F.desc("cc"), "cent_id")
     return track_persist(
         pairs.withColumn("rn", F.row_number().over(wv))
-        .filter(F.col("rn") <= max_rn)
+        .filter(F.col("rn") <= max(1, _IVF_NPROBE))
         .select("vec_id", "cent_id", "rn")
     )
 

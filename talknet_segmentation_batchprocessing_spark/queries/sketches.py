@@ -43,7 +43,7 @@ _HASH_SPACE = float(1 << 48)
 
 _KMV_K = 64
 
-# distinct (lang, shingle) pairs — the DuckDB twin of _lang_shingles
+# distinct (lang, shingle) pairs — the DuckDB side of _lang_shingle_hashes
 _SQL_LANG_SHINGLES = """
   SELECT DISTINCT lang, unnest(list_transform(range(1, len(w) - 1),
                  i -> array_to_string(w[i:i+2], ' '))) AS tok
@@ -52,20 +52,8 @@ _SQL_LANG_SHINGLES = """
 """
 
 
-def _tok_hash(col: str = "tok"):
-    return F.conv(F.substring(F.md5(F.col(col)), 1, 12), 16, 10).cast("bigint")
-
-
-def _lang_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.shingles import word_shingles
-
-    docs = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
-    d = docs.select("lang", F.split(F.lower("text"), " ").alias("w")).filter(
-        F.size("w") >= 3
-    )
-    return d.select("lang", F.explode(word_shingles("w", 3)).alias("tok")).distinct()
+def _tok_hash():
+    return F.conv(F.substring(F.md5(F.col("tok")), 1, 12), 16, 10).cast("bigint")
 
 
 def _lang_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,14 +22,14 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "talknet-segmentation-spark",
     cpus: str | int | None = None,
-    shuffle_partitions: int | None = None,
     driver_memory: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or get) the engine's SparkSession.
 
     Env knobs (driver contract): ``SPARK_GRAFT_CPUS`` sets local
-    parallelism, default ``*``.
+    parallelism, default ``*``; shuffle partitions follow it (all
+    cores when ``*``).
     """
     # applyInPandas/pandas-UDF worker processes import this package by
     # name; they resolve it via PYTHONPATH (not the driver's sys.path),
@@ -44,9 +44,7 @@ def get_spark(
 
     if cpus is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        n = os.cpu_count() or 8
-        shuffle_partitions = int(cpus) if str(cpus).isdigit() else n
+    shuffle_partitions = int(cpus) if str(cpus).isdigit() else os.cpu_count() or 8
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

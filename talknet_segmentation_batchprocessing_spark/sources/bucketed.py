@@ -30,13 +30,12 @@ def write_bucketed(
     n_buckets: int,
     sort_cols: Sequence[str] | None = None,
     path: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Write ``df`` as a bucketed (optionally bucket-sorted) parquet
-    table. ``path`` makes it external (kept out of the default
+    """Write (overwrite) ``df`` as a bucketed (optionally bucket-sorted)
+    parquet table. ``path`` makes it external (kept out of the default
     warehouse); bucketed writes REQUIRE ``saveAsTable`` — bucket
     metadata lives in the catalog, not the files."""
-    w = df.write.format("parquet").mode(mode).bucketBy(n_buckets, *bucket_cols)
+    w = df.write.format("parquet").mode("overwrite").bucketBy(n_buckets, *bucket_cols)
     if sort_cols:
         w = w.sortBy(*sort_cols)
     if path:

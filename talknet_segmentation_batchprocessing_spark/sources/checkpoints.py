@@ -17,18 +17,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
-def checkpoint(
-    df: DataFrame,
-    root: str,
-    stage: str,
-    partition_by: str | None = "video_id",
-    mode: str = "overwrite",
-) -> str:
-    """Write one stage table; returns its path."""
+def checkpoint(df: DataFrame, root: str, stage: str) -> str:
+    """Write (overwrite) one stage table, partitioned by ``video_id``
+    when the stage has one; returns its path."""
     path = os.path.join(root, stage)
-    w = df.write.mode(mode)
-    if partition_by and partition_by in df.columns:
-        w = w.partitionBy(partition_by)
+    w = df.write.mode("overwrite")
+    if "video_id" in df.columns:
+        w = w.partitionBy("video_id")
     w.parquet(path)
     return path
 

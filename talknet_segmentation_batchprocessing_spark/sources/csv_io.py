@@ -9,8 +9,6 @@ prunes columns via Catalyst automatically once a select is present.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -28,30 +26,18 @@ AVA_EVAL_COLUMNS = (  # the reference's usecols subset (script:81)
 )
 
 
-def read_ava_csv(
-    spark: SparkSession,
-    path: str,
-    columns: Sequence[str] = AVA_EVAL_COLUMNS,
-    header: bool = True,
-) -> DataFrame:
-    """S8: AVA annotation CSV with explicit schema + pruned projection."""
-    df = spark.read.csv(path, header=header, schema=AVA_GROUNDTRUTH)
-    return df.select(*columns)
+def read_ava_csv(spark: SparkSession, path: str) -> DataFrame:
+    """S8: AVA annotation CSV (with header) under an explicit schema,
+    pruned to the reference's ``usecols``."""
+    df = spark.read.csv(path, header=True, schema=AVA_GROUNDTRUTH)
+    return df.select(*AVA_EVAL_COLUMNS)
 
 
-def write_predictions_csv(
-    predictions: DataFrame,
-    path: str,
-    score_col: str = "score",
-    label_value: str = "SPEAKING_AUDIBLE",
-    drop_cols: Sequence[str] = ("label_id", "instance_id"),
-) -> None:
+def write_predictions_csv(predictions: DataFrame, path: str) -> None:
     """S9: predictions CSV — inject constant ``label``, keep ``score``,
     drop training-only columns (talkNet.py:112-114)."""
-    out = predictions.withColumn("label", F.lit(label_value))
-    for c in drop_cols:
-        if c in out.columns:
-            out = out.drop(c)
+    out = predictions.withColumn("label", F.lit("SPEAKING_AUDIBLE"))
+    out = out.drop("label_id", "instance_id")
     out.write.mode("overwrite").option("header", True).csv(path)
 
 

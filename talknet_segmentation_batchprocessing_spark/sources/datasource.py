@@ -41,7 +41,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-VIDEO_EXTENSIONS = ("mp4", "avi", "mov", "mkv")
+from .corpus import VIDEO_EXTENSIONS
 
 _SCHEMA = "video_id string, path string, ext string, byte_len long, content binary"
 _META_SCHEMA = "video_id string, path string, ext string, byte_len long"
@@ -52,7 +52,10 @@ class _FilePartition(InputPartition):
         self.path = path
 
 
-class VideoCorpusReader(DataSourceReader):
+class _Listing:
+    """The options, sorted file listing and row generator that the
+    batch and the stream reader share."""
+
     def __init__(self, options):
         self.folder = options.get("path")
         if not self.folder:
@@ -60,49 +63,6 @@ class VideoCorpusReader(DataSourceReader):
         exts = options.get("extensions", ",".join(VIDEO_EXTENSIONS)).split(",")
         self.exts = tuple(e.strip().lower() for e in exts if e.strip())
         self.with_content = str(options.get("with_content", "false")).lower() == "true"
-
-    def partitions(self):
-        paths = sorted(
-            p
-            for p in glob.glob(os.path.join(self.folder, "*"))
-            if os.path.isfile(p)
-            and p.rsplit(".", 1)[-1].lower() in self.exts
-        )
-        return [_FilePartition(p) for p in paths]
-
-    def read(self, partition: _FilePartition):
-        path = partition.path
-        name = os.path.basename(path)
-        video_id, _, ext = name.rpartition(".")
-        size = os.path.getsize(path)
-        if self.with_content:
-            with open(path, "rb") as f:
-                yield (video_id, path, ext.lower(), size, f.read())
-        else:
-            yield (video_id, path, ext.lower(), size)
-
-
-class VideoCorpusStreamReader(SimpleDataSourceStreamReader):
-    """Rate-limited incremental consumer (see module docstring).
-
-    Offset = {"index": n} into the sorted listing; ``read`` advances at
-    most ``max_files_per_batch`` samples per micro-batch and
-    ``readBetweenOffsets`` replays a committed range deterministically
-    (the listing is re-sorted, so replay sees the same slice as long
-    as names are monotonic — the documented contract)."""
-
-    def __init__(self, options):
-        self.folder = options.get("path")
-        if not self.folder:
-            raise ValueError("video_corpus requires .option('path', <folder>)")
-        exts = options.get("extensions", ",".join(VIDEO_EXTENSIONS)).split(",")
-        self.exts = tuple(e.strip().lower() for e in exts if e.strip())
-        self.with_content = (
-            str(options.get("with_content", "false")).lower() == "true"
-        )
-        self.rate = int(options.get("max_files_per_batch", "16"))
-        if self.rate < 1:
-            raise ValueError("max_files_per_batch must be >= 1")
 
     def _listing(self) -> list[str]:
         return sorted(
@@ -122,6 +82,30 @@ class VideoCorpusStreamReader(SimpleDataSourceStreamReader):
                     yield (video_id, path, ext.lower(), size, f.read())
             else:
                 yield (video_id, path, ext.lower(), size)
+
+
+class VideoCorpusReader(_Listing, DataSourceReader):
+    def partitions(self):
+        return [_FilePartition(p) for p in self._listing()]
+
+    def read(self, partition: _FilePartition):
+        yield from self._rows([partition.path])
+
+
+class VideoCorpusStreamReader(_Listing, SimpleDataSourceStreamReader):
+    """Rate-limited incremental consumer (see module docstring).
+
+    Offset = {"index": n} into the sorted listing; ``read`` advances at
+    most ``max_files_per_batch`` samples per micro-batch and
+    ``readBetweenOffsets`` replays a committed range deterministically
+    (the listing is re-sorted, so replay sees the same slice as long
+    as names are monotonic — the documented contract)."""
+
+    def __init__(self, options):
+        super().__init__(options)
+        self.rate = int(options.get("max_files_per_batch", "16"))
+        if self.rate < 1:
+            raise ValueError("max_files_per_batch must be >= 1")
 
     def initialOffset(self) -> dict:
         return {"index": 0}
@@ -153,7 +137,3 @@ class VideoCorpusDataSource(DataSource):
 
     def simpleStreamReader(self, schema) -> VideoCorpusStreamReader:
         return VideoCorpusStreamReader(self.options)
-
-
-def register(spark) -> None:
-    spark.dataSource.register(VideoCorpusDataSource)

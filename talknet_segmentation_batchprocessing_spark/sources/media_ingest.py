@@ -35,21 +35,21 @@ FRAMES_SCHEMA = (
 AUDIO_SCHEMA = "video_id string, chunk_idx int, sr int, samples array<smallint>"
 
 
-def fake_decoder(n_frames: int = 50, height: int = 8, width: int = 8) -> Decoder:
-    """Deterministic stand-in for ffmpeg/PyAV: frame pixels and audio
-    samples are seeded from sha256(video_id), so every executor —
+def fake_decoder(n_frames: int = 50) -> Decoder:
+    """Deterministic stand-in for ffmpeg/PyAV: 8x8 frame pixels and
+    audio samples are seeded from sha256(video_id), so every executor —
     and every rerun — produces identical output for the same input."""
 
     def decode(video_id: str, content: bytes | None):
         seed = int.from_bytes(hashlib.sha256(video_id.encode()).digest()[:4], "big")
         rng = np.random.RandomState(seed)
         frames = [
-            rng.randint(0, 256, size=(height, width), dtype=np.uint8).tobytes()
+            rng.randint(0, 256, size=(8, 8), dtype=np.uint8).tobytes()
             for _ in range(n_frames)
         ]
         n_samples = int(n_frames / FPS * SAMPLE_RATE)
         samples = rng.randint(-(2**15), 2**15, size=n_samples, dtype=np.int16)
-        return frames, height, width, samples
+        return frames, 8, 8, samples
 
     return decode
 

@@ -62,14 +62,6 @@ def _iter_chunks(buf: bytes, off: int, end: int):
 # ---------------------------------------------------------------------------
 
 
-def write_wav(samples: np.ndarray, sr: int) -> bytes:
-    """Mono 16-bit PCM WAV bytes (RIFF/WAVE: ``fmt `` + ``data``)."""
-    pcm = np.asarray(samples, dtype="<i2").tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, sr, sr * 2, 2, 16)  # PCM, mono, s16
-    body = b"WAVE" + _chunk(b"fmt ", fmt) + _chunk(b"data", pcm)
-    return _chunk(b"RIFF", body)
-
-
 def read_wav(buf: bytes) -> tuple[np.ndarray, int]:
     """Parse mono 16-bit PCM WAV bytes -> (int16 samples, sample rate)."""
     if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":

@@ -1,6 +1,6 @@
-"""Plan inspection: assert the physical plan we designed for is the
-plan Catalyst actually picked. Used by tests/test_plans.py and by the
-bench workflow when tuning (SURVEY.md §4).
+"""Plan inspection helpers for tests/test_plans.py: assert the
+physical plan we designed for is the plan Catalyst actually picked
+(SURVEY.md §4).
 """
 
 from __future__ import annotations

@@ -10,7 +10,6 @@ from talknet_segmentation_batchprocessing_spark.functions.augment import (
     face_pipeline,
     resize_nearest,
     snr_mix,
-    visual_normalize,
     wrap_pad,
 )
 
@@ -42,10 +41,3 @@ def test_face_pipeline_shapes():
     np.testing.assert_array_equal(out, face_pipeline(img))
     assert resize_nearest(img[..., 0], 224, 224).shape == (224, 224)
     assert center_crop(np.ones((224, 224)), 112).shape == (112, 112)
-
-
-def test_visual_normalize_range():
-    x = np.array([0.0, 255.0 * 0.4161, 255.0])
-    n = visual_normalize(x)
-    assert abs(n[1]) < 1e-9  # mean pixel maps to ~0
-    assert n[0] < 0 < n[2]

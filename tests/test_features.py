@@ -3,8 +3,6 @@
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
 
 
 def test_mfcc_shape_and_determinism():
@@ -23,22 +21,6 @@ def test_mfcc_shape_and_determinism():
     assert loud[:, 0].mean() > a[:, 0].mean()
     # empty signal degrades gracefully
     assert mfcc(np.array([], dtype=np.int16)).shape == (0, 13)
-
-
-def test_extract_mfcc_spark_shell(spark):
-    from talknet_segmentation_batchprocessing_spark.functions.mfcc import extract_mfcc
-    from talknet_segmentation_batchprocessing_spark.sources.media_ingest import (
-        extract_audio,
-        fake_decoder,
-    )
-
-    videos = spark.createDataFrame([("v1",), ("v2",)], "video_id string")
-    audio = extract_audio(videos, decoder=fake_decoder(n_frames=50))  # 2 s each
-    feats = extract_mfcc(audio).toPandas()
-    assert len(feats) == 4  # 2 videos x 2 one-second chunks
-    assert all(len(row[0]) == 13 for row in feats.mfcc)
-    # ~100 steps per 1 s chunk
-    assert all(95 <= len(m) <= 101 for m in feats.mfcc)
 
 
 def test_pack_batches_exact_matches_reference_loop(spark):

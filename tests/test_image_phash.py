@@ -13,7 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from talknet_segmentation_batchprocessing_spark.functions.phash import (
-    hamming64_bands,
     image_phash_bands,
     phash64_bands,
 )
@@ -31,6 +30,11 @@ from talknet_segmentation_batchprocessing_spark.sources.jpeg import (
 from .conftest import SF_SMOKE
 
 FIXTURE = Path(__file__).parent / "golden" / "mjpeg_2frame_8k.avi"
+
+
+def hamming64_bands(a: tuple[int, ...], b: tuple[int, ...]) -> int:
+    """Exact Hamming distance between two banded 64-bit hashes."""
+    return sum(bin(x ^ y).count("1") for x, y in zip(a, b))
 
 
 def _rng_img(seed: int, h: int = 48, w: int = 64) -> np.ndarray:

@@ -1,38 +1,85 @@
-"""Keep rule: an engine module stays only if something that ships needs it.
+"""Keep rule: engine code stays only if something that ships needs it.
 
 The users are a registered query (``__spark_entry__.py``), the CLI
 benchmark (``bench.py``), the perfbench workloads (``perfbench/*.py``,
-read only) and the modules an OPERATIONS.md step imports. Every package
-module must be reached from those by imports -- including the imports
-inside function bodies -- or be named in ``SURVEY_KEPT`` with the
-SURVEY.md §2 row or the reason that keeps it.
+read only) and the OPERATIONS.md code blocks. ``scripts/`` is not a
+user: a script drives the engine by hand and its helpers must have a
+user of their own. Tests are not users either.
+
+Two levels:
+
+- module: every package module must be reached from the users by
+  imports, including the imports inside function bodies;
+- function: every top-level function and class of the package must be
+  named from live code. Live code is a root file, the
+  OPERATIONS.md code blocks, the module-level statements of a reached
+  module and the body of a live definition, so the walk runs to a
+  fixpoint. A name used only inside its own body, or only by a
+  definition nothing live names, is dead. ``@query`` functions are
+  live: the decorator registers them.
+
+Anything else is named in ``KEPT`` (a dotted module or function path)
+with the SURVEY.md §2 row or the reason that keeps it. A kept entry is
+live code itself, so what it calls is kept with it.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = "talknet_segmentation_batchprocessing_spark"
+P = f"{PKG}."
 
-SURVEY_KEPT = {
-    f"{PKG}.operators.checkpoint_convert": "M4 checkpoint load with key remap",
-    f"{PKG}.operators.parity": "M1/M3 weights-parity harness for released checkpoints",
-    f"{PKG}.operators.talknet_train": "M5 training step (losses, Adam, StepLR)",
-    f"{PKG}.sources.csv_io": "S8 CSV source, S9 CSV sink",
-    f"{PKG}.sources.overlay_sink": "S15 visualization overlay sink",
-    f"{PKG}.sources.datasource": "S2 streaming dataset source",
-    f"{PKG}.sources.bootstrap": "S13 dataset bootstrap",
-    f"{PKG}.sources.checkpoints": "S7 pickle -> parquet stage checkpoints",
-    f"{PKG}.plans.inspect": (
-        "SURVEY §4 plan posture: the physical-plan assertions "
-        "tests/test_plans.py pins (pushed filters, exchanges, codegen)"
+KEPT = {
+    # SURVEY §2 rows that no stage of the batch calls yet
+    P + "sources.datasource.VideoCorpusDataSource": "S2 streaming dataset source",
+    P + "sources.checkpoints.checkpoint": "S7 stage checkpoint write",
+    P + "sources.checkpoints.restore": "S7 stage checkpoint readback",
+    P + "sources.checkpoints.has_stage": "S7 resume check",
+    P + "sources.csv_io.read_ava_csv": "S8 CSV source (AVA annotations)",
+    P + "sources.csv_io.read_trial_list": "S8 CSV source (training trial list)",
+    P + "sources.csv_io.read_talkset_list": "S8 CSV source (TalkSet list)",
+    P + "sources.csv_io.write_predictions_csv": "S9 CSV sink",
+    P + "sources.segment_sink.format_summary": "S11 summary report sink",
+    P + "sources.bootstrap.bootstrap": "S13 dataset bootstrap (driver side)",
+    P + "sources.bootstrap.bootstrap_distributed": "S13 dataset bootstrap (executors)",
+    P + "sources.bootstrap.ava_layout": "S13 AVA download layout",
+    P + "sources.bootstrap.ava_manifest": "S13 AVA download manifest",
+    P + "sources.corpus.write_if_absent": "S14 video copy-if-absent",
+    P + "sources.overlay_sink.smooth_scores": "S15 visualization: W2 score smoothing",
+    P + "sources.overlay_sink.overlay_frames": "S15 visualization overlay sink",
+    P + "sources.overlay_sink.write_overlay_video": "S15 overlay sink tail",
+    P + "operators.parity.run_s3fd_parity": "M1 weights parity, released checkpoint",
+    P + "operators.parity.run_talknet_parity": "M3 weights parity, released checkpoint",
+    P + "operators.checkpoint_convert.convert_s3fd": "M4 S3FD checkpoint key remap",
+    P + "operators.checkpoint_convert.convert_talknet": "M4 TalkNet checkpoint key remap",
+    P + "operators.talknet_train.train_heads_adam": "M5 training step (Adam + StepLR)",
+    P + "operators.windows.pack_batches_exact": (
+        "W7 exact greedy batch packing; w7_batch_packing registers the "
+        "relational relaxation"
     ),
-    f"{PKG}.functions.phash": (
+    P + "operators.multimodal.extract_image_features": (
+        "X4 decode + resize feature shell over binary image columns"
+    ),
+    P + "functions.augment.snr_mix": "X8 SNR noise mixing",
+    # plug-ins and sinks a caller passes or starts by hand
+    P + "sources.media_ingest.pyav_decoder": (
+        "S3/S5 decoder for real containers (PyAV), passed as "
+        "explode_frames/extract_audio's decoder="
+    ),
+    P + "operators.multimodal.jpeg_image_decoder": "image decoder (pure numpy JPEG)",
+    P + "operators.multimodal.cv2_image_decoder": "image decoder (cv2)",
+    P + "operators.multimodal.pil_image_decoder": "image decoder (Pillow)",
+    P + "functions.phash.image_phash_bands": (
         "real-pixel pHash front end for image_dedup's shared "
-        "hamming_cluster_bands tail (tests/test_image_phash.py)"
+        "hamming_cluster_bands tail"
+    ),
+    P + "streaming.ann_ingest.ann_pq_index_sink": (
+        "OPERATIONS.md §2: the compressed index's streaming sink"
     ),
 }
 
@@ -47,12 +94,18 @@ def _package_modules() -> dict[str, Path]:
     return mods
 
 
-def _imported_names(path: Path, module: str) -> set[str]:
+@functools.cache
+def _parse(path: Path) -> ast.Module:
+    return ast.parse(path.read_text(), str(path))
+
+
+@functools.cache
+def _imported_names(path: Path, module: str) -> frozenset[str]:
     """Every dotted module name an ``import`` in *path* may load."""
     is_pkg = path.name == "__init__.py"
     package = module if is_pkg else module.rpartition(".")[0]
     names = set()
-    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+    for node in ast.walk(_parse(path)):
         if isinstance(node, ast.Import):
             names.update(alias.name for alias in node.names)
         elif isinstance(node, ast.ImportFrom):
@@ -64,17 +117,26 @@ def _imported_names(path: Path, module: str) -> set[str]:
                 base = node.module or ""
             names.add(base)
             names.update(f"{base}.{alias.name}" for alias in node.names)
-    return names
+    return frozenset(names)
 
 
-def _reached(mods: dict[str, Path]) -> set[str]:
-    ops = (ROOT / "OPERATIONS.md").read_text()
-    todo = set(re.findall(rf"\b{PKG}(?:\.\w+)+", ops)) & set(mods)
-    assert todo, "OPERATIONS.md names no engine module"
+def _roots() -> list[Path]:
     roots = [ROOT / "__spark_entry__.py", ROOT / "bench.py"]
-    roots += sorted((ROOT / "perfbench").glob("*.py"))
-    for path in roots:
+    return roots + sorted((ROOT / "perfbench").glob("*.py"))
+
+
+def _operations_code() -> str:
+    ops = (ROOT / "OPERATIONS.md").read_text()
+    return "\n".join(re.findall(r"```python\n(.*?)```", ops, re.S))
+
+
+def _reached(mods: dict[str, Path], kept=()) -> set[str]:
+    todo = set(re.findall(rf"\b{PKG}(?:\.\w+)+", _operations_code())) & set(mods)
+    assert todo, "OPERATIONS.md names no engine module"
+    for path in _roots():
         todo |= _imported_names(path, path.stem) & set(mods)
+    for key in kept:
+        todo |= {m for m in (key, key.rpartition(".")[0]) if m in mods}
     seen: set[str] = set()
     while todo:
         mod = todo.pop()
@@ -87,15 +149,88 @@ def _reached(mods: dict[str, Path]) -> set[str]:
     return seen
 
 
+@functools.cache
+def _names(node: ast.AST) -> frozenset[str]:
+    """The identifiers *node* mentions: names, attributes, imports."""
+    out = set()
+    for sub in ast.walk(node):
+        if isinstance(sub, ast.Name):
+            out.add(sub.id)
+        elif isinstance(sub, ast.Attribute):
+            out.add(sub.attr)
+        elif isinstance(sub, ast.alias):
+            out.add(sub.name.rpartition(".")[2])
+    return frozenset(out)
+
+
+def _is_query(node: ast.AST) -> bool:
+    for dec in getattr(node, "decorator_list", ()):
+        target = dec.func if isinstance(dec, ast.Call) else dec
+        if (getattr(target, "id", None) or getattr(target, "attr", None)) == "query":
+            return True
+    return False
+
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _live(mods: dict[str, Path], kept=()) -> tuple[dict[str, ast.AST], set[str]]:
+    """(every top-level definition of a reached module, the live ones)."""
+    defs: dict[str, ast.AST] = {}
+    live_names = set(_names(ast.parse(_operations_code())))
+    for path in _roots():
+        live_names |= _names(_parse(path))
+    for mod in sorted(_reached(mods, kept)):
+        tree = _parse(mods[mod])
+        for stmt in tree.body:
+            if isinstance(stmt, _DEFS):
+                defs[f"{mod}.{stmt.name}"] = stmt
+            else:
+                live_names |= _names(stmt)
+    kept_mods = {k for k in kept if k in mods}
+    live = {
+        d for d, node in defs.items()
+        if d in kept or d.rpartition(".")[0] in kept_mods or _is_query(node)
+    }
+    for d in live:
+        live_names |= _names(defs[d])
+    grew = True
+    while grew:
+        grew = False
+        for d, node in defs.items():
+            if d not in live and d.rpartition(".")[2] in live_names:
+                live.add(d)
+                live_names |= _names(node)
+                grew = True
+    return defs, live
+
+
 def test_every_module_has_a_user():
     mods = _package_modules()
-    orphans = sorted(set(mods) - _reached(mods) - set(SURVEY_KEPT))
+    orphans = sorted(set(mods) - _reached(mods, KEPT))
     assert not orphans, f"modules no user imports: {orphans}"
 
 
+def test_every_function_has_a_user():
+    defs, live = _live(_package_modules(), KEPT)
+    orphans = sorted(set(defs) - live)
+    assert not orphans, f"functions no live code names: {orphans}"
+
+
 def test_survey_kept_names_live_unreached_modules():
+    """Every ``KEPT`` entry gives its SURVEY row or reason, names a module
+    or definition of the package, and names code that no user and no
+    other entry reaches."""
     mods = _package_modules()
-    assert all(reason.strip() for reason in SURVEY_KEPT.values())
-    assert set(SURVEY_KEPT) <= set(mods), set(SURVEY_KEPT) - set(mods)
-    # an entry a user already reaches is dead weight in the exception list
-    assert not set(SURVEY_KEPT) & _reached(mods)
+    assert all(reason.strip() for reason in KEPT.values())
+    defs, _ = _live(mods, KEPT)
+    unknown = set(KEPT) - set(mods) - set(defs)
+    assert not unknown, f"KEPT names nothing in the package: {sorted(unknown)}"
+    # an entry that live code (the other entries included) already
+    # reaches is dead weight in the exception list
+    needless = []
+    for key in KEPT:
+        others = set(KEPT) - {key}
+        if key in _reached(mods, others) or key in _live(mods, others)[1]:
+            needless.append(key)
+    assert not needless, f"KEPT entries that live code already reaches: {needless}"

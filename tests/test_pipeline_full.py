@@ -7,8 +7,6 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
 
 
 def test_full_asd_pipeline(spark, tmp_path):
@@ -95,56 +93,6 @@ def test_scene_detection_finds_synthetic_cut(spark):
     assert scenes.iloc[1].start_frame == 30 and scenes.iloc[1].end_frame == 60
 
 
-def test_iter_dataset_source(spark):
-    from talknet_segmentation_batchprocessing_spark.sources.corpus import (
-        iter_dataset_source,
-    )
-
-    samples = ({"video_id": f"v{i}", "path": f"/x/v{i}.mp4", "byte_len": i} for i in range(5))
-    df = iter_dataset_source(spark, samples, batch_size=2)
-    pdf = df.toPandas().sort_values("video_id")
-    assert pdf.video_id.tolist() == [f"v{i}" for i in range(5)]
-    empty = iter_dataset_source(spark, [])
-    assert empty.count() == 0
-
-
-def test_iter_dataset_source_is_lazy(spark):
-    """The adapter must never materialize the whole iterator on the
-    driver: consumption happens in batch_size chunks via islice. A
-    generator that counts its peak un-consumed position proves only
-    one batch is pulled ahead of each createDataFrame call — list()ing
-    it first (the old bug) would drain all rows before any batch."""
-    from talknet_segmentation_batchprocessing_spark.sources.corpus import (
-        iter_dataset_source,
-    )
-
-    pulled = []
-
-    def gen():
-        for i in range(10):
-            pulled.append(i)
-            yield {"video_id": f"v{i}", "path": f"/x/{i}", "byte_len": i}
-
-    class ChunkSpy:
-        """Wraps spark; records how many rows were pulled when each
-        createDataFrame fires."""
-
-        def __init__(self, inner):
-            self._inner = inner
-            self.pull_marks = []
-
-        def createDataFrame(self, data, schema):
-            self.pull_marks.append(len(pulled))
-            return self._inner.createDataFrame(data, schema)
-
-    spy = ChunkSpy(spark)
-    df = iter_dataset_source(spy, gen(), batch_size=3)
-    assert df.count() == 10
-    # first batch fired after only 3 rows were drawn, not all 10
-    assert spy.pull_marks[0] == 3
-    assert spy.pull_marks == [3, 6, 9, 10]
-
-
 def test_full_pipeline_real_forward(spark, tmp_path):
     """The media pipeline driving the REAL numpy TalkNet forward: fake
     decode -> detect -> track -> featurize (face crops + per-track
@@ -213,31 +161,3 @@ def test_full_pipeline_real_forward(spark, tmp_path):
                             min_duration_s=0.12).toPandas()
     # with a median threshold there is at least one above-threshold run
     assert (segs.end_frame > segs.start_frame).all()
-
-
-def test_iter_dataset_source_spill_dir_bounded(spark, tmp_path):
-    """spill_dir mode: batches land in parquet as they are consumed
-    and the result is a scan — the corpus-scale path where driver
-    memory stays one-batch-bounded (no accumulated LocalRelations)."""
-    from talknet_segmentation_batchprocessing_spark.sources.corpus import (
-        iter_dataset_source,
-    )
-
-    samples = (
-        {"video_id": f"v{i:03d}", "path": f"/x/v{i}.mp4", "byte_len": i}
-        for i in range(25)
-    )
-    spill = str(tmp_path / "spill")
-    df = iter_dataset_source(spark, samples, batch_size=4, spill_dir=spill)
-    # the plan must be a file scan of the spill dir, not a union of
-    # in-memory relations
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" not in plan and "Union" not in plan
-    pdf = df.toPandas().sort_values("video_id")
-    assert pdf.video_id.tolist() == [f"v{i:03d}" for i in range(25)]
-    assert pdf.byte_len.sum() == sum(range(25))
-
-    empty = iter_dataset_source(
-        spark, [], spill_dir=str(tmp_path / "spill_empty")
-    )
-    assert empty.count() == 0

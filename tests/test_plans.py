@@ -7,16 +7,16 @@ from __future__ import annotations
 from talknet_segmentation_batchprocessing_spark import registry
 import pytest
 
-from talknet_segmentation_batchprocessing_spark.plans.inspect import (
+from .conftest import SF_SMOKE
+from .plan_inspect import (
     assert_broadcast_join,
     assert_pushed_filter,
+    codegen_subtree_count,
     count_exchanges,
     formatted_plan,
     plan_has,
     single_partition_sorts,
 )
-
-from .conftest import SF_SMOKE
 
 registry._ensure_loaded()
 
@@ -192,10 +192,6 @@ def test_single_partition_sort_detector_catches_bad_plan(spark):
 
 
 def test_codegen_covers_relational_core(spark):
-    from talknet_segmentation_batchprocessing_spark.plans.inspect import (
-        codegen_subtree_count,
-    )
-
     # AQE wraps the whole plan until execution, hiding codegen subtrees
     # from pre-execution explain — inspect with it off
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -327,10 +323,16 @@ def test_single_action_frame_shares_exchange_without_persist(spark, name):
 
 def test_triangle_executed_exchanges_bounded(spark):
     """The full triangle query's EXECUTED plan must stay at or below 8
-    exchanges (was 18 in round 5 before the bucketed edge table)."""
+    exchanges (was 18 in round 5 before the bucketed edge table).
+    ``collect()`` runs the frame's own QueryExecution (``count()`` would
+    run a separate aggregate one), so its adaptive plan reaches its
+    final form; only that final plan is counted, not the initial plan
+    AQE keeps beside it."""
     df = q("graph_triangle_count", spark)
-    df.count()
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    df.collect()
+    adaptive = df._jdf.queryExecution().executedPlan()
+    assert "isFinalPlan=true" in adaptive.toString().splitlines()[0]
+    plan = adaptive.finalPhysicalPlan().toString()
     import re
 
     ids, noid = set(), set()
@@ -814,10 +816,6 @@ def test_rank_agreement_no_single_partition_sort(spark):
     documented adaptive choice, so assert on the >crossover path only
     via the helper's own tests); here pin that the composed plan stays
     JVM-side."""
-    from talknet_segmentation_batchprocessing_spark.plans.inspect import (
-        formatted_plan,
-    )
-
     df = q("quality_rank_agreement", spark)
     plan = formatted_plan(df)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

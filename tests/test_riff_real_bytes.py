@@ -11,6 +11,8 @@ with binaryFile, and drive ingest -> frame explode -> detect -> track
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 import pytest
 
@@ -20,11 +22,19 @@ from talknet_segmentation_batchprocessing_spark.sources.media_ingest import (
     riff_decoder,
 )
 from talknet_segmentation_batchprocessing_spark.sources.riff import (
+    _chunk,
     read_avi,
     read_wav,
     write_avi,
-    write_wav,
 )
+
+
+def write_wav(samples: np.ndarray, sr: int) -> bytes:
+    """Mono 16-bit PCM WAV bytes (RIFF/WAVE: ``fmt `` + ``data``)."""
+    pcm = np.asarray(samples, dtype="<i2").tobytes()
+    fmt = struct.pack("<HHIIHH", 1, 1, sr, sr * 2, 2, 16)  # PCM, mono, s16
+    body = b"WAVE" + _chunk(b"fmt ", fmt) + _chunk(b"data", pcm)
+    return _chunk(b"RIFF", body)
 
 
 def _gray_frames(seed: int, n: int, h: int = 8, w: int = 8) -> list[np.ndarray]:

@@ -344,7 +344,7 @@ def test_video_corpus_datasource(spark, tmp_path):
 
     for name in ("x.mp4", "y.mkv", "skip.txt"):
         (tmp_path / name).write_bytes(name.encode() * 3)
-    datasource.register(spark)
+    spark.dataSource.register(datasource.VideoCorpusDataSource)
     df = (
         spark.read.format("video_corpus")
         .option("path", str(tmp_path))
@@ -381,7 +381,7 @@ def test_video_corpus_stream_rate_limit_and_resume(spark, tmp_path):
     out: list = []
     for i in range(3):
         (folder / f"clip{i:03d}.avi").write_bytes(b"x" * (i + 1))
-    datasource.register(spark)
+    spark.dataSource.register(datasource.VideoCorpusDataSource)
 
     def run_once():
         stream = (

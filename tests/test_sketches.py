@@ -20,8 +20,7 @@ from talknet_segmentation_batchprocessing_spark.queries.sketches import (
     _HLL_M,
     _KMV_K,
     _SPARK_RHO,
-    _lang_shingles,
-    _tok_hash,
+    _lang_shingle_hashes,
 )
 
 from .conftest import SF_CORRECT
@@ -72,10 +71,9 @@ def test_kmv_merge_law(spark):
     k-smallest sets — the partial-aggregate identity the docstring
     claims for distributed merging."""
     hashed = (
-        _lang_shingles(spark, SF_CORRECT)
+        _lang_shingle_hashes(spark, SF_CORRECT)
         .filter(F.col("lang") == "en")
-        .select(_tok_hash().alias("h"))
-        .distinct()
+        .select("h")
     )
     full = [r.h for r in hashed.orderBy("h").limit(_KMV_K).collect()]
     half_a = [
@@ -94,10 +92,9 @@ def test_hll_merge_law(spark):
     """Element-wise register max of two halves' register vectors ==
     the full table's register vector."""
     hashed = (
-        _lang_shingles(spark, SF_CORRECT)
+        _lang_shingle_hashes(spark, SF_CORRECT)
         .filter(F.col("lang") == "en")
-        .select(_tok_hash().alias("h"))
-        .distinct()
+        .select("h")
     )
 
     def regs(df):

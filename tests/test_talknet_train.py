@@ -1,6 +1,6 @@
 """operators/talknet_train.py — M5 head training: finite-difference
-gradient checks, exact distributed == local equivalence, and loss
-descent on separable data."""
+gradient checks, exact distributed == local gradient, Adam trajectory
+parity, and loss descent on separable data."""
 
 from __future__ import annotations
 
@@ -13,10 +13,11 @@ from talknet_segmentation_batchprocessing_spark.operators.talknet_forward import
 )
 from talknet_segmentation_batchprocessing_spark.operators.talknet_train import (
     _PARAM_KEYS,
-    AdamState,
+    _check_head_params,
+    _epoch_mean_grad,
+    _unflatten,
     loss_and_grads,
     train_heads_adam,
-    train_heads_epoch,
 )
 
 
@@ -69,14 +70,13 @@ def test_distributed_step_equals_local_full_batch(spark, w):
         }
     )
     feats = spark.createDataFrame(pdf).repartition(8)  # many partial grads
-    new_w, loss, n_seen = train_heads_epoch(feats, w, lr=0.1)
+    n_seen, loss, flat = _epoch_mean_grad(feats, _check_head_params(w))
     assert n_seen == n
+    grads = _unflatten(flat)
     local_loss, local_grads = loss_and_grads(w, X_av, X_a, X_v, y)
     np.testing.assert_allclose(loss, local_loss, rtol=0, atol=1e-9)
     for k in _PARAM_KEYS:
-        np.testing.assert_allclose(
-            new_w[k], w[k] - 0.1 * local_grads[k], rtol=0, atol=1e-9
-        )
+        np.testing.assert_allclose(grads[k], local_grads[k], rtol=0, atol=1e-10)
 
 
 def test_loss_decreases_on_separable_data(spark, w):
@@ -91,10 +91,7 @@ def test_loss_decreases_on_separable_data(spark, w):
         {"av": list(X_av), "a": list(X_a), "v": list(X_v), "label": y.astype(int)}
     )
     feats = spark.createDataFrame(pdf)
-    cur, losses = dict(w), []
-    for _ in range(4):
-        cur, loss, _n = train_heads_epoch(feats, cur, lr=0.5)
-        losses.append(loss)
+    _w, losses, _n, _st = train_heads_adam(feats, w, epochs=4, lr=0.05)
     assert losses == sorted(losses, reverse=True), losses
     assert losses[-1] < losses[0] * 0.9
 
@@ -170,7 +167,7 @@ def test_null_labels_rejected_with_clear_message(spark, w):
     )
     feats = spark.createDataFrame(pdf)
     with pytest.raises(Exception, match="null values in training columns"):
-        train_heads_epoch(feats, w, lr=0.1)
+        train_heads_adam(feats, w)
 
 
 def test_invalid_labels_rejected(spark, w):
@@ -182,7 +179,7 @@ def test_invalid_labels_rejected(spark, w):
     )
     feats = spark.createDataFrame(pdf)
     with pytest.raises(Exception, match="labels must be 0/1"):
-        train_heads_epoch(feats, w, lr=0.1)
+        train_heads_adam(feats, w)
 
 
 def test_missing_head_params_fail_fast(spark, w):
@@ -194,29 +191,4 @@ def test_missing_head_params_fail_fast(spark, w):
     )
     feats = spark.createDataFrame(pdf)
     with pytest.raises(KeyError, match="missing head params"):
-        train_heads_epoch(feats, stripped, lr=0.1)
-
-
-def test_train_distributed_fallback_matches_head_trainer(spark, w):
-    """train_distributed (the TorchDistributor-shaped M5 front door,
-    talkNet.py:20-86) must fall back to the exact head trainer in a
-    torch-free image and say so — identical weights/losses to calling
-    train_heads_adam directly."""
-    from talknet_segmentation_batchprocessing_spark.operators.talknet_train import (
-        train_distributed,
-        train_heads_adam,
-    )
-
-    rng = np.random.default_rng(9)
-    X_av, X_a, X_v, y = _data(rng, 16)
-    pdf = pd.DataFrame(
-        {"av": list(X_av), "a": list(X_a), "v": list(X_v), "label": y.astype(int)}
-    )
-    feats = spark.createDataFrame(pdf)
-    w1, losses1, n1, backend = train_distributed(spark, feats, w, epochs=2, lr=0.01)
-    assert backend == "heads-allreduce"
-    w2, losses2, n2, _st = train_heads_adam(feats, w, epochs=2, lr=0.01)
-    assert n1 == n2 == 16
-    assert losses1 == losses2
-    for k in w1:
-        np.testing.assert_array_equal(w1[k], w2[k])
+        train_heads_adam(feats, stripped)

@@ -86,34 +86,36 @@ def _forward_threads(cores: int) -> int:
     return max(1, min(cores, cpus or 1))
 
 
+def _fake_actors(video_id: str, frame_idx: int):
+    """The seeded actors of a fake detection: 1..3 per video, each a
+    30x30 box drifting smoothly with ``frame_idx`` (high
+    consecutive-frame IoU) with a confidence in [0.85, 1.0) per (video,
+    frame, actor). Yields ``(actor, arng, (x1, y1, x2, y2), conf)``;
+    ``arng`` is the actor's own stream, past its box and phase draws."""
+    vseed = int.from_bytes(hashlib.sha256(video_id.encode()).digest()[:4], "big")
+    vrng = np.random.RandomState(vseed)
+    for a in range(int(vrng.randint(1, 4))):
+        arng = np.random.RandomState(vseed + 7919 * (a + 1))
+        bx, by = arng.uniform(20, 150, size=2)
+        phase = arng.uniform(0, 2 * np.pi)
+        cx = bx + 10.0 * np.sin(frame_idx / 20.0 + phase)
+        cy = by + 10.0 * np.cos(frame_idx / 25.0 + phase)
+        cseed = int.from_bytes(
+            hashlib.sha256(f"{video_id}:{frame_idx}:{a}".encode()).digest()[:4], "big"
+        )
+        yield a, arng, (cx - 15, cy - 15, cx + 15, cy + 15), 0.85 + (cseed / 2**32) * 0.15
+
+
 def fake_face_detector():
-    """Deterministic stand-in for S3FD, temporally coherent: each video
-    gets 1..3 persistent 'actors' whose 30x30 boxes drift
-    smoothly with frame_idx (high consecutive-frame IoU), so greedy
-    tracking (J6) links them like real faces. Confidence varies in
-    [0.85, 1.0) per (video, frame, actor) so the F1 conf>0.9 filter is
-    exercised."""
+    """Deterministic stand-in for S3FD, temporally coherent: the
+    ``_fake_actors`` boxes, so greedy tracking (J6) links them like real
+    faces, and the F1 conf>0.9 filter is exercised."""
 
     def detect(video_id: str, frame_idx: int, image: bytes | None):
-        vseed = int.from_bytes(hashlib.sha256(video_id.encode()).digest()[:4], "big")
-        vrng = np.random.RandomState(vseed)
-        n_actors = int(vrng.randint(1, 4))
-        out = []
-        for a in range(n_actors):
-            arng = np.random.RandomState(vseed + 7919 * (a + 1))
-            bx, by = arng.uniform(20, 150, size=2)
-            phase = arng.uniform(0, 2 * np.pi)
-            cx = bx + 10.0 * np.sin(frame_idx / 20.0 + phase)
-            cy = by + 10.0 * np.cos(frame_idx / 25.0 + phase)
-            cseed = int.from_bytes(
-                hashlib.sha256(f"{video_id}:{frame_idx}:{a}".encode()).digest()[:4],
-                "big",
-            )
-            conf = 0.85 + (cseed / 2**32) * 0.15
-            out.append(
-                (a, float(cx - 15), float(cy - 15), float(cx + 15), float(cy + 15), float(conf))
-            )
-        return out
+        return [
+            (a, float(x1), float(y1), float(x2), float(y2), float(conf))
+            for a, _, (x1, y1, x2, y2), conf in _fake_actors(video_id, frame_idx)
+        ]
 
     return detect
 
@@ -121,9 +123,9 @@ def fake_face_detector():
 def fake_s3fd_forward(input_size: tuple[int, int] = (270, 480)):
     """Deterministic stand-in for ONLY the S3FD convolutional forward
     (reference nets.py:28-174): emits (loc, conf) head tensors that
-    regress a few priors exactly onto the same temporally-coherent
-    drifting actor boxes as ``fake_face_detector`` — so the REAL
-    post-processing (priors, decode, two-stage NMS in s3fd_post.py)
+    regress one prior per actor, drawn from the actor's stream, exactly
+    onto the ``_fake_actors`` boxes of ``fake_face_detector`` — so the
+    REAL post-processing (priors, decode, two-stage NMS in s3fd_post.py)
     runs end-to-end on them.
     """
     from .s3fd_post import encode, prior_boxes
@@ -134,26 +136,11 @@ def fake_s3fd_forward(input_size: tuple[int, int] = (270, 480)):
 
     def forward(image, meta):
         video_id, frame_idx = meta
-        vseed = int.from_bytes(hashlib.sha256(video_id.encode()).digest()[:4], "big")
-        vrng = np.random.RandomState(vseed)
-        n_actors = int(vrng.randint(1, 4))
         loc = np.zeros((1, n_priors, 4))
         conf = np.zeros((1, n_priors, 2))
         conf[0, :, 0] = 1.0
-        for a in range(n_actors):
-            arng = np.random.RandomState(vseed + 7919 * (a + 1))
-            bx, by = arng.uniform(20, 150, size=2)
-            phase = arng.uniform(0, 2 * np.pi)
-            cx = bx + 10.0 * np.sin(frame_idx / 20.0 + phase)
-            cy = by + 10.0 * np.cos(frame_idx / 25.0 + phase)
-            box = np.array(
-                [[(cx - 15) / w, (cy - 15) / h, (cx + 15) / w, (cy + 15) / h]]
-            )
-            cseed = int.from_bytes(
-                hashlib.sha256(f"{video_id}:{frame_idx}:{a}".encode()).digest()[:4],
-                "big",
-            )
-            score = 0.85 + (cseed / 2**32) * 0.15
+        for _, arng, (x1, y1, x2, y2), score in _fake_actors(video_id, frame_idx):
+            box = np.array([[x1 / w, y1 / h, x2 / w, y2 / h]])
             pi = int(arng.randint(0, n_priors))
             loc[0, pi] = encode(box, priors[pi : pi + 1])
             conf[0, pi, 1] = score

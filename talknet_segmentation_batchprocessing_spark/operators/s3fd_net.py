@@ -24,6 +24,8 @@ must follow the net, and ``forward`` returns them alongside the heads.
 
 from __future__ import annotations
 
+import io
+
 import numpy as np
 
 from .talknet_forward import conv2d, relu, softmax
@@ -160,6 +162,27 @@ def s3fd_forward_fn(weights: dict):
         return forward(weights, image)
 
     return fn
+
+
+def gray_frame_detector_builder(height: int, width: int, conf_th: float):
+    """``detect_faces(model_builder=...)`` over the raw ``height`` x
+    ``width`` gray frames of the media ingest: npz weight bytes ->
+    ``s3fd_detector`` on this forward, each frame stacked to the three
+    equal channels the trunk expects (the reference feeds BGR)."""
+
+    def build(state: bytes):
+        from .inference import s3fd_detector
+
+        z = np.load(io.BytesIO(state))
+        base = s3fd_forward_fn({k: z[k] for k in z.files})
+
+        def fn(image, meta):
+            arr = np.frombuffer(image, dtype=np.uint8).reshape(height, width)
+            return base(np.repeat(arr[:, :, None], 3, axis=2), meta)
+
+        return s3fd_detector(forward_fn=fn, input_size=(height, width), conf_th=conf_th)
+
+    return build
 
 
 def init_weights(seed: int = 13) -> dict[str, np.ndarray]:

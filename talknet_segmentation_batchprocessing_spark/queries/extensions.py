@@ -56,15 +56,15 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select("doc_id", F.explode(word_shingles("w", 3)).alias("shingle"))
         .distinct()
     )
-    # NOT persisted since round 12 (guide §5): within one action
-    # Spark's exchange reuse dedups the distinct's shuffle across
-    # every consumer branch (the self-join's two sides canonicalize to
-    # the same exchange), so the cache bought nothing warm (A/B on the
-    # jaccard shape: 0.97 s persisted vs 0.99 s unpersisted warm,
-    # 5.19 vs 2.16 cold — the materialization itself was the cost),
-    # and at 100 TB the distinct shingle set does not fit memory
-    # anyway. Multi-action consumers (the CC family) read the
-    # downstream localCheckpoint-ed edge table, not this frame.
+    # NOT persisted since round 12 (guide §5): the cache bought nothing
+    # warm (A/B on the jaccard shape: 0.97 s persisted vs 0.99 s
+    # unpersisted warm, 5.19 vs 2.16 cold), and at 100 TB the distinct
+    # shingle set does not fit memory. The distinct sits on the doc_id
+    # repartition, so within one action exchange reuse shares only that
+    # repartition, and each consumer branch reruns split + explode +
+    # distinct (dedup_ngram_jaccard's final plan: three explodes over
+    # one Exchange and two ReusedExchanges). Multi-action consumers (the
+    # CC family) read the downstream localCheckpoint-ed edge table.
     return sh
 
 

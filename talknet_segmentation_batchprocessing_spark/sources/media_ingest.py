@@ -35,6 +35,24 @@ FRAMES_SCHEMA = (
 AUDIO_SCHEMA = "video_id string, chunk_idx int, sr int, samples array<smallint>"
 
 
+def _cfr_nearest(times: np.ndarray, fps: float) -> np.ndarray:
+    """CFR resample onto the ``fps`` grid: for each tick, the index of the
+    nearest source frame of the sorted ``times`` (seconds from the first
+    frame). ffmpeg ``-r`` duplicates stills across gaps and drops bursts,
+    which nearest-pts reproduces. Distances are compared in integer
+    half-tick units so an equidistant tick resolves to the EARLIER frame
+    exactly, never by float ulp; sub-half-tick pts detail only matters
+    for sources faster than 2*fps, where either neighbor is a valid
+    representative."""
+    if len(times) < 2:
+        return np.arange(len(times))
+    ht = np.round(times * fps * 2).astype(np.int64)
+    grid = np.arange(0, ht[-1] + 1, 2)  # ticks at even half-ticks
+    pos = np.clip(np.searchsorted(ht, grid), 1, len(ht) - 1)
+    left_closer = (grid - ht[pos - 1]) <= (ht[pos] - grid)
+    return np.where(left_closer, pos - 1, pos)
+
+
 def fake_decoder(n_frames: int = 50) -> Decoder:
     """Deterministic stand-in for ffmpeg/PyAV: 8x8 frame pixels and
     audio samples are seeded from sha256(video_id), so every executor —
@@ -101,20 +119,7 @@ def pyav_decoder(fps: float = FPS, sr: int = SAMPLE_RATE) -> Decoder:
             raw.sort(key=lambda x: x[0])
             height, width = raw[0][1].shape
             times = np.array([t for t, _ in raw])
-            # CFR resample onto the 25 fps grid: for each tick pick the
-            # nearest source frame (ffmpeg -r duplicates stills across
-            # gaps and drops bursts, which nearest-pts reproduces).
-            # Distances are compared in integer half-tick units so an
-            # equidistant tick resolves to the EARLIER frame exactly,
-            # never by float ulp; sub-half-tick pts detail only matters
-            # for sources faster than 2*fps, where either neighbor is
-            # a valid representative.
-            ht = np.round((times - times[0]) * fps * 2).astype(np.int64)
-            grid = np.arange(0, ht[-1] + 1, 2)  # ticks at even half-ticks
-            pos = np.clip(np.searchsorted(ht, grid), 1, len(ht) - 1)
-            left_closer = (grid - ht[pos - 1]) <= (ht[pos] - grid)
-            nearest = np.where(left_closer, pos - 1, pos)
-            frames = [raw[i][1].tobytes() for i in nearest]
+            frames = [raw[i][1].tobytes() for i in _cfr_nearest(times - times[0], fps)]
 
         # --- audio pass: resample to 16 kHz mono s16
         chunks: list[np.ndarray] = []
@@ -146,8 +151,7 @@ def riff_decoder(fps: float = FPS, sr: int = SAMPLE_RATE) -> Decoder:
     8-bit-grayscale AVI (frames + optional PCM audio track) or mono
     16-bit PCM WAV (audio only). Output matches the reference's ffmpeg
     normalize contract (demoTalkNet.py:485-508): constant ``fps`` video
-    grid (nearest-source-frame CFR resample, ties to the earlier frame
-    in exact integer half-tick units — the same rule as pyav_decoder)
+    grid (``_cfr_nearest``, the same rule as pyav_decoder)
     and ``sr`` mono int16 audio (nearest-index resample). Unlike
     ``pyav_decoder`` this needs NO optional dependency, so the
     real-bytes ingest path is exercised by tests in this image.
@@ -176,20 +180,8 @@ def riff_decoder(fps: float = FPS, sr: int = SAMPLE_RATE) -> Decoder:
             return [], 0, 0, _resample_nearest_audio(samples, src_sr)
         raw, src_fps, samples, src_sr = read_avi(content)
         height, width = (raw[0].shape if raw else (0, 0))
-        frames: list[bytes] = []
-        if len(raw) == 1:
-            frames = [raw[0].tobytes()]
-        elif raw:
-            # CFR resample onto the fps grid, same integer half-tick
-            # nearest rule as pyav_decoder (source is CFR: frame i at
-            # i / src_fps seconds)
-            times = np.arange(len(raw)) / src_fps
-            ht = np.round(times * fps * 2).astype(np.int64)
-            grid = np.arange(0, ht[-1] + 1, 2)
-            pos = np.clip(np.searchsorted(ht, grid), 1, len(ht) - 1)
-            left_closer = (grid - ht[pos - 1]) <= (ht[pos] - grid)
-            nearest = np.where(left_closer, pos - 1, pos)
-            frames = [raw[i].tobytes() for i in nearest]
+        # the source is CFR: frame i at i / src_fps seconds
+        frames = [raw[i].tobytes() for i in _cfr_nearest(np.arange(len(raw)) / src_fps, fps)]
         return frames, height, width, _resample_nearest_audio(samples, src_sr)
 
     return decode

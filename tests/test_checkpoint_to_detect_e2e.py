@@ -15,8 +15,6 @@ demoTalkNet.py:114-128 (the per-frame detect loop this distributes).
 
 from __future__ import annotations
 
-import io
-
 import numpy as np
 
 from talknet_segmentation_batchprocessing_spark.operators.checkpoint_convert import (
@@ -24,6 +22,7 @@ from talknet_segmentation_batchprocessing_spark.operators.checkpoint_convert imp
     load_npz_weights,
 )
 from talknet_segmentation_batchprocessing_spark.operators.s3fd_net import (
+    gray_frame_detector_builder,
     init_weights,
     s3fd_forward_fn,
 )
@@ -33,33 +32,7 @@ from .test_checkpoint_convert import _craft_torch_zip
 H, W = 64, 96  # net input; floor-pooled grids differ from ceil(side/step)
 
 
-def _builder(state: bytes):
-    """model_builder for detect_faces: npz bytes -> real S3FD detector.
-    Frames arrive as raw grayscale bytes from the RIFF ingest; the
-    wrapper rebuilds (H, W) and stacks to the 3-channel input the VGG
-    trunk expects (the reference feeds BGR; a grayscale corpus is the
-    equal-channels special case)."""
-    from talknet_segmentation_batchprocessing_spark.operators.inference import (
-        s3fd_detector,
-    )
-    from talknet_segmentation_batchprocessing_spark.operators.s3fd_net import (
-        s3fd_forward_fn as fwd_fn,
-    )
-
-    z = np.load(io.BytesIO(state))
-    w = {k: z[k] for k in z.files}
-    base = fwd_fn(w)
-
-    def fwd(image, meta):
-        arr = np.frombuffer(image, dtype=np.uint8).reshape(H, W)
-        return base(np.repeat(arr[:, :, None], 3, axis=2), meta)
-
-    return s3fd_detector(forward_fn=fwd, input_size=(H, W), conf_th=0.5)
-
-
 def test_checkpoint_to_detections_on_riff_frames(spark, tmp_path):
-    from pyspark.sql import functions as F
-
     from talknet_segmentation_batchprocessing_spark.operators.inference import (
         broadcast_weights,
         detect_faces,
@@ -111,7 +84,12 @@ def test_checkpoint_to_detections_on_riff_frames(spark, tmp_path):
         state = f.read()
     bc = broadcast_weights(spark, state)
     dets = (
-        detect_faces(frames, model_bc=bc, model_builder=_builder, conf_th=0.5)
+        detect_faces(
+            frames,
+            model_bc=bc,
+            model_builder=gray_frame_detector_builder(H, W, conf_th=0.5),
+            conf_th=0.5,
+        )
         .orderBy("frame_idx", "det_id")
         .collect()
     )

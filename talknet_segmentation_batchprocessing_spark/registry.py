@@ -51,6 +51,15 @@ def query(name: str, oracle: str | None = None, doc: str = "", tags: tuple[str, 
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read table ``name`` of ``sf_dir``.
+
+    For a single-file table the schema is derived from the parquet
+    footer on the driver (``_footer_schema``) and handed to the reader,
+    so Spark runs no schema-inference job. A directory table, or a file
+    with any column type outside the derived set, is read with Spark's
+    own inference. Nothing is memoized: the footer read costs under a
+    millisecond, and a memo would serve a stale schema after the file
+    is rewritten."""
     from .deploy import ensure_worker_imports
 
     ensure_worker_imports(spark)
@@ -59,11 +68,14 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # (PARQUET_TYPE_ILLEGAL). It is a runtime SQL conf, so set it here
     # rather than only in our own session factory.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    # events.ts is parquet TIMESTAMP(NANOS): surfaced as long nanos via
-    # spark.sql.legacy.parquet.nanosAsLong; all values are exact
-    # microseconds (ns%1000 == 0 across the testdata), so integer-div
-    # conversion is lossless. Doubles would corrupt (~1.7e18 > 2^53).
+    path = f"{sf_dir}/{name}.parquet"
+    schema = _footer_schema(spark, path)
+    df = (spark.read.schema(schema) if schema else spark.read).parquet(path)
+    # events.ts is TIMESTAMP(MICROS) in today's testdata (read as
+    # TIMESTAMP_NTZ). Regenerated data may write it as TIMESTAMP(NANOS),
+    # surfaced as long nanos under nanosAsLong; those values are exact
+    # microseconds, so integer-div conversion is lossless. Doubles
+    # would corrupt (~1.7e18 > 2^53).
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -71,6 +83,49 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if field.name == "ts" and isinstance(field.dataType, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
+
+
+def _footer_schema(spark: SparkSession, path: str):
+    """The ``StructType`` Spark would infer for the local parquet file
+    ``path``, built from its footer, or None when ``path`` is not a
+    local file or holds a type outside the verified set.
+
+    Verified types (Arrow view of the footer): int32, int64, double,
+    string, tz-less timestamp[us] and list<float>, converted as PySpark
+    converts Arrow; plus INT64 TIMESTAMP(NANOS), which Spark reads as
+    long under ``nanosAsLong`` (``load`` sets it). pyarrow also shows
+    INT96 timestamps as timestamp[ns], so the long rule needs INT64.
+    Spark reads every file column as nullable."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    if not os.path.isfile(path):
+        return None
+    try:
+        meta = pq.read_metadata(path)
+    except (pa.ArrowInvalid, OSError):  # not a footer pyarrow reads: let Spark report it
+        return None
+    int64 = {
+        c.path for c in map(meta.schema.column, range(meta.num_columns))
+        if c.physical_type == "INT64"
+    }
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled").lower() == "true"
+    verified = (pa.int32(), pa.int64(), pa.float64(), pa.string(), pa.timestamp("us"),
+                pa.list_(pa.float32()))
+    fields = []
+    for f in meta.schema.to_arrow_schema():
+        if f.type == pa.timestamp("ns") and f.name in int64:
+            dtype = T.LongType()
+        elif f.type in verified:
+            dtype = from_arrow_type(f.type, prefer_timestamp_ntz=ntz)
+        else:
+            return None
+        fields.append(T.StructField(f.name, dtype, True))
+    return T.StructType(fields)
 
 
 # DataFrames persist()ed inside query bodies: frames that two or more
